@@ -1,7 +1,15 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table access for the driver-generated star schema.
   *
@@ -106,37 +114,91 @@ object Tables {
     else df
   }
 
-  def footerRowCount(spark: SparkSession, path: String): Long = {
-    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
+  /** The Hadoop listing the footer reads share: `path`'s status and
+    * every visible file under it, recursing into subdirectories
+    * (partitioned datasets nest files under key=value dirs). Entries
+    * Spark's file index skips are skipped at every level: names starting
+    * `_` or `.` (which takes the `_metadata` summaries too) and in-flight
+    * `._COPYING_` files. */
+  private final case class Listing(conf: Configuration, fs: FileSystem,
+      root: FileStatus, files: Array[FileStatus])
+
+  private def listing(spark: SparkSession, path: String): Listing = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    // Recurse into subdirectories (partitioned datasets nest files under
-    // key=value dirs) and key the cache on the newest mtime seen, so a
-    // dataset rewritten at the same path is re-counted instead of served
-    // a stale total. Hidden/_metadata entries are skipped at every level.
     def collect(st: FileStatus): Array[FileStatus] = {
       val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) Array.empty
+      if (n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_"))
+        Array.empty
       else if (st.isDirectory) fs.listStatus(st.getPath).flatMap(collect)
       else Array(st)
     }
     val root = fs.getFileStatus(p)
-    val files = if (root.isDirectory) fs.listStatus(p).flatMap(collect)
-                else Array(root)
-    val stamp = if (files.isEmpty) 0L else files.map(_.getModificationTime).max
-    val version = (stamp, files.length)
+    Listing(conf, fs, root,
+      if (root.isDirectory) fs.listStatus(p).flatMap(collect) else Array(root))
+  }
+
+  private def withFooter[A](conf: Configuration, st: FileStatus)(
+      f: ParquetFileReader => A): A = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try f(r) finally r.close()
+  }
+
+  def footerRowCount(spark: SparkSession, path: String): Long = {
+    // key the cache on the newest mtime seen, so a dataset rewritten at
+    // the same path is re-counted instead of served a stale total
+    val l = listing(spark, path)
+    val stamp =
+      if (l.files.isEmpty) 0L else l.files.map(_.getModificationTime).max
+    val version = (stamp, l.files.length)
     counts.get(path) match {
       case Some((`version`, n)) => n
       case _ =>
-        val n = files.map { st =>
-          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
+        val n = l.files.map(withFooter(l.conf, _)(_.getRecordCount)).sum
         counts.put(path, (version, n))
         n
     }
   }
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Without
+    * schema merging, Spark infers a directory's schema from ONE footer,
+    * the first data file's in path order, but reads it in a one-task job;
+    * for a flat directory this reads that footer on the driver and hands
+    * the schema to the reader, so the scan plans with no job at all.
+    * Everything else takes the plain read, so its errors surface as
+    * before: see [[footerSchema]]. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema Spark's inference would read for a flat parquet
+    * directory: Spark's row-metadata key when the footer has one, else
+    * the parquet schema converted under the session's conf (both are
+    * what `ParquetFileFormat.readSchemaFromFooter` does inside the
+    * inference job). None, for the plain read to handle, when `path` is
+    * a single file, a partitioned, nested or empty directory, or holds a
+    * `_metadata`/`_common_metadata` summary (inference prefers those);
+    * when `spark.sql.parquet.mergeSchema` is on; or when listing or the
+    * footer read fails. */
+  private[graft] def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else try {
+      val l = listing(spark, path)
+      val dir = l.root.getPath
+      val flat = l.root.isDirectory && l.files.nonEmpty &&
+        l.files.forall(_.getPath.getParent == dir) &&
+        !Seq("_metadata", "_common_metadata")
+          .exists(n => l.fs.exists(new Path(dir, n)))
+      if (!flat) None
+      else {
+        val first = l.files.minBy(_.getPath.toString)
+        Some(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(first.getPath, withFooter(l.conf, first)(_.getFooter)),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      }
+    } catch { case NonFatal(_) => None }
 }

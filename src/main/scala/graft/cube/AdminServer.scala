@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 
 import scala.util.control.NonFatal
 
+import graft.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
@@ -29,6 +30,10 @@ import org.apache.spark.sql.types.StructType
   * PARQUET PATHS, not inlined rows — the admin channel carries control
   * messages; data stays on storage the executors read directly
   * (inlining a 100 TB source through an admin socket is the anti-shape).
+  * Every path argument is opened with [[graft.Tables.parquet]], which
+  * takes a flat directory's schema from its first data file's footer on
+  * the driver: a fold request launches no schema-inference job for its
+  * delta or source, only the jobs of the fold itself.
   * `getAggregates` does return rows inline: a serve reads cube-sized
   * data by construction (the MV win), and the admin client is the
   * reference's consumer of exactly that payload — bounded by the
@@ -185,7 +190,7 @@ final class AdminServer(service: CubeService, spark: SparkSession,
         case Some("createCube") =>
           val cfg = need(strField(req, "config"), "config")
           val src = need(strField(req, "sourceParquet"), "sourceParquet")
-          val cube = service.createCube(cfg, spark.read.parquet(src))
+          val cube = service.createCube(cfg, Tables.parquet(spark, src))
           ok(s""""${esc(cube.config.name)}"""")
         case Some("deleteCube") =>
           service.deleteCube(need(strField(req, "name"), "name"))
@@ -198,9 +203,9 @@ final class AdminServer(service: CubeService, spark: SparkSession,
           // latch (the delete-capable targeted recompute needs the
           // current source state) — the wire verb must not silently
           // offer LESS than the in-process one
-          service.updateAggregates(name, spark.read.parquet(delta),
+          service.updateAggregates(name, Tables.parquet(spark, delta),
             source = strField(req, "sourceParquet")
-              .map(spark.read.parquet(_)))
+              .map(Tables.parquet(spark, _)))
           ok("\"updated\"")
         case Some("getAggregates") =>
           val name = need(strField(req, "name"), "name")
@@ -611,7 +616,7 @@ final class AdminServer(service: CubeService, spark: SparkSession,
           val name = need(strField(req, "name"), "name")
           require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
             s"table name '$name' is not a bare identifier")
-          spark.read.parquet(need(strField(req, "parquet"), "parquet"))
+          Tables.parquet(spark, need(strField(req, "parquet"), "parquet"))
             .createOrReplaceTempView(name)
           ok("\"registered\"")
         case Some("advise") =>
@@ -718,8 +723,8 @@ final class AdminServer(service: CubeService, spark: SparkSession,
             rightKey = need(strField(req, "rightKey"), "rightKey"))
           val l = need(strField(req, "leftParquet"), "leftParquet")
           val r = need(strField(req, "rightParquet"), "rightParquet")
-          service.createJoinCube(jc, spark.read.parquet(l),
-            spark.read.parquet(r))
+          service.createJoinCube(jc, Tables.parquet(spark, l),
+            Tables.parquet(spark, r))
           ok(s""""${esc(cfg.name)}"""")
         case Some("deleteJoinCube") =>
           service.deleteJoinCube(need(strField(req, "name"), "name"))
@@ -730,7 +735,7 @@ final class AdminServer(service: CubeService, spark: SparkSession,
           // persisted side schema (limit(0) on the loaded state)
           val cur = service.loadJoinCube(name)
           def side(key: String, tmpl: org.apache.spark.sql.DataFrame) =
-            strField(req, key).map(spark.read.parquet(_))
+            strField(req, key).map(Tables.parquet(spark, _))
               .getOrElse(tmpl.drop("_mult").limit(0)
                 .withColumn("_sign", lit(1L)))
           service.updateJoinAggregates(name,
@@ -796,7 +801,7 @@ final class AdminServer(service: CubeService, spark: SparkSession,
             case "annCreate" =>
               val name = need(strField(req, "name"), "name")
               svc.createIndex(name,
-                spark.read.parquet(
+                Tables.parquet(spark,
                   need(strField(req, "vectorsParquet"), "vectorsParquet")),
                 k = numField(req, "k").map(_.toInt).getOrElse(16),
                 lloydIters =
@@ -805,7 +810,7 @@ final class AdminServer(service: CubeService, spark: SparkSession,
             case "annQuery" =>
               val name = need(strField(req, "name"), "name")
               val df = svc.queryIndex(name,
-                spark.read.parquet(
+                Tables.parquet(spark,
                   need(strField(req, "queriesParquet"), "queriesParquet")),
                 topK = numField(req, "topK").map(_.toInt).getOrElse(5),
                 nprobe = numField(req, "nprobe").map(_.toInt).getOrElse(5))
@@ -814,12 +819,12 @@ final class AdminServer(service: CubeService, spark: SparkSession,
               serveRows(df, Nil, req)
             case "annUpsert" =>
               val name = need(strField(req, "name"), "name")
-              svc.upsertVectors(name, spark.read.parquet(
+              svc.upsertVectors(name, Tables.parquet(spark,
                 need(strField(req, "vectorsParquet"), "vectorsParquet")))
               ok("\"upserted\"")
             case "annDeleteVectors" =>
               val name = need(strField(req, "name"), "name")
-              svc.deleteVectors(name, spark.read.parquet(
+              svc.deleteVectors(name, Tables.parquet(spark,
                 need(strField(req, "idsParquet"), "idsParquet")))
               ok("\"deleted\"")
             case "annListVersions" =>
@@ -831,7 +836,7 @@ final class AdminServer(service: CubeService, spark: SparkSession,
                 .getOrElse(throw new IllegalArgumentException(
                   "missing field 'version'")).toInt
               val df = svc.queryIndexAsOf(name,
-                spark.read.parquet(
+                Tables.parquet(spark,
                   need(strField(req, "queriesParquet"), "queriesParquet")),
                 v,
                 topK = numField(req, "topK").map(_.toInt).getOrElse(5),
@@ -840,7 +845,7 @@ final class AdminServer(service: CubeService, spark: SparkSession,
             case "annTune" =>
               val name = need(strField(req, "name"), "name")
               val (np, recall) = svc.tuneNprobe(name,
-                spark.read.parquet(
+                Tables.parquet(spark,
                   need(strField(req, "sampleParquet"), "sampleParquet")),
                 topK = numField(req, "topK").map(_.toInt).getOrElse(5),
                 targetRecall =

@@ -1,5 +1,6 @@
 package graft.cube
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -861,14 +862,14 @@ object CubeManager {
     val json = java.nio.file.Files.readString(p)
     val hasDeletes = """"hasDeletes":\s*true""".r.findFirstIn(json).isDefined
     val config = configFromJson(json)
-    Cube(config, spark.read.parquet(s"$dir/$name"), hasDeletes,
+    Cube(config, Tables.parquet(spark, s"$dir/$name"), hasDeletes,
       loadDicts(spark, dir, config))
   }
 
   private[cube] def loadDicts(spark: SparkSession, dir: String,
       config: CubeConfig): Map[String, DataFrame] =
     config.dictBitmaps.map(m =>
-      m.id -> spark.read.parquet(s"$dir/${config.name}.dict/${m.id}")).toMap
+      m.id -> Tables.parquet(spark, s"$dir/${config.name}.dict/${m.id}")).toMap
 
   def list(dir: String): Seq[String] = {
     val d = new java.io.File(dir)

@@ -2,6 +2,7 @@ package graft.cube
 
 import scala.collection.concurrent.TrieMap
 
+import graft.Tables
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, Cast, Expression, HllSketchEstimate, IsNotNull, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, ApproximatePercentile, Complete, Count, HllUnionAgg, HyperLogLogPlusPlus, Max, Min, Sum}
@@ -132,7 +133,8 @@ object CubeCatalog {
   /** Hard-link the head's flat parquet files into a fresh snapshot
     * generation (`<head>.snap/<kind>/s<gen>/<name>`) and return its
     * path; None (→ raw-read fallback) for non-directory or partitioned
-    * layouts. Keeps the TWO newest generations per (root, kind) — the
+    * layouts, and on any failure to snapshot, which is reported on
+    * stderr. Keeps the TWO newest generations per (root, kind) — the
     * current consumer's and the previous one's, so in-flight plans
     * survive exactly one superseding refresh (deferred GC). `kind`
     * separates consumers with independent refresh cadences (optimizer
@@ -172,13 +174,19 @@ object CubeCatalog {
         .sortBy(-_._1)
       gens.drop(2).foreach { case (_, f) => rmTree(f) }
       Some(dest)
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch {
+      // the raw head the caller falls back to is the read a concurrent
+      // publish can rename away: say so rather than degrade silently
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[cube] snapshot of $scanPath failed: $e")
+        None
+    }
 
   private def snapshotPlan(cube: Cube, scanPath: String): Option[LogicalPlan] =
     snapshotDir(scanPath, "route").map { d =>
       analysisCount.incrementAndGet() // telemetry counts ACTUAL analyses
       Bridge.analyzed(
-        cube.aggregates.sparkSession.read.parquet(d.toString))
+        Tables.parquet(cube.aggregates.sparkSession, d.toString))
     }
 
   /** Publish-stable read of a flat parquet directory for the SERVICE
@@ -190,8 +198,8 @@ object CubeCatalog {
   private[cube] def stableRead(spark: SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     snapshotDir(dir, "serve") match {
-      case Some(d) => spark.read.parquet(d.toString)
-      case None => spark.read.parquet(dir)
+      case Some(d) => Tables.parquet(spark, d.toString)
+      case None => Tables.parquet(spark, dir)
     }
 
   private def rmTree(f: java.io.File): Unit = {

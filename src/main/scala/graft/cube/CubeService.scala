@@ -2,6 +2,7 @@ package graft.cube
 
 import scala.collection.concurrent.TrieMap
 
+import graft.Tables
 import graft.streaming.StreamingCube
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
@@ -174,7 +175,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
     recoverBaseSwap(name)
     if (baseDir.toFile.exists()) {
       val baseCube =
-        Cube(cube.config, spark.read.parquet(baseDir.toString),
+        Cube(cube.config, Tables.parquet(spark, baseDir.toString),
           cube.hasDeletes, cube.dicts)
       val newBase = CubeManager.applyDeltas(baseCube, signed, source).aggregates
       val staging = java.nio.file.Paths.get(storageDir, s"$name.base.staging")
@@ -398,7 +399,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       // boards) on an archived version resolve every id it holds. Without
       // this, getTopSpendersAsOf on a dictBitmaps-keyed cube threw
       // NoSuchElementException at cube.dicts(d.id).
-      Cube(config, spark.read.parquet(vdir.toString), hasDeletes,
+      Cube(config, Tables.parquet(spark, vdir.toString), hasDeletes,
         CubeManager.loadDicts(spark, storageDir, config))
     }
   }
@@ -654,7 +655,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
     val baseDir = java.nio.file.Paths.get(storageDir, s"$name.base")
     if (!baseDir.toFile.exists())
       cube.aggregates.write.parquet(baseDir.toString)
-    val base = spark.read.parquet(baseDir.toString)
+    val base = Tables.parquet(spark, baseDir.toString)
     val q = StreamingCube.startPersist(spark, cube.config, deltaDir, schema,
       s"$storageDir/$name.checkpoint",
       batchState => {
@@ -3496,8 +3497,8 @@ final class CubeService(spark: SparkSession, storageDir: String,
     val cube = CubeManager.load(spark, vdir.toString, name)
     JoinCube(JoinCubeConfig(cube.config, key("leftKey"), key("rightKey")),
       cube,
-      spark.read.parquet(vdir.resolve("lstate").toString),
-      spark.read.parquet(vdir.resolve("rstate").toString))
+      Tables.parquet(spark, vdir.resolve("lstate").toString),
+      Tables.parquet(spark, vdir.resolve("rstate").toString))
   }
 
   /** Create + persist a join MV (version 0). Sides should arrive as
@@ -3749,7 +3750,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       }
     val cube = CubeManager.load(spark, vdir.toString, name)
     val states = (0 to edges.size).map(i =>
-      spark.read.parquet(vdir.resolve(s"state$i").toString))
+      Tables.parquet(spark, vdir.resolve(s"state$i").toString))
     ChainCube(ChainCubeConfig(cube.config, edges), cube, states)
   }
 

@@ -3,6 +3,10 @@ package graft.cube
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -163,6 +167,86 @@ class AdminServerSpec extends AnyFunSuite {
       assert(refused.startsWith("""{"ok":false,"error":""")
         && refused.contains("insert-only"), refused)
     } finally { cli.close(); server.stop() }
+  }
+
+  test("a wire fold launches no schema-inference job") {
+    import spark.implicits._
+    val svc = new CubeService(spark, tmp("graft_admin_jobs"))
+    val server = new AdminServer(svc, spark)
+    val cli = new Client(server.start())
+    // each started job's stage names, first stage first
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.add(e.stageInfos.sortBy(_.stageId).map(_.name)); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a change stream's shape: a base slice over six days, then one
+      // batch of inserts on the newest day plus deletes and updates of
+      // rows from the day before
+      val day = 86400000L
+      val t0 = 1700006400000L
+      val base = (0 until 600).map(i => (i.toLong,
+        new java.sql.Timestamp(t0 + (i / 100) * day + (i % 100) * 60000L),
+        (i * 7 % 50).toLong, Seq("click", "view", "buy")(i % 3),
+        (i % 17).toDouble))
+      val ins = (600 until 640).map(i => (i.toLong,
+        new java.sql.Timestamp(t0 + 5 * day + (i % 100) * 60000L + 1000L),
+        (i * 7 % 50).toLong, Seq("click", "view", "buy")(i % 3), 2.0))
+      val gone = base.filter(r => r._1 >= 400 && r._1 < 500 && r._1 % 9 == 0)
+      val moved = base.filter(r => r._1 >= 400 && r._1 < 500 && r._1 % 9 == 4)
+      val updated = moved.map(r => r.copy(_5 = r._5 + 1.0))
+      val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
+      def write(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)],
+          name: String): String = {
+        val d = tmp("graft_admin_jobs_in") + s"/$name"
+        rows.toDF(cols: _*).coalesce(1).write.parquet(d); d
+      }
+      val basePath = write(base, "base")
+      val delta = tmp("graft_admin_jobs_in") + "/delta"
+      (ins.map((_, 1)) ++ gone.map((_, -1)) ++ moved.map((_, -1)) ++
+        updated.map((_, 1)))
+        .map { case ((a, b, c, d, e), sg) => (a, b, c, d, e, sg) }
+        .toDF(cols :+ "_sign": _*).coalesce(1).write.parquet(delta)
+      val source = write(
+        base.filterNot(r => gone.contains(r) || moved.contains(r)) ++
+          updated ++ ins, "source")
+      val configs = Seq(
+        "mA" -> """{"name":"mA","source":"events","dims":[{"kind":"field","id":"etype","path":"event_type"},{"kind":"time","id":"d","path":"ts","granularity":"day"}],"measures":[{"id":"v","path":"value"}]}""",
+        "mB" -> """{"name":"mB","source":"events","dims":[{"kind":"time","id":"d","path":"ts","granularity":"day"}],"bitmaps":[{"id":"u","path":"user_id"}],"measures":[{"id":"v","path":"value"}]}""")
+      configs.foreach { case (n, c) =>
+        assert(cli.rpc(s"""{"verb":"createCube","config":"${escaped(c)
+          }","sourceParquet":"${escaped(basePath)}"}""")
+          == s"""{"ok":true,"result":"$n"}""")
+      }
+      def foldJobs(name: String, src: String): Seq[Seq[String]] = {
+        TestBus.drain(spark.sparkContext)
+        jobs.clear()
+        assert(cli.rpc(s"""{"verb":"updateAggregates","name":"$name",""" +
+          s""""deltaParquet":"${escaped(delta)}"$src}""")
+          == """{"ok":true,"result":"updated"}""")
+        TestBus.drain(spark.sparkContext)
+        jobs.asScala.toSeq
+      }
+      val plain = foldJobs("mA", "")
+      val bitmap = foldJobs("mB",
+        s""","sourceParquet":"${escaped(source)}"""")
+      // a schema-inference job is one task reading one footer; its
+      // first stage is named after the `parquet` read that launched it
+      Seq(plain, bitmap).foreach { js =>
+        assert(!js.exists(_.head.startsWith("parquet at")),
+          s"schema-inference job in a fold: ${js.mkString("; ")}")
+      }
+      // the plain fold is its staging write's three jobs; the bitmap
+      // fold adds the delete probe and the touched-cell recompute
+      assert(plain.size == 3, plain.mkString("; "))
+      assert(bitmap.size == 8, bitmap.mkString("; "))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      cli.close(); server.stop()
+    }
   }
 
   test("join-MV wire verbs: create, fold, serve, time travel") {

@@ -44,6 +44,33 @@ class CubeServiceSpec extends AnyFunSuite {
     assert(agg == Map("click" -> 7.0))
   }
 
+  test("a blocked snapshot root is reported and serves read the head") {
+    val store = Files.createTempDirectory("graft_svc_snapblock").toString
+    // a plain FILE where the serve snapshots' root directory must go
+    Files.writeString(java.nio.file.Paths.get(store, "blk.snap"), "")
+    val svc = new CubeService(spark, store)
+    val err = new java.io.ByteArrayOutputStream
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    def totals(): Map[String, (Double, Long)] =
+      svc.getAggregates("blk", Seq("etype"), sumOf = Seq("v"))
+        .collect().map(r => (r.getString(0),
+          (r.getDouble(1), r.getLong(2)))).toMap
+    try {
+      svc.createCube(cfg.copy(name = "blk"),
+        df(Seq(("click", t0, 1.0), ("view", t0, 2.0))))
+      assert(totals() == Map("click" -> (1.0, 1L), "view" -> (2.0, 1L)))
+      svc.updateAggregates("blk",
+        df(Seq(("click", t0, 4.0))).withColumn("_sign", lit(1)))
+      assert(totals() == Map("click" -> (5.0, 2L), "view" -> (2.0, 1L)))
+    } finally System.setErr(saved)
+    val reports = err.toString("UTF-8").linesIterator
+      .filter(_.startsWith(s"[cube] snapshot of $store/blk failed: "))
+      .toSeq
+    // one per publish-stable load: the create and the fold
+    assert(reports.size == 2, err.toString("UTF-8"))
+  }
+
   test("verb-for-verb lifecycle") {
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc").toString)

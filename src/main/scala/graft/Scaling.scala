@@ -336,7 +336,7 @@ object Scaling {
         .withColumn("_sign", lit(-1L)).cache()
       chainDelta.count()
       record("chain_fold", k, best {
-        cube.ChainCubeManager.applySideDeltas(chainCk, chainDelta, 1)
+        cube.ChainCubeManager.applyDeltas(chainCk, Seq(1 -> chainDelta))
           .cube.aggregates.count()
       })
       chainDelta.unpersist()

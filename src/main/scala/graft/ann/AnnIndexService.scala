@@ -106,7 +106,7 @@ class AnnIndexService(spark: SparkSession, storageDir: String,
     * present it overrides the per-field files (publish writes into a
     * fresh version dir made visible only by the MANIFEST swap, so its
     * per-field writes need no in-place atomicity — the
-    * CubeService.jmvResetStreamMeta discipline). */
+    * join-MV store's resetStreamMeta discipline in CubeService). */
   private def guardOverride(name: String, v: Int): Option[(Long, Option[String])] = {
     val f = vdir(name, v).resolve("replay_guard")
     if (!f.toFile.exists()) None

@@ -739,8 +739,8 @@ final class AdminServer(service: CubeService, spark: SparkSession,
               .getOrElse(tmpl.drop("_mult").limit(0)
                 .withColumn("_sign", lit(1L)))
           service.updateJoinAggregates(name,
-            side("leftDeltaParquet", cur.left),
-            side("rightDeltaParquet", cur.right))
+            side("leftDeltaParquet", cur.states(0)),
+            side("rightDeltaParquet", cur.states(1)))
           ok("\"updated\"")
         case Some("getJoinAggregates") =>
           val name = need(strField(req, "name"), "name")

@@ -517,7 +517,7 @@ object CubeQueries {
     })
 
   // --------------------------------------------------------------- q152
-  /** Incrementally maintained JOIN MV ([[JoinCubeManager]], the
+  /** Incrementally maintained JOIN MV ([[ChainCubeManager]], the
     * delta-join rule Δ(L⋈R) = ΔL⋈R ∪ L⋈ΔR ∪ ΔL⋈ΔR): revenue by order
     * priority over orders ⋈ lineitem, created from a base slice
     * (orders with o_orderkey%5≠4, lines with l_linenumber%3≠2), then
@@ -3561,7 +3561,7 @@ object CubeQueries {
 
   /** Graded: EXACT COUNT(DISTINCT) over a STRING key in a JOIN MV —
     * the dictionary-bitmap family composed with the delta-join rule:
-    * `JoinCubeManager.applyDeltas` extends the (key → dense id)
+    * `ChainCubeManager.applyDeltas` extends the (key → dense id)
     * dictionary with each batch's unseen keys and every jmv publish
     * persists the extended map inside the version triple, so distinct
     * supplier counts per priority over `orders ⋈ lineitem` are EXACT

@@ -42,12 +42,14 @@ import org.apache.spark.sql.types.DecimalType
   *   `spark.graft.cube.routingCostFloorBytes`, default 1 MiB) always
   *   route — at that size re-aggregation cost is noise either way.
   *
-  * JOIN MVs ([[JoinCubeManager]]) route the same way: an Aggregate over
-  * the registered INNER equi-join of the two registered relations — in
-  * either order, with dim-only side filters allowed under the same
-  * conjunct rule (σ over one side commutes with an inner join) — is
-  * served from the join cube. Dim-subset rollups and global rollups
-  * route through the shared partial-binding machinery.
+  * JOIN MVs ([[ChainCubeManager]], two or more relations) route the
+  * same way: an Aggregate — plain, or a ROLLUP/CUBE/GROUPING SETS
+  * through its Expand — over the registered INNER equi-join tree of
+  * the registered relations, in any order or parenthesization, with
+  * dim-only relation filters allowed under the same conjunct rule (σ
+  * over one input commutes with an inner join), is served from the
+  * join cube. Dim-subset rollups and global rollups route through the
+  * shared partial-binding machinery.
   *
   * One opt-in relaxation, covering the two estimator-changing leaves:
   * `approx_count_distinct(x)` routes to estimate(union(HLL partials))
@@ -207,49 +209,35 @@ object CubeCatalog {
     f.delete(); ()
   }
 
-  /** A routable JOIN MV ([[JoinCubeManager]]): the materialized cube
-    * over L ⋈ R (wrapped in a [[Registration]] so its analysis is
-    * memoized the same way), both sides' normalized source paths, and
-    * the equi-join key column names. An Aggregate over exactly that
-    * inner equi-join of those two relations routes to the cube. */
-  final case class JoinRegistration(reg: Registration, leftPath: String,
-      rightPath: String, leftKey: String, rightKey: String)
-
-  /** A routable CHAINED (3+ relation) join MV ([[ChainCubeManager]]):
-    * the cube over R₀ ⋈ … ⋈ R_{n−1}, the relations' normalized source
-    * paths in chain order, and the edge key column names. An Aggregate
-    * over exactly that inner equi-join TREE (any associativity — the
-    * matcher flattens) routes to the cube. Duplicate relation paths
-    * refuse at registration: with the same table on two chain slots,
-    * name-based edge matching could not tell the slots apart. */
+  /** A routable JOIN MV ([[ChainCubeManager]], n ≥ 2 relations): the
+    * materialized cube over R₀ ⋈ … ⋈ R_{n−1} (wrapped in a
+    * [[Registration]] so its analysis is memoized the same way), the
+    * relations' normalized source paths in chain order, and the edge
+    * key column names. An Aggregate over exactly that inner equi-join
+    * TREE (any associativity or side order — the matcher flattens)
+    * routes to the cube. Duplicate relation paths refuse at
+    * registration: with the same table on two chain slots, name-based
+    * edge matching could not tell the slots apart. */
   final case class ChainRegistration(reg: Registration,
       paths: Seq[String], edges: Seq[(String, String)])
 
   private val cubes = TrieMap.empty[String, Registration]
-  private val joinCubes = TrieMap.empty[String, JoinRegistration]
   private val chainCubes = TrieMap.empty[String, ChainRegistration]
 
   def register(name: String, cube: Cube, sourcePath: String,
       approxDistinct: Boolean = false): Unit =
     cubes.put(name, Registration(cube, normalize(sourcePath), approxDistinct))
-  def registerJoin(name: String, jc: JoinCube, leftPath: String,
-      rightPath: String, approxDistinct: Boolean = false): Unit = {
-    // same refusal as JoinCubeManager.create: the rewrite binds columns
-    // by first name match on the join output, so overlapping side names
-    // would silently bind to the wrong side (a JoinCube hand-built
-    // around the manager could otherwise smuggle them in)
-    JoinCubeManager.validateSides(jc.config,
-      jc.left.columns.filterNot(_ == "_mult").toSeq,
-      jc.right.columns.filterNot(_ == "_mult").toSeq)
-    joinCubes.put(name, JoinRegistration(
-      Registration(jc.cube, "", approxDistinct, stableScan = true),
-      normalize(leftPath), normalize(rightPath),
-      jc.config.leftKey, jc.config.rightKey))
-    ()
-  }
+  /** A join MV registers as the two-relation chain it is. */
+  def registerJoin(name: String, cc: ChainCube, leftPath: String,
+      rightPath: String, approxDistinct: Boolean = false): Unit =
+    registerChain(name, cc, Seq(leftPath, rightPath), approxDistinct)
 
   def registerChain(name: String, cc: ChainCube,
       paths: Seq[String], approxDistinct: Boolean = false): Unit = {
+    // same refusal as ChainCubeManager.create: the rewrite binds columns
+    // by first name match on the join output, so overlapping relation
+    // names would silently bind to the wrong relation (a ChainCube
+    // hand-built around the manager could otherwise smuggle them in)
     ChainCubeManager.validateRelations(cc.config,
       cc.states.map(_.columns.filterNot(_ == "_mult").toSeq))
     require(paths.size == cc.states.size,
@@ -265,12 +253,18 @@ object CubeCatalog {
     ()
   }
 
-  /** Chain-MV twin of [[refreshJoin]]: routed plans must follow a
-    * versioned publish to the new version dir. */
+  /** Join-MV twin of [[refresh]], invoked by the versioned-manifest
+    * publish: routed plans must follow the manifest to the new version
+    * dir (the one-version cleanup deferral keeps plans built BEFORE the
+    * publish readable too). */
   private[cube] def refreshChain(cc: ChainCube): Unit =
     chainCubes.foreach { case (k, cr) =>
-      if (cr.reg.cube.config.name == cc.cube.config.name)
+      // the edges too: a join MV and a chain MV may share a name
+      if (cr.reg.cube.config.name == cc.cube.config.name &&
+          cr.edges == cc.config.edges)
         chainCubes.put(k, ChainRegistration(
+          // carry the serve opt-in across publishes — dropping it here
+          // would silently de-route sketch serves after the first fold
           Registration(cc.cube, "", cr.reg.approxDistinct,
             stableScan = true),
           cr.paths, cr.edges))
@@ -287,29 +281,14 @@ object CubeCatalog {
         cubes.put(k, Registration(cube, reg.sourcePath, reg.approxDistinct))
     }
 
-  /** Join-MV twin of [[refresh]], invoked by the versioned-manifest
-    * publish: routed plans must follow the manifest to the new version
-    * dir (the one-version cleanup deferral keeps plans built BEFORE the
-    * publish readable too). */
-  private[cube] def refreshJoin(jc: JoinCube): Unit =
-    joinCubes.foreach { case (k, jr) =>
-      if (jr.reg.cube.config.name == jc.cube.config.name)
-        joinCubes.put(k, JoinRegistration(
-          // carry the serve opt-in across publishes — dropping it here
-          // would silently de-route sketch serves after the first fold
-          Registration(jc.cube, "", jr.reg.approxDistinct, stableScan = true),
-          jr.leftPath, jr.rightPath, jr.leftKey, jr.rightKey))
-    }
-
   def unregister(name: String): Unit = {
-    cubes.remove(name); joinCubes.remove(name); chainCubes.remove(name)
+    cubes.remove(name); chainCubes.remove(name)
     ()
   }
   def clear(): Unit = {
-    cubes.clear(); joinCubes.clear(); chainCubes.clear()
+    cubes.clear(); chainCubes.clear()
   }
   def registered: Map[String, Registration] = cubes.toMap
-  def joinRegistered: Map[String, JoinRegistration] = joinCubes.toMap
   def chainRegistered: Map[String, ChainRegistration] = chainCubes.toMap
 
   def install(spark: SparkSession): Unit = {
@@ -429,31 +408,17 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
           else candidates.minBy(_._2)._1
         case None =>
           // JOIN-MV routing: an Aggregate over the registered inner
-          // equi-join routes to the join cube. The join's output is the
-          // concatenation of both sides, so the same dim/measure binding
-          // machinery (resolvePath against `base`) applies unchanged;
-          // exactness requires the join to be EXACTLY the registered
-          // one — inner, single equality, on the registered key columns
-          // of the registered relations, in either order. A join side,
-          // as the optimizer leaves it, is the relation under
-          // attribute-only Projects, SubqueryAliases, and Filters. An
-          // inferred `isnotnull(<join key>)` conjunct is implied by the
-          // inner equi-join itself (null keys never match) and is
-          // dropped; every OTHER conjunct is collected and must prove
-          // dim-determined in tryRewrite (σ over one side commutes with
-          // an inner join, so filtering the MV's dimension attribute is
-          // exact). A computed projection refuses — the side is then
-          // not the registered relation.
+          // equi-join tree routes to the join cube. The join's output is
+          // the concatenation of every relation, so the same dim/measure
+          // binding machinery (resolvePath against `base`) applies
+          // unchanged; exactness requires the tree to be EXACTLY the
+          // registered one ([[matchingChainRegs]]). Every collected
+          // relation-filter conjunct must prove dim-determined in
+          // tryRewrite (σ over one input commutes with an inner join, so
+          // filtering the MV's dimension attribute is exact).
           base match {
             case j: Join =>
-              val candidates = matchingJoinRegs(j).flatMap {
-                case (jr, sidePreds) =>
-                  tryRewrite(agg, jr.reg, j, subst, pred ++ sidePreds)
-              } ++ matchingChainRegs(j).flatMap {
-                // CHAIN MVs: an Aggregate over the registered 3+-table
-                // inner equi-join tree binds against the flattened
-                // join's output exactly like the binary case (the
-                // joined schema is a by-name concatenation either way)
+              val candidates = matchingChainRegs(j).flatMap {
                 case (cr, sidePreds) =>
                   tryRewrite(agg, cr.reg, j, subst, pred ++ sidePreds)
               }
@@ -487,79 +452,22 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
   }
 
   /** Join-MV matching, shared by the plain-aggregate and grouping-set
-    * paths: which registered join MVs cover this Join node, with the
-    * side-filter conjuncts each match collects. A side, as the
-    * optimizer leaves it, is the registered relation under
-    * attribute-only Projects, SubqueryAliases, and Filters; an
-    * inferred `isnotnull(<join key>)` is implied by the inner
-    * equi-join itself and dropped; exactness requires the join to be
-    * EXACTLY the registered one — inner, single equality, on the
-    * registered key columns of the registered relations, in either
-    * order. */
-  private def matchingJoinRegs(j: Join)
-      : Iterable[(CubeCatalog.JoinRegistration, Seq[Expression])] = {
-    def sideMatches(side: LogicalPlan, keyName: String,
-        wantPath: String): Option[(Attribute, Seq[Expression])] =
-      resolvePath(side, keyName) match {
-        case Some(k: Attribute) =>
-          var collected = Vector.empty[Expression]
-          def strip(p: LogicalPlan): LogicalPlan = p match {
-            case pr: Project
-                if pr.projectList
-                  .forall(_.isInstanceOf[AttributeReference]) =>
-              strip(pr.child)
-            case SubqueryAlias(_, c) => strip(c)
-            case f: Filter =>
-              collected ++= conjuncts(f.condition).filterNot {
-                case IsNotNull(a: AttributeReference) =>
-                  a.exprId == k.exprId
-                case _ => false
-              }
-              strip(f.child)
-            case other => other
-          }
-          val stripped = strip(side)
-          if (CubeCatalog.sourcePathOf(stripped).contains(wantPath))
-            Some((k, collected))
-          else None
-        case _ => None
-      }
-    j match {
-      case Join(l, r, org.apache.spark.sql.catalyst.plans.Inner,
-          Some(cond), _) =>
-        CubeCatalog.joinRegistered.values.flatMap { jr =>
-          (sideMatches(l, jr.leftKey, jr.leftPath),
-              sideMatches(r, jr.rightKey, jr.rightPath)) match {
-            case (Some((lk, lPred)), Some((rk, rPred))) =>
-              val eq = org.apache.spark.sql.catalyst.expressions
-                .EqualTo(lk, rk)
-              val eqFlip = org.apache.spark.sql.catalyst.expressions
-                .EqualTo(rk, lk)
-              if (cond.canonicalized == eq.canonicalized ||
-                  cond.canonicalized == eqFlip.canonicalized)
-                Some((jr, lPred ++ rPred))
-              else None
-            case _ => None
-          }
-        }
-      case _ => Nil
-    }
-  }
-
-  /** Chain-MV matching: which registered CHAIN MVs cover this join
-    * TREE. The tree flattens — inner equi-joins are associative and
-    * commutative, so any parenthesization of the same relations under
-    * the same single-equality conditions computes the same multiset —
-    * and matches a registration when the relation path MULTISET and
-    * the unordered edge-name-pair multiset both coincide (column names
-    * are pairwise disjoint across a chain's relations, so name pairs
+    * paths: which registered join MVs cover this join TREE, with the
+    * relation-filter conjuncts each match collects. The tree flattens —
+    * inner equi-joins are associative and commutative, so any
+    * parenthesization or side order of the same relations under the
+    * same single-equality conditions computes the same multiset — and
+    * matches a registration when the relation path MULTISET and the
+    * unordered edge-name-pair multiset both coincide (column names are
+    * pairwise disjoint across a join MV's relations, so name pairs
     * identify edges regardless of orientation or order). Each join
-    * node must be Inner with exactly one equality conjunct; each leaf
-    * is a registered relation under attribute-only Projects,
-    * SubqueryAliases and Filters (conjuncts collected as side
-    * predicates, inferred `isnotnull(<edge key>)`s dropped — implied
-    * by the inner equi-joins themselves). Anything else — an outer
-    * join, a theta conjunct, a computed projection — fails the
+    * node must be Inner with exactly one equality conjunct, plus at
+    * most `isnotnull` of its own two keys; each leaf is a registered
+    * relation under attribute-only Projects, SubqueryAliases and
+    * Filters (conjuncts collected as relation predicates, inferred
+    * `isnotnull(<edge key>)`s dropped — implied by the inner
+    * equi-joins themselves, null keys never match). Anything else — an
+    * outer join, a theta conjunct, a computed projection — fails the
     * flatten and stays raw. */
   private def matchingChainRegs(j: Join)
       : Iterable[(CubeCatalog.ChainRegistration, Seq[Expression])] = {
@@ -579,10 +487,16 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
       s match {
         case Join(l, r, org.apache.spark.sql.catalyst.plans.Inner,
             Some(cond), _) =>
-          val eq = conjuncts(cond)
-            .filterNot(_.isInstanceOf[IsNotNull]) match {
+          val (notNulls, rest) =
+            conjuncts(cond).partition(_.isInstanceOf[IsNotNull])
+          val eq = rest match {
             case Seq(org.apache.spark.sql.catalyst.expressions.EqualTo(
-                a: AttributeReference, b: AttributeReference)) =>
+                a: AttributeReference, b: AttributeReference))
+                if notNulls.forall {
+                  case IsNotNull(x: AttributeReference) =>
+                    x.exprId == a.exprId || x.exprId == b.exprId
+                  case _ => false
+                } =>
               Some(Set(a.name, b.name))
             case _ => None
           }
@@ -598,7 +512,7 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
       }
     }
     flat(j) match {
-      case Some((paths, edges, preds)) if paths.size >= 3 =>
+      case Some((paths, edges, preds)) if paths.size >= 2 =>
         CubeCatalog.chainRegistered.values.flatMap { cr =>
           val regEdges = cr.edges.map { case (a, b) => Set(a, b) }
           val same = paths.sorted == cr.paths.sorted &&
@@ -618,6 +532,29 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
         }
       case _ => Nil
     }
+  }
+
+  /** The registrations a routed family's needs can be served from —
+    * one lookup for every family matcher. A need over one relation (or
+    * over a chain, whose path is then the order-canonical
+    * [[CubeAdvisor.chainKey]]) takes the single-table cubes on that
+    * path and the join MVs whose key it is; a need over a binary inner
+    * equi-join takes the two-relation join MVs of exactly that join,
+    * in either side order. */
+  private def familyRegs(path: String,
+      join: Option[(String, String, String, String)])
+      : Seq[CubeCatalog.Registration] = join match {
+    case None =>
+      CubeCatalog.registered.values.filter(_.sourcePath == path).toSeq ++
+        CubeCatalog.chainRegistered.values.collect {
+          case cr if CubeAdvisor.chainKey(cr.paths, cr.edges) == path =>
+            cr.reg
+        }
+    case Some((lp, rp, lk, rk)) =>
+      CubeCatalog.chainRegistered.values.collect {
+        case cr if (cr.paths, cr.edges) == (Seq(lp, rp), Seq(lk -> rk)) ||
+            (cr.paths, cr.edges) == (Seq(rp, lp), Seq(rk -> lk)) => cr.reg
+      }.toSeq
   }
 
   /** The agg-shape-independent half of a routing attempt: binds one
@@ -1018,31 +955,8 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     // registered join MV the same way (its cube is a Registration with
     // the same partial columns) — the join must be exactly the
     // registered one, in either side order
-    val candidates: Seq[(LogicalPlan, BigInt)] = needs.join match {
-      case None =>
-        // chain-sourced curves: needs.path is the canonical chain key
-        // (see cohortCandidates) — the trailing-window serve merges a
-        // CHAIN MV's daily partials exactly as a single-table cube's
-        CubeCatalog.registered.values.toSeq
-          .filter(_.sourcePath == needs.path)
-          .flatMap(reg =>
-            buildRollingServe(agg, needs, reg).map((_, reg.cubeSize))) ++
-        CubeCatalog.chainRegistered.values.toSeq
-          .filter(cr =>
-            CubeAdvisor.chainKey(cr.paths, cr.edges) == needs.path)
-          .flatMap(cr =>
-            buildRollingServe(agg, needs, cr.reg)
-              .map((_, cr.reg.cubeSize)))
-      case Some((lp, rp, lk, rk)) =>
-        CubeCatalog.joinRegistered.values.toSeq
-          .filter(jr =>
-            (jr.leftPath == lp && jr.rightPath == rp &&
-              jr.leftKey == lk && jr.rightKey == rk) ||
-            (jr.leftPath == rp && jr.rightPath == lp &&
-              jr.leftKey == rk && jr.rightKey == lk))
-          .flatMap(jr =>
-            buildRollingServe(agg, needs, jr.reg).map((_, jr.reg.cubeSize)))
-    }
+    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
+      buildRollingServe(agg, needs, reg).map((_, reg.cubeSize)))
     if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
   }
 
@@ -1266,36 +1180,8 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     * exactly the registered one, in either side order). */
   private def cohortCandidates(agg: Aggregate,
       needs: CubeAdvisor.RetentionNeeds): Seq[(LogicalPlan, BigInt)] =
-    needs.join match {
-      case None =>
-        // a chain-sourced cohort need carries the order-canonical
-        // chain key as its path (CubeAdvisor.cohortSourceOf) — no
-        // single-table registration can collide with it (the key
-        // embeds "||"), so both lookups can safely run side by side:
-        // the cohort walks serve from a CHAIN MV's day-dimmed bitmap
-        // partials exactly as from a single-table cube (the chain
-        // fold maintains the same partial families)
-        CubeCatalog.registered.values.toSeq
-          .filter(_.sourcePath == needs.path)
-          .flatMap(reg =>
-            buildRetentionServe(agg, needs, reg).map((_, reg.cubeSize))) ++
-        CubeCatalog.chainRegistered.values.toSeq
-          .filter(cr =>
-            CubeAdvisor.chainKey(cr.paths, cr.edges) == needs.path)
-          .flatMap(cr =>
-            buildRetentionServe(agg, needs, cr.reg)
-              .map((_, cr.reg.cubeSize)))
-      case Some((lp, rp, lk, rk)) =>
-        CubeCatalog.joinRegistered.values.toSeq
-          .filter(jr =>
-            (jr.leftPath == lp && jr.rightPath == rp &&
-              jr.leftKey == lk && jr.rightKey == rk) ||
-            (jr.leftPath == rp && jr.rightPath == lp &&
-              jr.leftKey == rk && jr.rightKey == lk))
-          .flatMap(jr =>
-            buildRetentionServe(agg, needs, jr.reg)
-              .map((_, jr.reg.cubeSize)))
-    }
+    familyRegs(needs.path, needs.join).flatMap(reg =>
+      buildRetentionServe(agg, needs, reg).map((_, reg.cubeSize)))
 
   /** CUMULATIVE-distinct routing — the raw "lifetime uniques by day"
     * plan (distinct pairs ⋈ observed days on `d ≤ day`, recognized by
@@ -1601,23 +1487,8 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     * the per-id routes — a delete-latched cube still serves. */
   private def tryRewriteCohortValue(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeCohortValue(agg).getOrElse(return None)
-    val candidates = needs.join match {
-      case None =>
-        CubeCatalog.registered.values.toSeq
-          .filter(_.sourcePath == needs.path)
-          .flatMap(reg =>
-            buildCohortValueServe(agg, needs, reg).map((_, reg.cubeSize)))
-      case Some((lp, rp, lk, rk)) =>
-        CubeCatalog.joinRegistered.values.toSeq
-          .filter(jr =>
-            (jr.leftPath == lp && jr.rightPath == rp &&
-              jr.leftKey == lk && jr.rightKey == rk) ||
-            (jr.leftPath == rp && jr.rightPath == lp &&
-              jr.leftKey == rk && jr.rightKey == lk))
-          .flatMap(jr =>
-            buildCohortValueServe(agg, needs, jr.reg)
-              .map((_, jr.reg.cubeSize)))
-    }
+    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
+      buildCohortValueServe(agg, needs, reg).map((_, reg.cubeSize)))
     if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
   }
 
@@ -1774,23 +1645,8 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     * deletes refuse — the [[buildRetentionServe]] convention. */
   private def tryRewriteCohortMatrix(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeCohortMatrix(agg).getOrElse(return None)
-    val candidates = needs.join match {
-      case None =>
-        CubeCatalog.registered.values.toSeq
-          .filter(_.sourcePath == needs.path)
-          .flatMap(reg =>
-            buildCohortMatrixServe(agg, needs, reg).map((_, reg.cubeSize)))
-      case Some((lp, rp, lk, rk)) =>
-        CubeCatalog.joinRegistered.values.toSeq
-          .filter(jr =>
-            (jr.leftPath == lp && jr.rightPath == rp &&
-              jr.leftKey == lk && jr.rightKey == rk) ||
-            (jr.leftPath == rp && jr.rightPath == lp &&
-              jr.leftKey == rk && jr.rightKey == lk))
-          .flatMap(jr =>
-            buildCohortMatrixServe(agg, needs, jr.reg)
-              .map((_, jr.reg.cubeSize)))
-    }
+    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
+      buildCohortMatrixServe(agg, needs, reg).map((_, reg.cubeSize)))
     if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
   }
 
@@ -1928,23 +1784,8 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     * the board, matching a recompute). */
   private def tryRewriteTopSpenders(f: Filter): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeTopSpenders(f).getOrElse(return None)
-    val candidates = needs.join match {
-      case None =>
-        CubeCatalog.registered.values.toSeq
-          .filter(_.sourcePath == needs.path)
-          .flatMap(reg =>
-            buildTopSpendersServe(f, needs, reg).map((_, reg.cubeSize)))
-      case Some((lp, rp, lk, rk)) =>
-        CubeCatalog.joinRegistered.values.toSeq
-          .filter(jr =>
-            (jr.leftPath == lp && jr.rightPath == rp &&
-              jr.leftKey == lk && jr.rightKey == rk) ||
-            (jr.leftPath == rp && jr.rightPath == lp &&
-              jr.leftKey == rk && jr.rightKey == lk))
-          .flatMap(jr =>
-            buildTopSpendersServe(f, needs, jr.reg)
-              .map((_, jr.reg.cubeSize)))
-    }
+    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
+      buildTopSpendersServe(f, needs, reg).map((_, reg.cubeSize)))
     if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
   }
 
@@ -2098,23 +1939,8 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     * the routed serve reads |periods| one-row cube-derived maps. */
   private def tryRewriteValueBridge(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeValueBridge(agg).getOrElse(return None)
-    val candidates = needs.join match {
-      case None =>
-        CubeCatalog.registered.values.toSeq
-          .filter(_.sourcePath == needs.path)
-          .flatMap(reg =>
-            buildValueBridgeServe(agg, needs, reg).map((_, reg.cubeSize)))
-      case Some((lp, rp, lk, rk)) =>
-        CubeCatalog.joinRegistered.values.toSeq
-          .filter(jr =>
-            (jr.leftPath == lp && jr.rightPath == rp &&
-              jr.leftKey == lk && jr.rightKey == rk) ||
-            (jr.leftPath == rp && jr.rightPath == lp &&
-              jr.leftKey == rk && jr.rightKey == lk))
-          .flatMap(jr =>
-            buildValueBridgeServe(agg, needs, jr.reg)
-              .map((_, jr.reg.cubeSize)))
-    }
+    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
+      buildValueBridgeServe(agg, needs, reg).map((_, reg.cubeSize)))
     if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
   }
 
@@ -2364,23 +2190,8 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     if (needs.outs.isEmpty) return None
     // a chain over an INNER EQUI-JOIN routes to a registered join MV,
     // either side order — the q261 retention-family dispatch
-    val candidates: Seq[(LogicalPlan, BigInt)] = needs.join match {
-      case None =>
-        CubeCatalog.registered.values.toSeq
-          .filter(_.sourcePath == needs.path)
-          .flatMap(reg =>
-            buildFunnelServe(agg, needs, reg).map((_, reg.cubeSize)))
-      case Some((lp, rp, lk, rk)) =>
-        CubeCatalog.joinRegistered.values.toSeq
-          .filter(jr =>
-            (jr.leftPath == lp && jr.rightPath == rp &&
-              jr.leftKey == lk && jr.rightKey == rk) ||
-            (jr.leftPath == rp && jr.rightPath == lp &&
-              jr.leftKey == rk && jr.rightKey == lk))
-          .flatMap(jr =>
-            buildFunnelServe(agg, needs, jr.reg)
-              .map((_, jr.reg.cubeSize)))
-    }
+    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
+      buildFunnelServe(agg, needs, reg).map((_, reg.cubeSize)))
     if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
   }
 
@@ -2518,24 +2329,8 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     * partials are insert-only). */
   private def tryRewriteTimeToConvert(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeTimeToConvert(agg).getOrElse(return None)
-    val candidates: Seq[(LogicalPlan, BigInt)] = needs.join match {
-      case None =>
-        CubeCatalog.registered.values.toSeq
-          .filter(_.sourcePath == needs.path)
-          .flatMap(reg =>
-            buildTimeToConvertServe(agg, needs, reg)
-              .map((_, reg.cubeSize)))
-      case Some((lp, rp, lk, rk)) =>
-        CubeCatalog.joinRegistered.values.toSeq
-          .filter(jr =>
-            (jr.leftPath == lp && jr.rightPath == rp &&
-              jr.leftKey == lk && jr.rightKey == rk) ||
-            (jr.leftPath == rp && jr.rightPath == lp &&
-              jr.leftKey == rk && jr.rightKey == lk))
-          .flatMap(jr =>
-            buildTimeToConvertServe(agg, needs, jr.reg)
-              .map((_, jr.reg.cubeSize)))
-    }
+    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
+      buildTimeToConvertServe(agg, needs, reg).map((_, reg.cubeSize)))
     if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
   }
 
@@ -2737,17 +2532,17 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
       case a: AttributeReference if env.contains(a.exprId) => env(a.exprId)
     }
     // candidate registrations: single-table regs on the base's path, or
-    // join regs covering a base Join (the same matching the plain path
-    // uses — rollup-over-join routes to the join MV's cells exactly
-    // like rollup-over-table routes to the cube's)
+    // join MVs covering a base Join tree (the same matching the plain
+    // path uses — rollup-over-join routes to the join MV's cells
+    // exactly like rollup-over-table routes to the cube's)
     val candidates: Iterable[(CubeCatalog.Registration, Seq[Expression])] =
       CubeCatalog.sourcePathOf(base) match {
         case Some(path) =>
           CubeCatalog.registered.values.filter(_.sourcePath == path)
             .map(_ -> Seq.empty[Expression])
         case None => base match {
-          case j: Join => matchingJoinRegs(j).map { case (jr, p) =>
-            (jr.reg, p)
+          case j: Join => matchingChainRegs(j).map { case (cr, p) =>
+            (cr.reg, p)
           }
           case _ => return None
         }

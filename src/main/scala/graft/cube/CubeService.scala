@@ -80,7 +80,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
     * the same one-consistent-version discipline the optimizer
     * registrations carry. Snapshot generations GC deferred-by-one
     * load, so the frame a caller holds survives one superseding
-    * publish (the jmv argument). */
+    * publish (the join-MV argument). */
   private def stable(c: Cube): Cube =
     c.copy(aggregates =
       CubeCatalog.stableRead(spark, s"$storageDir/${c.config.name}"))
@@ -256,7 +256,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
     * one-line `MANIFEST` (the head's version number), and GCs archived
     * versions that fell out of the advertised window — deferred by one
     * version so an as-of read of the window's oldest version survives a
-    * concurrent publish (the jmv deferred-GC argument). The head dir
+    * concurrent publish (the join-MV deferred-GC argument). The head dir
     * itself is always the newest version; archived dirs hold the
     * aggregates parquet plus an underscore-prefixed `_meta.json`
     * (config + hasDeletes latch at archive time — underscore so Spark's
@@ -468,7 +468,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       dims, sumOf)
 
   /** [[diffAggregates]] for join MVs — same verb over
-    * [[getJoinAggregatesAsOf]]'s retained (cube, lstate, rstate)
+    * [[getJoinAggregatesAsOf]]'s retained (cube, state0, state1)
     * versions. */
   def diffJoinAggregates(name: String, fromVersion: Int, toVersion: Int,
       dims: Seq[String], sumOf: Seq[String] = Nil): DataFrame =
@@ -532,7 +532,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
     // foreachBatch replay skips exactly the batches the head already
     // contains. Publishes without their own id (manual folds, the
     // complete-mode loop) CARRY the previous head's marker forward —
-    // the jmv discipline, where the manual fold preserves the guard.
+    // the join-MV discipline, where the manual fold preserves the guard.
     streamBatchId.map(id => s"""{"lastBatch":$id}""")
       .orElse {
         val p = java.nio.file.Paths.get(storageDir, name,
@@ -1740,7 +1740,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       maxLagPeriods: Int = 366,
       segmentBy: Seq[String] = Nil,
       calendar: Option[String] = None): DataFrame =
-    timeToConvertFrom(jmvCubeAt(name, version), name, dayDim, bitmapId,
+    timeToConvertFrom(joinMvs.at(name, version).cube, name, dayDim, bitmapId,
       stepDim, steps, periodDays, maxLagPeriods, segmentBy, calendar)
 
   /** [[getTimeToConvert]] over a retained version. */
@@ -3179,22 +3179,12 @@ final class CubeService(spark: SparkSession, storageDir: String,
       segmentBy, calendar)
 
   // ----------------------------------- join-MV cohort verbs, as-of
-  /** The join-MV cube aggregates at a RETAINED version — the cohort
-    * verbs' as-of entry point. Sound for join MVs exactly as for plain
-    * cubes: a version dir is ONE complete consistent (cube, left
-    * state, right state) triple written by a single fold and immutable
-    * thereafter, and the cohort serves read ONLY its cube aggregates —
-    * the three-frame consistency worry applies to FOLDS (which read
-    * side states), never to serves. Same retained-window refusal as
-    * [[getJoinAggregatesAsOf]]. */
-  private def jmvCubeAt(name: String, version: Int): Cube = {
-    val retained = listJoinCubeVersions(name)
-    require(retained.contains(version),
-      s"join MV '$name' version $version is not retained " +
-        s"(window: ${retained.mkString(", ")}); raise retainJmvVersions " +
-        "at service construction to widen the time-travel window")
-    jmvLoadAt(name, version).cube
-  }
+  // The cohort verbs' as-of forms serve a RETAINED version's cube
+  // ([[MvStore.at]]): a version dir is one complete consistent set
+  // written by a single fold and immutable thereafter, and the cohort
+  // serves read ONLY its cube aggregates — the multi-frame consistency
+  // worry applies to FOLDS (which read the relation states), never to
+  // serves.
 
   /** [[getJoinRolling]] over a retained version. */
   def getJoinRollingAsOf(
@@ -3211,7 +3201,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       exactDistinctOf: Seq[String] = Nil,
       segmentBy: Seq[String] = Nil,
       intersectOf: Seq[String] = Nil): DataFrame =
-    rollingFrom(jmvCubeAt(name, version), name, dayDim, windowDays,
+    rollingFrom(joinMvs.at(name, version).cube, name, dayDim, windowDays,
       distinctOf, quantilesOf, minOf, maxOf, sumOf, avgOf,
       exactDistinctOf, segmentBy, intersectOf)
 
@@ -3225,7 +3215,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       periodDays: Int = 7,
       segmentBy: Seq[String] = Nil,
       calendar: Option[String] = None): DataFrame =
-    retentionFrom(jmvCubeAt(name, version), name, dayDim, bitmapId,
+    retentionFrom(joinMvs.at(name, version).cube, name, dayDim, bitmapId,
       periodDays, segmentBy, calendar)
 
   /** [[getJoinCumulative]] over a retained version. */
@@ -3237,7 +3227,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       exactDistinctOf: Seq[String] = Nil,
       resetBy: Option[String] = None,
       segmentBy: Seq[String] = Nil): DataFrame =
-    cumulativeFrom(jmvCubeAt(name, version), name, dayDim, sumOf,
+    cumulativeFrom(joinMvs.at(name, version).cube, name, dayDim, sumOf,
       exactDistinctOf, resetBy, segmentBy)
 
   /** [[getJoinOverlapMatrix]] over a retained version. */
@@ -3247,7 +3237,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       dim: String,
       bitmapId: String,
       values: Seq[String] = Nil): DataFrame =
-    overlapFrom(jmvCubeAt(name, version), name, dim, bitmapId, values)
+    overlapFrom(joinMvs.at(name, version).cube, name, dim, bitmapId, values)
 
   /** [[getJoinCohortMatrix]] over a retained version; `calendar`
     * selects the [[getJoinCohortMatrixCalendar]] form. */
@@ -3259,7 +3249,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       periodDays: Int = 7,
       segmentBy: Seq[String] = Nil,
       calendar: Option[String] = None): DataFrame =
-    cohortFrom(jmvCubeAt(name, version), name, dayDim, bitmapId,
+    cohortFrom(joinMvs.at(name, version).cube, name, dayDim, bitmapId,
       periodDays, segmentBy, calendar)
 
   /** [[getJoinCohortValue]] over a retained version. */
@@ -3271,7 +3261,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       periodDays: Int = 7,
       segmentBy: Seq[String] = Nil,
       calendar: Option[String] = None): DataFrame =
-    cohortValueFrom(jmvCubeAt(name, version), name, dayDim, weightedId,
+    cohortValueFrom(joinMvs.at(name, version).cube, name, dayDim, weightedId,
       periodDays, segmentBy, calendar)
 
   /** [[getJoinValueGrowthAccounting]] over a retained version. */
@@ -3283,7 +3273,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       periodDays: Int = 7,
       segmentBy: Seq[String] = Nil,
       calendar: Option[String] = None): DataFrame =
-    valueGrowthFrom(jmvCubeAt(name, version), name, dayDim, weightedId,
+    valueGrowthFrom(joinMvs.at(name, version).cube, name, dayDim, weightedId,
       periodDays, segmentBy, calendar)
 
   /** [[getJoinFunnel]] over a retained version. */
@@ -3297,7 +3287,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       periodDays: Int = 1,
       segmentBy: Seq[String] = Nil,
       withinPeriods: Int = 0): DataFrame =
-    funnelFrom(jmvCubeAt(name, version), name, dayDim, bitmapId,
+    funnelFrom(joinMvs.at(name, version).cube, name, dayDim, bitmapId,
       stepDim, steps, periodDays, segmentBy, withinPeriods)
 
   /** [[getJoinEngagement]] over a retained version. */
@@ -3308,7 +3298,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       bitmapId: String,
       windowDays: Int = 7,
       segmentBy: Seq[String] = Nil): DataFrame =
-    engagementFrom(jmvCubeAt(name, version), name, dayDim, bitmapId,
+    engagementFrom(joinMvs.at(name, version).cube, name, dayDim, bitmapId,
       windowDays, segmentBy)
 
   /** [[getJoinStickiness]] over a retained version. */
@@ -3320,7 +3310,7 @@ final class CubeService(spark: SparkSession, storageDir: String,
       shortDays: Int = 1,
       longDays: Int = 28,
       segmentBy: Seq[String] = Nil): DataFrame =
-    stickinessFrom(jmvCubeAt(name, version), name, dayDim, bitmapId,
+    stickinessFrom(joinMvs.at(name, version).cube, name, dayDim, bitmapId,
       shortDays, longDays, segmentBy)
 
   /** [[getJoinGrowthAccounting]] over a retained version; `calendar`
@@ -3333,447 +3323,412 @@ final class CubeService(spark: SparkSession, storageDir: String,
       periodDays: Int = 7,
       segmentBy: Seq[String] = Nil,
       calendar: Option[String] = None): DataFrame =
-    growthFrom(jmvCubeAt(name, version), name, dayDim, bitmapId,
+    growthFrom(joinMvs.at(name, version).cube, name, dayDim, bitmapId,
       periodDays, segmentBy, calendar)
 
-  // ----------------------------------------------------------- join MVs
-  /** Durable incrementally maintained JOIN MVs ([[JoinCubeManager]]).
-    * A join MV persists THREE coupled pieces — the cube aggregates and
-    * both compacted side states — which must never be observed at
-    * mixed versions (states one fold ahead of the cube double-applies
-    * the next delta). Single-directory two-rename swaps can't cover
-    * three directories, so join MVs use the versioned-manifest pattern:
-    * every fold writes a complete new version under `<name>.jmv/v<k>/`
-    * and then atomically replaces the one-line `MANIFEST` file pointing
-    * at it. Readers resolve MANIFEST → version dir; a crash mid-write
-    * leaves a half-written `v<k+1>` that no manifest references (junk,
-    * cleaned next publish) and the previous version fully live. */
-  private val joinLive = TrieMap.empty[String, JoinCube]
-  private val joinAutoUpdates = TrieMap.empty[String, StreamingQuery]
+  // ------------------------------------------------- join and chain MVs
+  /** Durable incrementally maintained join MVs ([[ChainCubeManager]],
+    * two relations for the join verbs, any n ≥ 2 for the chain verbs).
+    * A join MV persists n + 1 coupled pieces — the cube aggregates and
+    * every compacted relation state — which must never be observed at
+    * mixed versions (states one fold ahead of the cube double-apply the
+    * next delta). Single-directory two-rename swaps can't cover several
+    * directories, so join MVs use the versioned-manifest pattern: every
+    * fold writes a complete new version under `<name>.<suffix>/v<k>/`
+    * (cube, `chain_edges`, `state0..`, replay guard) and then atomically
+    * replaces the one-line `MANIFEST` file pointing at it. Readers
+    * resolve MANIFEST → version dir; a crash mid-write leaves a
+    * half-written `v<k+1>` that no manifest references (junk, cleaned
+    * next publish) and the previous version fully live. The join verbs
+    * keep their MVs under `<name>.jmv`, the chain verbs under
+    * `<name>.cmv`; one store serves both. */
+  private final class MvStore(suffix: String, kind: String) {
+    private val live = TrieMap.empty[String, ChainCube]
+    private val autoUpdates = TrieMap.empty[String, StreamingQuery]
 
-  private def jmvRoot(name: String) =
-    java.nio.file.Paths.get(storageDir, s"$name.jmv")
+    private def root(name: String): java.nio.file.Path =
+      java.nio.file.Paths.get(storageDir, s"$name.$suffix")
 
-  private def jmvVersion(name: String): Int = {
-    val m = jmvRoot(name).resolve("MANIFEST")
-    if (m.toFile.exists()) java.nio.file.Files.readString(m).trim.toInt
-    else -1
-  }
+    private def checkpointDir(name: String) = s"${root(name)}.checkpoint"
 
-  /** Highest streaming micro-batch id folded into the CURRENT version
-    * (−1 when none ever was). Carried forward by manual folds and read
-    * by [[startJoinAutoUpdate]]'s replay guard: foreachBatch re-delivers
-    * the last batch after a crash between publish and checkpoint commit,
-    * and a fold is NOT idempotent (unlike the single-table cube's
-    * complete-mode publish), so replayed ids are skipped. */
-  /** A reset writes the combined `replay_guard` file ("<batch>\n<id>")
-    * ATOMICALLY into the current version dir; when present it overrides
-    * the per-field files (publish never writes it — a fresh version dir
-    * only becomes visible via the MANIFEST swap, so its per-field
-    * writes need no in-place atomicity). */
-  private def jmvGuardOverride(name: String, v: Int): Option[(Long, Option[String])] = {
-    val f = jmvRoot(name).resolve(s"v$v").resolve("replay_guard")
-    if (!f.toFile.exists()) None
-    else {
-      val lines = java.nio.file.Files.readString(f).linesIterator.toSeq
-      Some((lines.head.trim.toLong, lines.lift(1).map(_.trim)))
+    /** Version the MANIFEST points at (one version per fold — a version
+      * number doubles as a fold count); −1 when the MV does not exist. */
+    private def version(name: String): Int = {
+      val m = root(name).resolve("MANIFEST")
+      if (m.toFile.exists()) java.nio.file.Files.readString(m).trim.toInt
+      else -1
+    }
+
+    def head(name: String): Int = {
+      val v = version(name)
+      require(v >= 0, s"$kind MV '$name' does not exist under $storageDir")
+      v
+    }
+
+    /** The CURRENT version's replay guard: the highest streaming
+      * micro-batch id folded into it (−1 when none ever was) and the
+      * stream identity (canonical changeDir + relation tag) that id
+      * belongs to. foreachBatch re-delivers the last batch after a
+      * crash between publish and checkpoint commit, and a fold is NOT
+      * idempotent (unlike the single-table cube's complete-mode
+      * publish), so replayed ids are skipped — but batch ids are
+      * CHECKPOINT-RELATIVE, so the id is only a valid guard against
+      * the same stream. Manual folds carry both forward. A re-home
+      * writes the combined `replay_guard` file ("<batch>\n<id>")
+      * ATOMICALLY into the current version dir; when present it
+      * overrides the per-field files (publish never writes it — a fresh
+      * version dir only becomes visible via the MANIFEST swap, so its
+      * per-field writes need no in-place atomicity). */
+    private def guard(name: String): (Long, Option[String]) = {
+      val v = version(name)
+      if (v < 0) return (-1L, None)
+      val vdir = root(name).resolve(s"v$v")
+      def read(f: String): Option[String] =
+        Some(vdir.resolve(f)).filter(_.toFile.exists())
+          .map(java.nio.file.Files.readString(_).trim)
+      read("replay_guard") match {
+        case Some(g) =>
+          val lines = g.linesIterator.toSeq
+          (lines.head.trim.toLong, lines.lift(1).map(_.trim))
+        case None =>
+          (read("batch_id").map(_.toLong).getOrElse(-1L), read("stream_id"))
+      }
+    }
+
+    private def lastBatch(name: String): Long = guard(name)._1
+
+    /** Overwrite the CURRENT version's replay guard in place (no new
+      * version — the cube/state frames are untouched), when the caller
+      * explicitly re-homes the MV onto a new change stream. ONE atomic
+      * write (tmp + ATOMIC_MOVE of the combined file, the MANIFEST
+      * discipline): two separate field writes could tear on a crash,
+      * leaving a batch id paired with the wrong stream identity — and
+      * either torn pairing silently re-folds or skips real data. */
+    private def resetStreamMeta(name: String, sid: String): Unit = {
+      val vdir = root(name).resolve(s"v${version(name)}")
+      val tmp = vdir.resolve("replay_guard.tmp")
+      java.nio.file.Files.writeString(tmp, s"-1\n$sid")
+      java.nio.file.Files.move(tmp, vdir.resolve("replay_guard"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      ()
+    }
+
+    private def publish(name: String, cc: ChainCube, version: Int,
+        batchId: Option[Long] = None,
+        streamId: Option[String] = None): ChainCube = {
+      // resolve the carried-forward batch id + stream identity BEFORE
+      // the manifest moves (manual folds carry both so a later stream
+      // resume still recognizes which stream the recorded id belongs to)
+      val (recordedBatch, recordedSid) = guard(name)
+      val lastBatch = batchId.getOrElse(recordedBatch)
+      val sid = streamId.orElse(recordedSid)
+      val vdir = root(name).resolve(s"v$version")
+      java.nio.file.Files.createDirectories(vdir)
+      CubeManager.save(cc.cube, vdir.toString)
+      // no .json suffix: CubeManager.list treats *.json as cube configs
+      java.nio.file.Files.writeString(vdir.resolve("chain_edges"),
+        cc.config.edges.map { case (l, r) => s"$l=$r" }.mkString("\n"))
+      java.nio.file.Files.writeString(vdir.resolve("batch_id"),
+        lastBatch.toString)
+      sid.foreach(s =>
+        java.nio.file.Files.writeString(vdir.resolve("stream_id"), s))
+      cc.states.zipWithIndex.foreach { case (s, i) =>
+        s.write.mode("overwrite").parquet(vdir.resolve(s"state$i").toString)
+      }
+      val tmp = root(name).resolve("MANIFEST.tmp")
+      java.nio.file.Files.writeString(tmp, version.toString)
+      java.nio.file.Files.move(tmp, root(name).resolve("MANIFEST"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // clean superseded versions, DEFERRED BY ONE EXTRA publish beyond
+      // the advertised window: outstanding readers (a caller-held
+      // ChainCube, a routed plan built against the previous
+      // registration, or an in-flight as-of read of the window's OLDEST
+      // advertised version) still list that version's parquet files —
+      // deleting it at swap time would fail those reads with
+      // FileNotFoundException mid-job. The advertised TIME-TRAVEL
+      // window ([[versions]]) is the newest `retainJmvVersions`
+      // versions; one more survives on disk as the grace copy, so even
+      // an as-of read of the window's old edge racing one fold keeps
+      // its files alive (head readers were already covered by
+      // retention ≥ 2). Every retained version is a complete consistent
+      // (cube, states) set — the audit/reproducibility handle ("rerun
+      // yesterday's selection against yesterday's MV") at a storage
+      // cost of `(retain+1) × |MV|`, priced per MV, not per source
+      // (relation states are narrow projections).
+      Option(root(name).toFile.listFiles()).getOrElse(Array.empty)
+        .filter(f => f.getName.startsWith("v")
+          && f.getName.drop(1).toIntOption
+            .exists(_ <= version - retainJmvVersions - 1))
+        .foreach(rm)
+      val loaded = loadAt(name, version)
+      live.put(name, loaded)
+      // routed queries must follow the manifest to the new version dir
+      // (the one-version cleanup deferral keeps plans built BEFORE the
+      // publish readable too)
+      CubeCatalog.refreshChain(loaded)
+      loaded
+    }
+
+    private def loadAt(name: String, v: Int): ChainCube = {
+      val vdir = root(name).resolve(s"v$v")
+      def read(f: String) = java.nio.file.Files.readString(vdir.resolve(f))
+      // a version written before join MVs were two-relation chains
+      // carries `join_keys` and `lstate`/`rstate` instead
+      val (edges, stateDirs) =
+        if (vdir.resolve("chain_edges").toFile.exists()) {
+          val e = read("chain_edges").linesIterator.toSeq
+            .filter(_.nonEmpty).map { l =>
+              val kv = l.split("=", 2); (kv(0), kv(1))
+            }
+          (e, e.indices.map(i => s"state$i") :+ s"state${e.size}")
+        } else {
+          val keys = read("join_keys")
+          def key(k: String) = s""""$k":"([^"]*)"""".r.findFirstMatchIn(keys)
+            .map(_.group(1)).getOrElse(sys.error(s"bad join_keys for $name"))
+          (Seq(key("leftKey") -> key("rightKey")), Seq("lstate", "rstate"))
+        }
+      // the cube is persisted under the MV's own name (create keys the
+      // MV by config.cube.name)
+      val cube = CubeManager.load(spark, vdir.toString, name)
+      ChainCube(ChainCubeConfig(cube.config, edges), cube,
+        stateDirs.map(d => Tables.parquet(spark, vdir.resolve(d).toString)))
+    }
+
+    def load(name: String): ChainCube =
+      live.getOrElseUpdate(name, loadAt(name, head(name)))
+
+    /** Addressable versions, oldest first — the TIME-TRAVEL window: the
+      * newest `retainJmvVersions` publishes (fewer while the MV is
+      * young). Each is a complete consistent version; anything older
+      * was GC'd by a later publish — except one grace version that may
+      * briefly remain on disk below the window (deferred GC, see
+      * [[publish]]) and is deliberately NOT advertised: it exists so a
+      * concurrent fold cannot delete files under an in-flight as-of
+      * read of the window's edge, not to widen the window. */
+    def versions(name: String): Seq[Int] = {
+      val h = head(name)
+      Option(root(name).toFile.listFiles()).getOrElse(Array.empty).toSeq
+        .filter(_.isDirectory)
+        .flatMap(f => if (f.getName.startsWith("v"))
+          f.getName.drop(1).toIntOption else None)
+        .filter(_ > h - retainJmvVersions)
+        .sorted
+    }
+
+    /** A RETAINED version — the as-of entry point. A version dir is ONE
+      * complete consistent (cube, states) set written by a single fold
+      * and immutable thereafter, and as-of serves read only its cube,
+      * so a concurrent fold publishing v<k+1> is safe for ANY
+      * advertised version (GC defers one publish past the window).
+      * Refuses versions outside the advertised window rather than
+      * answering from the grace copy (whose files the NEXT publish
+      * does delete). */
+    def at(name: String, version: Int): ChainCube = {
+      val retained = versions(name)
+      require(retained.contains(version),
+        s"$kind MV '$name' version $version is not retained " +
+          s"(window: ${retained.mkString(", ")}); raise retainJmvVersions " +
+          "at service construction to widen the time-travel window")
+      loadAt(name, version)
+    }
+
+    /** Create + persist (version 0). Relations should arrive as narrow
+      * projections — edge keys + referenced columns only.
+      *
+      * Refuses a name whose root already carries a MANIFEST:
+      * re-creating would republish v0 and swap the MANIFEST back to 0
+      * while the previous incarnation's higher version dirs survive on
+      * disk — the retention window would then advertise the OLD MV's
+      * v1/v2 as retained, and as-of serves would answer with the prior
+      * MV's data. */
+    def create(config: ChainCubeConfig, rels: Seq[DataFrame]): ChainCube = {
+      val name = config.cube.name
+      require(version(name) < 0,
+        s"$kind MV '$name' already exists under $storageDir " +
+          s"(head version ${version(name)}); re-creating would leave " +
+          "the old incarnation's version dirs advertised as retained " +
+          s"time-travel versions — fold with update${kind.capitalize}" +
+          "Aggregates, or pick a new name / storage root")
+      publish(name, ChainCubeManager.create(config, rels), 0)
+    }
+
+    /** Fold one batch of signed relation deltas and publish the next
+      * version. The fold reads the persisted previous version, so the
+      * input plan never races the publish. */
+    def fold(name: String, deltas: Seq[(Int, DataFrame)]): ChainCube = {
+      require(!autoUpdates.get(name).exists(_.isActive),
+        s"stop $kind auto-update on '$name' before a manual fold — " +
+          "concurrent manifest publishes would race")
+      publish(name, ChainCubeManager.applyDeltas(load(name), deltas),
+        version(name) + 1)
+    }
+
+    /** Register relation paths to be served by the optimizer from a
+      * RETAINED historical version. Version dirs are immutable, so no
+      * snapshot is needed; the pin is version-keyed — a later fold's
+      * registry refresh (matched by config name) cannot move it to the
+      * head. Validity follows the version's retention: the advertised
+      * window plus one grace publish (GC deletes the version dir
+      * itself). */
+    def registerAsOf(catalogKey: String, name: String, version: Int,
+        paths: Seq[String]): Unit = {
+      require(version != this.version(name),
+        s"version $version is the current head of '$name' — register " +
+          s"the head with CubeCatalog.register${kind.capitalize}; as-of " +
+          "pinning addresses archived versions")
+      val cc = at(name, version)
+      CubeCatalog.registerChain(catalogKey,
+        cc.copy(cube = cc.cube.copy(
+          config = cc.cube.config.copy(name = s"$name@v$version"))),
+        paths)
+    }
+
+    /** Continuous maintenance of ONE relation from a directory of
+      * MongoDB change-event JSON lines (the
+      * [[graft.sources.MongoChangeStream]] wire format — inserts,
+      * updates and deletes with pre-images). Every micro-batch decodes
+      * to a signed relation delta, folds against the persisted previous
+      * version, and publishes every frame as the next version — the
+      * q147 durable micro-batch discipline extended to the
+      * multi-directory MV, so a restart mid-stream recovers a
+      * CONSISTENT version and resumes from the checkpoint.
+      *
+      * Exactly-once: each version records the micro-batch id it folded
+      * ([[guard]]), and a replayed id is skipped. Manual folds while
+      * the stream runs are refused. Starting against a DIFFERENT stream
+      * identity (`<canonical changeDir>|<tag>`) while a recorded id
+      * exists is refused — with a fresh checkpoint the new stream's ids
+      * restart at 0 and the first `lastBatch + 1` batches of genuinely
+      * new data would be silently skipped. `resetBatchTracking = true`
+      * (with the old checkpoint deleted) explicitly re-homes the MV
+      * onto the new stream; its already-folded state is kept and every
+      * batch of the new stream folds from id 0. */
+    def startAutoUpdate(name: String, changeDir: String,
+        docSchema: StructType, relation: Int, tag: String,
+        resetBatchTracking: Boolean): StreamingQuery = {
+      // ALL validations precede ANY mutation: a reset followed by a
+      // failed require would irreversibly destroy the replay guard —
+      // the user abandons the re-home, restarts against the old stream,
+      // and with the guard gone every historical batch re-folds into
+      // the non-idempotent fold (silent double-counting).
+      require(!autoUpdates.get(name).exists(_.isActive),
+        s"$kind auto-update already running on '$name' — stop it first")
+      require(new java.io.File(changeDir).isDirectory,
+        s"changeDir '$changeDir' does not exist or is not a directory")
+      val existing = load(name) // fail fast on an unknown MV
+      require(relation >= 0 && relation < existing.states.size,
+        s"relation $relation out of range 0..${existing.states.size - 1}")
+      val stateCols = existing.states(relation)
+        .columns.filterNot(_ == "_mult").toSet
+      require(docSchema.fieldNames.toSet == stateCols,
+        s"change-stream document schema ${docSchema.fieldNames.toSet} " +
+          s"must match relation $relation's state columns $stateCols")
+      val identity = new java.io.File(changeDir).getCanonicalPath + "|" + tag
+      val (last, recorded) = guard(name)
+      // the guard fires whenever the recorded identity MISMATCHES — or
+      // is MISSING while batches were recorded (an MV published before
+      // identities existed, or a torn legacy state): an unverifiable
+      // stream is as dangerous as a provably different one, because a
+      // fresh checkpoint restarts ids at 0 and `batchId > lastBatch`
+      // silently swallows the new stream's first batches
+      if ((last >= 0 && recorded.forall(_ != identity)) ||
+          recorded.exists(_ != identity)) {
+        require(resetBatchTracking,
+          s"$kind MV '$name' recorded batches from stream " +
+            s"'${recorded.getOrElse("<unrecorded>")}' but this start " +
+            s"targets '$identity'; batch ids are checkpoint-relative, so " +
+            "resuming the guard against a different (or unverifiable) " +
+            "stream would silently skip its first batches. Pass " +
+            "resetBatchTracking = true to re-home the MV onto this " +
+            "stream (keeps folded state, folds from batch 0).")
+        val ckpt = new java.io.File(checkpointDir(name))
+        require(!ckpt.exists(),
+          s"checkpoint ${ckpt.getPath} belongs to the previous stream — " +
+            s"delete it before re-homing '$name' (resuming a file-source " +
+            "checkpoint against a different directory is undefined).")
+        resetStreamMeta(name, identity)
+      }
+      val q = spark.readStream
+        .option("maxFilesPerTrigger", "1")
+        .text(changeDir)
+        .writeStream
+        .option("checkpointLocation", checkpointDir(name))
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          if (batchId > lastBatch(name)) {
+            val delta = graft.sources.MongoChangeStream
+              .decode(batch, docSchema)
+              .withColumn("_sign", col("_sign").cast("long"))
+            publish(name,
+              ChainCubeManager.applyDeltas(load(name), Seq(relation -> delta)),
+              version(name) + 1, Some(batchId), Some(identity))
+            ()
+          }
+        }
+        .start()
+      autoUpdates.put(name, q)
+      q
+    }
+
+    def stopAutoUpdate(name: String): Unit =
+      autoUpdates.remove(name).foreach(_.stop())
+
+    def list(): Seq[String] =
+      Option(new java.io.File(storageDir).listFiles()).getOrElse(Array.empty)
+        .toSeq
+        .filter(f => f.isDirectory && f.getName.endsWith(s".$suffix"))
+        .map(_.getName.stripSuffix(s".$suffix")).sorted
+
+    def delete(name: String): Unit = {
+      stopAutoUpdate(name)
+      live.remove(name)
+      rm(root(name).toFile)
+      rm(new java.io.File(checkpointDir(name)))
     }
   }
 
-  private def jmvLastBatch(name: String): Long = {
-    val v = jmvVersion(name)
-    if (v < 0) -1L
-    else jmvGuardOverride(name, v).map(_._1).getOrElse {
-      val f = jmvRoot(name).resolve(s"v$v").resolve("batch_id")
-      if (f.toFile.exists())
-        java.nio.file.Files.readString(f).trim.toLong
-      else -1L
-    }
-  }
+  private val joinMvs = new MvStore("jmv", "join")
+  private val chainMvs = new MvStore("cmv", "chain")
 
-  /** Stream identity (canonical changeDir + side) the recorded batch_id
-    * belongs to. Batch ids are CHECKPOINT-RELATIVE, not globally
-    * monotone: a different change directory (or side) restarts them at
-    * 0, so a recorded id is only a valid replay guard against the same
-    * stream. None for MVs published before identities were recorded or
-    * never maintained by a stream. */
-  private def jmvStreamId(name: String): Option[String] = {
-    val v = jmvVersion(name)
-    if (v < 0) None
-    else jmvGuardOverride(name, v) match {
-      case Some((_, sid)) => sid
-      case None =>
-        val f = jmvRoot(name).resolve(s"v$v").resolve("stream_id")
-        if (f.toFile.exists())
-          Some(java.nio.file.Files.readString(f).trim)
-        else None
-    }
-  }
-
-  /** Overwrite the CURRENT version's replay-guard metadata in place
-    * (no new version — the cube/state frames are untouched). Used when
-    * the caller explicitly re-homes the MV onto a new change stream.
-    * ONE atomic write (tmp + ATOMIC_MOVE of the combined file, the
-    * MANIFEST discipline): two separate field writes could tear on a
-    * crash, leaving a batch id paired with the wrong stream identity —
-    * and either torn pairing silently re-folds or skips real data. */
-  private def jmvResetStreamMeta(name: String, sid: String): Unit = {
-    val vdir = jmvRoot(name).resolve(s"v${jmvVersion(name)}")
-    val tmp = vdir.resolve("replay_guard.tmp")
-    java.nio.file.Files.writeString(tmp, s"-1\n$sid")
-    java.nio.file.Files.move(tmp, vdir.resolve("replay_guard"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  private def jmvPublish(name: String, jc: JoinCube, version: Int,
-      batchId: Option[Long] = None,
-      streamId: Option[String] = None): JoinCube = {
-    // resolve the carried-forward batch id + stream identity BEFORE the
-    // manifest moves (manual folds carry both so a later stream resume
-    // still recognizes which stream the recorded id belongs to)
-    val lastBatch = batchId.getOrElse(jmvLastBatch(name))
-    val sid = streamId.orElse(jmvStreamId(name))
-    val vdir = jmvRoot(name).resolve(s"v$version")
-    java.nio.file.Files.createDirectories(vdir)
-    CubeManager.save(jc.cube, vdir.toString)
-    // no .json suffix: CubeManager.list treats *.json as cube configs
-    java.nio.file.Files.writeString(vdir.resolve("join_keys"),
-      s"""{"leftKey":"${jc.config.leftKey}","rightKey":"${jc.config.rightKey}"}""")
-    java.nio.file.Files.writeString(vdir.resolve("batch_id"),
-      lastBatch.toString)
-    sid.foreach(s =>
-      java.nio.file.Files.writeString(vdir.resolve("stream_id"), s))
-    jc.left.write.mode("overwrite").parquet(vdir.resolve("lstate").toString)
-    jc.right.write.mode("overwrite").parquet(vdir.resolve("rstate").toString)
-    val tmp = jmvRoot(name).resolve("MANIFEST.tmp")
-    java.nio.file.Files.writeString(tmp, version.toString)
-    java.nio.file.Files.move(tmp, jmvRoot(name).resolve("MANIFEST"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // clean superseded versions, DEFERRED BY ONE EXTRA publish beyond
-    // the advertised window: outstanding readers (a caller-held
-    // JoinCube, a routed plan built against the previous registration,
-    // or an in-flight getJoinAggregatesAsOf of the window's OLDEST
-    // advertised version) still list that version's parquet files —
-    // deleting it at swap time would fail those reads with
-    // FileNotFoundException mid-job. The advertised TIME-TRAVEL window
-    // ([[listJoinCubeVersions]]) is the newest `retainJmvVersions`
-    // versions; one more survives on disk as the grace copy, so even
-    // an as-of read of the window's old edge racing one fold keeps its
-    // files alive (head readers were already covered by retention ≥ 2).
-    // Every retained version is a complete consistent (cube, lstate,
-    // rstate) triple — the audit/reproducibility handle ("rerun
-    // yesterday's selection against yesterday's MV") at a storage cost
-    // of `(retain+1) × |MV|`, which at 100 TB is priced per MV, not
-    // per source (side states are narrow projections).
-    Option(jmvRoot(name).toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("v")
-        && f.getName.drop(1).toIntOption
-          .exists(_ <= version - retainJmvVersions - 1))
-      .foreach(rm)
-    val loaded = jmvLoad(name)
-    joinLive.put(name, loaded)
-    // routed queries must follow the manifest: re-memoize any catalog
-    // registration of this join MV against the new version dir
-    CubeCatalog.refreshJoin(loaded)
-    loaded
-  }
-
-  private def jmvLoad(name: String): JoinCube = {
-    val v = jmvVersion(name)
-    require(v >= 0, s"join MV '$name' does not exist under $storageDir")
-    jmvLoadAt(name, v)
-  }
-
-  private def jmvLoadAt(name: String, v: Int): JoinCube = {
-    val vdir = jmvRoot(name).resolve(s"v$v")
-    val keys = java.nio.file.Files.readString(vdir.resolve("join_keys"))
-    def key(k: String) = s""""$k":"([^"]*)"""".r.findFirstMatchIn(keys)
-      .map(_.group(1)).getOrElse(sys.error(s"bad join_keys for $name"))
-    // the cube is persisted under the MV's own name (createJoinCube
-    // keys the MV by config.cube.name)
-    val cube = CubeManager.load(spark, vdir.toString, name)
-    JoinCube(JoinCubeConfig(cube.config, key("leftKey"), key("rightKey")),
-      cube,
-      Tables.parquet(spark, vdir.resolve("lstate").toString),
-      Tables.parquet(spark, vdir.resolve("rstate").toString))
-  }
-
-  /** Create + persist a join MV (version 0). Sides should arrive as
-    * narrow projections — join key + referenced columns only.
-    *
-    * Refuses a name whose `.jmv` root already carries a MANIFEST:
-    * re-creating would republish v0 and swap the MANIFEST back to 0
-    * while the previous incarnation's higher version dirs survive on
-    * disk — `listJoinCubeVersions`'s retention window (versions >
-    * head − retainJmvVersions) would then advertise the OLD MV's
-    * v1/v2 as retained, and `getJoinAggregatesAsOf` would serve the
-    * prior MV's data. */
+  /** Create + persist a join MV (version 0) — a two-relation
+    * [[ChainCubeManager]] MV under `<name>.jmv`. Sides should arrive as
+    * narrow projections — join key + referenced columns only. Refuses
+    * a name that already exists (see [[MvStore.create]]). */
   def createJoinCube(config: JoinCubeConfig, left: DataFrame,
-      right: DataFrame): JoinCube = {
-    require(jmvVersion(config.cube.name) < 0,
-      s"join MV '${config.cube.name}' already exists under $storageDir " +
-        s"(head version ${jmvVersion(config.cube.name)}); re-creating " +
-        "would leave the old incarnation's version dirs advertised as " +
-        "retained time-travel versions — fold with " +
-        "updateJoinAggregates, or pick a new name / storage root")
-    jmvPublish(config.cube.name,
-      JoinCubeManager.create(config, left, right), 0)
-  }
+      right: DataFrame): ChainCube =
+    joinMvs.create(config.chain, Seq(left, right))
 
-  def loadJoinCube(name: String): JoinCube =
-    joinLive.getOrElseUpdate(name, jmvLoad(name))
+  def loadJoinCube(name: String): ChainCube = joinMvs.load(name)
 
   /** Fold signed deltas to either side (frames with the side schema +
-    * `_sign`; ±k = multiplicity) and publish the next version. The fold
-    * reads the persisted previous version, so the input plan never
-    * races the publish. */
+    * `_sign`; ±k = multiplicity) as ONE batch and publish the next
+    * version. */
   def updateJoinAggregates(name: String, leftDelta: DataFrame,
-      rightDelta: DataFrame): JoinCube = {
-    require(!joinAutoUpdates.get(name).exists(_.isActive),
-      s"stop join auto-update on '$name' before a manual fold — " +
-        "concurrent manifest publishes would race")
-    val prev = loadJoinCube(name)
-    jmvPublish(name,
-      JoinCubeManager.applyDeltas(prev, leftDelta, rightDelta),
-      jmvVersion(name) + 1)
-  }
+      rightDelta: DataFrame): ChainCube =
+    joinMvs.fold(name, Seq(0 -> leftDelta, 1 -> rightDelta))
 
   /** R2+R3 composed for join MVs, streaming: continuous maintenance of
-    * ONE side from a directory of MongoDB change-event JSON lines (the
-    * [[graft.sources.MongoChangeStream]] wire format — inserts, updates
-    * and deletes with pre-images). Every micro-batch decodes to a signed
-    * side delta, folds through the delta-join rule against the persisted
-    * previous version, and publishes ALL THREE frames (cube + both side
-    * states) as the next versioned-manifest version — the q147 durable
-    * micro-batch discipline extended to the three-directory MV, so a
-    * restart mid-stream recovers a CONSISTENT (cube, lstate, rstate)
-    * triple and resumes from the checkpoint.
-    *
-    * Exactly-once: the file-source checkpoint only re-delivers the last
-    * batch after a crash inside the publish→commit window; each version
-    * records the micro-batch id it folded, and a replayed id is skipped
-    * (the fold, unlike complete-mode single-table publishes, is not
-    * idempotent). Manual folds while the stream runs are refused, and
-    * manual folds after a stop carry the last folded id forward so a
-    * later resume still recognizes a replay.
-    *
-    * Batch ids are CHECKPOINT-RELATIVE, so the recorded id is only a
-    * valid guard against the SAME stream: each version also records the
-    * stream identity (canonical changeDir + side). Starting against a
-    * DIFFERENT identity while a recorded id exists is refused — with a
-    * fresh checkpoint the new stream's ids restart at 0 and the first
-    * `lastBatch + 1` batches of genuinely new data would be silently
-    * skipped (data loss, no error). Pass `resetBatchTracking = true`
-    * (with the old checkpoint deleted) to explicitly re-home the MV
-    * onto the new stream; its already-folded state is kept and every
-    * batch of the new stream folds from id 0. */
+    * ONE side (`"left"` or `"right"`) from a directory of MongoDB
+    * change-event JSON lines — see [[MvStore.startAutoUpdate]]. The
+    * recorded stream identity is `<canonical changeDir>|<side>`. */
   def startJoinAutoUpdate(name: String, changeDir: String,
       docSchema: StructType, side: String,
       resetBatchTracking: Boolean = false): StreamingQuery = {
     require(side == "left" || side == "right",
       s"side must be 'left' or 'right', got '$side'")
-    // ALL validations precede ANY mutation: a reset followed by a
-    // failed require would irreversibly destroy the replay guard — the
-    // user abandons the re-home, restarts against the old stream, and
-    // with the guard gone every historical batch re-folds into the
-    // non-idempotent fold (silent double-counting).
-    require(!joinAutoUpdates.get(name).exists(_.isActive),
-      s"join auto-update already running on '$name' — stop it first")
-    require(new java.io.File(changeDir).isDirectory,
-      s"changeDir '$changeDir' does not exist or is not a directory")
-    val existing = loadJoinCube(name) // fail fast on an unknown MV
-    val stateCols = (if (side == "left") existing.left else existing.right)
-      .columns.filterNot(_ == "_mult").toSet
-    require(docSchema.fieldNames.toSet == stateCols,
-      s"change-stream document schema ${docSchema.fieldNames.toSet} must " +
-        s"match the $side side state's columns $stateCols")
-    val identity =
-      new java.io.File(changeDir).getCanonicalPath + "|" + side
-    val recorded = jmvStreamId(name)
-    // the guard fires whenever the recorded identity MISMATCHES — or
-    // is MISSING while batches were recorded (an MV published before
-    // identities existed, or a torn legacy state): an unverifiable
-    // stream is as dangerous as a provably different one, because a
-    // fresh checkpoint restarts ids at 0 and `batchId > lastBatch`
-    // silently swallows the new stream's first batches
-    if ((jmvLastBatch(name) >= 0 && recorded.forall(_ != identity)) ||
-        recorded.exists(_ != identity)) {
-      require(resetBatchTracking,
-        s"join MV '$name' recorded batches from stream " +
-          s"'${recorded.getOrElse("<unrecorded>")}' but this start " +
-          s"targets '$identity'; batch ids are checkpoint-relative, so " +
-          "resuming the guard against a different (or unverifiable) " +
-          "stream would silently skip its first batches. Pass " +
-          "resetBatchTracking = true to re-home the MV onto this " +
-          "stream (keeps folded state, folds from batch 0).")
-      val ckpt = new java.io.File(s"$storageDir/$name.jmv.checkpoint")
-      require(!ckpt.exists(),
-        s"checkpoint ${ckpt.getPath} belongs to the previous stream — " +
-          s"delete it before re-homing '$name' (resuming a file-source " +
-          "checkpoint against a different directory is undefined).")
-      jmvResetStreamMeta(name, identity)
-    }
-    val raw = spark.readStream
-      .option("maxFilesPerTrigger", "1")
-      .text(changeDir)
-    val q = raw.writeStream
-      .option("checkpointLocation", s"$storageDir/$name.jmv.checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > jmvLastBatch(name)) {
-          val delta = graft.sources.MongoChangeStream.decode(batch, docSchema)
-            .withColumn("_sign", col("_sign").cast("long"))
-          val prev = loadJoinCube(name)
-          jmvPublish(name,
-            JoinCubeManager.applySideDeltas(prev, delta, side),
-            jmvVersion(name) + 1, Some(batchId), Some(identity))
-          ()
-        }
-      }
-      .start()
-    joinAutoUpdates.put(name, q)
-    q
+    joinMvs.startAutoUpdate(name, changeDir, docSchema,
+      if (side == "left") 0 else 1, side, resetBatchTracking)
   }
 
-  def stopJoinAutoUpdate(name: String): Unit =
-    joinAutoUpdates.remove(name).foreach(_.stop())
-
-  // ------------------------------------------------------------------
-  // CHAINED (3+ relation) join MVs — the versioned-manifest publish
-  // pattern applied to a cube + n compacted relation states
-  // ([[ChainCubeManager]]): every fold writes a complete new version
-  // under `<name>.cmv/v<k>/` (cube, edge list, state0..stateN, replay
-  // guard) and atomically swaps the MANIFEST, with the same
-  // retention/grace window as join MVs.
-  private val chainLive = TrieMap.empty[String, ChainCube]
-  private val chainAutoUpdates = TrieMap.empty[String, StreamingQuery]
-
-  private def cmvRoot(name: String) =
-    java.nio.file.Paths.get(storageDir, s"$name.cmv")
-
-  private def cmvVersion(name: String): Int = {
-    val m = cmvRoot(name).resolve("MANIFEST")
-    if (m.toFile.exists()) java.nio.file.Files.readString(m).trim.toInt
-    else -1
-  }
-
-  /** A re-home writes the combined `replay_guard` file ("<batch>\n<id>")
-    * ATOMICALLY into the current version dir; when present it overrides
-    * the per-field files — the [[jmvGuardOverride]] discipline (publish
-    * never writes it; a fresh version dir only becomes visible via the
-    * MANIFEST swap, so its per-field writes need no in-place atomicity). */
-  private def cmvGuardOverride(name: String,
-      v: Int): Option[(Long, Option[String])] = {
-    val f = cmvRoot(name).resolve(s"v$v").resolve("replay_guard")
-    if (!f.toFile.exists()) None
-    else {
-      val lines = java.nio.file.Files.readString(f).linesIterator.toSeq
-      Some((lines.head.trim.toLong, lines.lift(1).map(_.trim)))
-    }
-  }
-
-  private def cmvLastBatch(name: String): Long = {
-    val v = cmvVersion(name)
-    if (v < 0) -1L
-    else cmvGuardOverride(name, v).map(_._1).getOrElse {
-      val f = cmvRoot(name).resolve(s"v$v").resolve("batch_id")
-      if (f.toFile.exists())
-        java.nio.file.Files.readString(f).trim.toLong
-      else -1L
-    }
-  }
-
-  private def cmvStreamId(name: String): Option[String] = {
-    val v = cmvVersion(name)
-    if (v < 0) None
-    else cmvGuardOverride(name, v) match {
-      case Some((_, sid)) => sid
-      case None =>
-        val f = cmvRoot(name).resolve(s"v$v").resolve("stream_id")
-        if (f.toFile.exists())
-          Some(java.nio.file.Files.readString(f).trim)
-        else None
-    }
-  }
-
-  private def cmvPublish(name: String, cc: ChainCube, version: Int,
-      batchId: Option[Long] = None,
-      streamId: Option[String] = None): ChainCube = {
-    val lastBatch = batchId.getOrElse(cmvLastBatch(name))
-    val sid = streamId.orElse(cmvStreamId(name))
-    val vdir = cmvRoot(name).resolve(s"v$version")
-    java.nio.file.Files.createDirectories(vdir)
-    CubeManager.save(cc.cube, vdir.toString)
-    // no .json suffix: CubeManager.list treats *.json as cube configs
-    java.nio.file.Files.writeString(vdir.resolve("chain_edges"),
-      cc.config.edges.map { case (l, r) => s"$l=$r" }.mkString("\n"))
-    java.nio.file.Files.writeString(vdir.resolve("batch_id"),
-      lastBatch.toString)
-    sid.foreach(s =>
-      java.nio.file.Files.writeString(vdir.resolve("stream_id"), s))
-    cc.states.zipWithIndex.foreach { case (s, i) =>
-      s.write.mode("overwrite").parquet(vdir.resolve(s"state$i").toString)
-    }
-    val tmp = cmvRoot(name).resolve("MANIFEST.tmp")
-    java.nio.file.Files.writeString(tmp, version.toString)
-    java.nio.file.Files.move(tmp, cmvRoot(name).resolve("MANIFEST"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // same deferred cleanup as join MVs: one version beyond the
-    // advertised window survives as the grace copy for in-flight
-    // readers of the previous registration
-    Option(cmvRoot(name).toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("v")
-        && f.getName.drop(1).toIntOption
-          .exists(_ <= version - retainJmvVersions - 1))
-      .foreach(rm)
-    val loaded = cmvLoad(name)
-    chainLive.put(name, loaded)
-    // routed queries must follow the manifest to the new version dir
-    CubeCatalog.refreshChain(loaded)
-    loaded
-  }
-
-  private def cmvLoad(name: String): ChainCube = {
-    val v = cmvVersion(name)
-    require(v >= 0, s"chain MV '$name' does not exist under $storageDir")
-    cmvLoadAt(name, v)
-  }
-
-  private def cmvLoadAt(name: String, v: Int): ChainCube = {
-    val vdir = cmvRoot(name).resolve(s"v$v")
-    val edges = java.nio.file.Files.readString(vdir.resolve("chain_edges"))
-      .linesIterator.toSeq.filter(_.nonEmpty).map { l =>
-        val kv = l.split("=", 2); (kv(0), kv(1))
-      }
-    val cube = CubeManager.load(spark, vdir.toString, name)
-    val states = (0 to edges.size).map(i =>
-      Tables.parquet(spark, vdir.resolve(s"state$i").toString))
-    ChainCube(ChainCubeConfig(cube.config, edges), cube, states)
-  }
+  def stopJoinAutoUpdate(name: String): Unit = joinMvs.stopAutoUpdate(name)
 
   /** Retained chain-MV versions — the advertised TIME-TRAVEL window
-    * (the [[listJoinCubeVersions]] discipline: the newest
-    * `retainJmvVersions`, one more surviving un-advertised on disk as
-    * the deferred-GC grace copy). */
-  def listChainCubeVersions(name: String): Seq[Int] = {
-    val head = cmvVersion(name)
-    require(head >= 0,
-      s"chain MV '$name' does not exist under $storageDir")
-    Option(cmvRoot(name).toFile.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(_.isDirectory)
-      .flatMap(f => if (f.getName.startsWith("v"))
-        f.getName.drop(1).toIntOption else None)
-      .filter(_ > head - retainJmvVersions)
-      .sorted
-  }
+    * ([[MvStore.versions]]). */
+  def listChainCubeVersions(name: String): Seq[Int] = chainMvs.versions(name)
 
   /** TIME TRAVEL: the [[getChainAggregates]] roll-up served from a
-    * RETAINED historical version instead of the manifest head — safe
-    * against a concurrent fold for the same reason the join-MV as-of
-    * is (GC defers one publish past the advertised window). */
+    * RETAINED historical version instead of the manifest head. */
   def getChainAggregatesAsOf(name: String, version: Int,
       dims: Seq[String],
       sumOf: Seq[String] = Nil, avgOf: Seq[String] = Nil,
@@ -3781,17 +3736,10 @@ final class CubeService(spark: SparkSession, storageDir: String,
       quantilesOf: Seq[(String, Double)] = Nil,
       minOf: Seq[String] = Nil, maxOf: Seq[String] = Nil,
       topkOf: Seq[(String, Int)] = Nil,
-      exactDistinctOf: Seq[String] = Nil): DataFrame = {
-    val retained = listChainCubeVersions(name)
-    require(retained.contains(version),
-      s"chain MV '$name' version $version is not retained " +
-        s"(window: ${retained.mkString(", ")}); raise " +
-        "retainJmvVersions at service construction to widen the " +
-        "time-travel window")
-    CubeManager.query(cmvLoadAt(name, version).cube, dims, lit(true),
+      exactDistinctOf: Seq[String] = Nil): DataFrame =
+    CubeManager.query(chainMvs.at(name, version).cube, dims, lit(true),
       sumOf, avgOf, distinctOf, quantilesOf, minOf, maxOf, topkOf,
       exactDistinctOf)
-  }
 
   /** [[registerJoinSourceAsOf]] for CHAIN MVs: register the relation
     * paths to be served by the optimizer from a RETAINED historical
@@ -3799,136 +3747,40 @@ final class CubeService(spark: SparkSession, storageDir: String,
     * today's query" for the 3+-table star, with no API change on the
     * query side: any covered aggregate over the registered inner
     * equi-join TREE routes to version `version`'s cells (the
-    * flatten-and-match vocabulary, [[CubeRewriteRule]]). Version dirs
-    * are immutable (the manifest discipline), so no snapshot is
-    * needed; the pin is version-keyed — a later fold's registry
-    * refresh (matched by config name) cannot move it to the head.
-    * Validity follows the version's retention: the advertised window
-    * plus one grace publish (widen `retainJmvVersions` for
-    * longer-lived pins — like join MVs, cmv GC deletes the version
-    * dir itself). Deliberately answer-CHANGING relative to the head
-    * (that is the point), hence its own verb. */
+    * flatten-and-match vocabulary, [[CubeRewriteRule]]). Deliberately
+    * answer-CHANGING relative to the head (that is the point), hence
+    * its own verb; see [[MvStore.registerAsOf]]. */
   def registerChainSourceAsOf(catalogKey: String, name: String,
-      version: Int, paths: Seq[String]): Unit = {
-    val retained = listChainCubeVersions(name)
-    require(retained.contains(version),
-      s"chain MV '$name' version $version is not retained " +
-        s"(window: ${retained.mkString(", ")}); raise " +
-        "retainJmvVersions at service construction to widen the " +
-        "time-travel window")
-    require(version != cmvVersion(name),
-      s"version $version is the current head of '$name' — register " +
-        "the head with CubeCatalog.registerChain; as-of pinning " +
-        "addresses archived versions")
-    val cc = cmvLoadAt(name, version)
-    CubeCatalog.registerChain(catalogKey,
-      cc.copy(cube = cc.cube.copy(
-        config = cc.cube.config.copy(name = s"$name@v$version"))),
-      paths)
-  }
+      version: Int, paths: Seq[String]): Unit =
+    chainMvs.registerAsOf(catalogKey, name, version, paths)
 
-  /** Create + persist a chain MV (version 0). Relations should arrive
-    * as narrow projections — edge keys + referenced columns only.
-    *
-    * Refuses a name whose `.cmv` root already carries a MANIFEST — the
-    * [[createJoinCube]] stale-version-dir hazard: republishing v0
-    * leaves the old incarnation's v1/v2 advertised as retained and
-    * `getChainAggregatesAsOf` would serve the prior MV's data. */
+  /** Create + persist a chain MV (version 0) under `<name>.cmv`.
+    * Relations should arrive as narrow projections — edge keys +
+    * referenced columns only. Refuses a name that already exists. */
   def createChainCube(config: ChainCubeConfig,
-      rels: Seq[DataFrame]): ChainCube = {
-    require(cmvVersion(config.cube.name) < 0,
-      s"chain MV '${config.cube.name}' already exists under " +
-        s"$storageDir (head version ${cmvVersion(config.cube.name)}); " +
-        "re-creating would leave the old incarnation's version dirs " +
-        "advertised as retained time-travel versions — fold with " +
-        "updateChainAggregates, or pick a new name / storage root")
-    cmvPublish(config.cube.name, ChainCubeManager.create(config, rels), 0)
-  }
+      rels: Seq[DataFrame]): ChainCube =
+    chainMvs.create(config, rels)
 
-  def loadChainCube(name: String): ChainCube =
-    chainLive.getOrElseUpdate(name, cmvLoad(name))
+  def loadChainCube(name: String): ChainCube = chainMvs.load(name)
 
   /** Fold signed deltas to any subset of relations (`(index, frame)`
     * pairs — frames with the relation schema + `_sign`; ±k =
-    * multiplicity) and publish the next version. */
+    * multiplicity) as ONE batch and publish the next version. */
   def updateChainAggregates(name: String,
-      deltas: Seq[(Int, DataFrame)]): ChainCube = {
-    require(!chainAutoUpdates.get(name).exists(_.isActive),
-      s"stop chain auto-update on '$name' before a manual fold — " +
-        "concurrent manifest publishes would race")
-    val prev = loadChainCube(name)
-    cmvPublish(name, ChainCubeManager.applyDeltas(prev, deltas),
-      cmvVersion(name) + 1)
-  }
+      deltas: Seq[(Int, DataFrame)]): ChainCube =
+    chainMvs.fold(name, deltas)
 
   /** Continuous maintenance of ONE relation of the chain from a
     * directory of MongoDB change-event JSON lines — the
-    * [[startJoinAutoUpdate]] discipline (replay-idempotent via the
-    * recorded batch id + stream identity; batch ids are
-    * checkpoint-relative, so a different stream requires an explicit
-    * re-home) applied to a chain slot. */
+    * [[startJoinAutoUpdate]] discipline applied to a chain slot; the
+    * recorded stream identity is `<canonical changeDir>|<relation>`. */
   def startChainAutoUpdate(name: String, changeDir: String,
       docSchema: StructType, relation: Int,
-      resetBatchTracking: Boolean = false): StreamingQuery = {
-    require(!chainAutoUpdates.get(name).exists(_.isActive),
-      s"chain auto-update already running on '$name' — stop it first")
-    require(new java.io.File(changeDir).isDirectory,
-      s"changeDir '$changeDir' does not exist or is not a directory")
-    val existing = loadChainCube(name) // fail fast on an unknown MV
-    require(relation >= 0 && relation < existing.states.size,
-      s"relation $relation out of range 0..${existing.states.size - 1}")
-    val stateCols = existing.states(relation)
-      .columns.filterNot(_ == "_mult").toSet
-    require(docSchema.fieldNames.toSet == stateCols,
-      s"change-stream document schema ${docSchema.fieldNames.toSet} " +
-        s"must match relation $relation's state columns $stateCols")
-    val identity =
-      new java.io.File(changeDir).getCanonicalPath + "|" + relation
-    val recorded = cmvStreamId(name)
-    if ((cmvLastBatch(name) >= 0 && recorded.forall(_ != identity)) ||
-        recorded.exists(_ != identity)) {
-      require(resetBatchTracking,
-        s"chain MV '$name' recorded batches from stream " +
-          s"'${recorded.getOrElse("<unrecorded>")}' but this start " +
-          s"targets '$identity'; batch ids are checkpoint-relative — " +
-          "pass resetBatchTracking = true to re-home the MV onto this " +
-          "stream (keeps folded state, folds from batch 0).")
-      val ckpt = new java.io.File(s"$storageDir/$name.cmv.checkpoint")
-      require(!ckpt.exists(),
-        s"checkpoint ${ckpt.getPath} belongs to the previous stream — " +
-          s"delete it before re-homing '$name'.")
-      val v = cmvVersion(name)
-      val tmp = cmvRoot(name).resolve(s"v$v").resolve("replay_guard.tmp")
-      java.nio.file.Files.writeString(tmp, s"-1\n$identity")
-      java.nio.file.Files.move(tmp,
-        cmvRoot(name).resolve(s"v$v").resolve("replay_guard"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    val raw = spark.readStream
-      .option("maxFilesPerTrigger", "1")
-      .text(changeDir)
-    val q = raw.writeStream
-      .option("checkpointLocation", s"$storageDir/$name.cmv.checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > cmvLastBatch(name)) {
-          val delta = graft.sources.MongoChangeStream
-            .decode(batch, docSchema)
-            .withColumn("_sign", col("_sign").cast("long"))
-          val prev = loadChainCube(name)
-          cmvPublish(name,
-            ChainCubeManager.applySideDeltas(prev, delta, relation),
-            cmvVersion(name) + 1, Some(batchId), Some(identity))
-          ()
-        }
-      }
-      .start()
-    chainAutoUpdates.put(name, q)
-    q
-  }
+      resetBatchTracking: Boolean = false): StreamingQuery =
+    chainMvs.startAutoUpdate(name, changeDir, docSchema, relation,
+      relation.toString, resetBatchTracking)
 
-  def stopChainAutoUpdate(name: String): Unit =
-    chainAutoUpdates.remove(name).foreach(_.stop())
+  def stopChainAutoUpdate(name: String): Unit = chainMvs.stopAutoUpdate(name)
 
   /** Roll-up served from the maintained chain MV — the full
     * [[getAggregates]] measure surface over the 3+-table join's cells
@@ -4019,98 +3871,37 @@ final class CubeService(spark: SparkSession, storageDir: String,
 
   /** Version of the join MV the MANIFEST currently points at (one
     * version per fold — a version number doubles as a fold count). */
-  def currentJoinCubeVersion(name: String): Int = {
-    val v = jmvVersion(name)
-    require(v >= 0, s"join MV '$name' does not exist under $storageDir")
-    v
-  }
+  def currentJoinCubeVersion(name: String): Int = joinMvs.head(name)
 
-  /** Addressable versions, oldest first — the TIME-TRAVEL window: the
-    * newest `retainJmvVersions` publishes (fewer while the MV is
-    * young). Each is a complete consistent triple; anything older was
-    * GC'd by a later publish — except one grace version that may
-    * briefly remain on disk below the window (deferred GC, see
-    * [[jmvPublish]]) and is deliberately NOT advertised: it exists so
-    * a concurrent fold cannot delete files under an in-flight as-of
-    * read of the window's edge, not to widen the window. */
-  def listJoinCubeVersions(name: String): Seq[Int] = {
-    val head = jmvVersion(name)
-    require(head >= 0,
-      s"join MV '$name' does not exist under $storageDir")
-    Option(jmvRoot(name).toFile.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(_.isDirectory)
-      .flatMap(f => if (f.getName.startsWith("v"))
-        f.getName.drop(1).toIntOption else None)
-      .filter(_ > head - retainJmvVersions)
-      .sorted
-  }
+  /** Addressable join-MV versions, oldest first — the TIME-TRAVEL
+    * window ([[MvStore.versions]]). */
+  def listJoinCubeVersions(name: String): Seq[Int] = joinMvs.versions(name)
 
   /** TIME TRAVEL: the [[getJoinAggregates]] roll-up served from a
     * RETAINED historical version instead of the manifest head. The
-    * as-of read never touches the head's registration or caches — and
-    * a concurrent fold publishing v<k+1> while an as-of query of ANY
-    * advertised version runs (including the window's oldest) is safe
-    * because GC is deferred one publish past the advertised window:
-    * the publish demotes the oldest advertised version to the
-    * un-advertised grace copy rather than deleting it, so the in-flight
-    * read's files stay alive. Refuses versions outside the advertised
-    * window rather than answering from the grace copy (whose files the
-    * NEXT publish does delete). */
+    * as-of read never touches the head's registration or caches, and
+    * is safe against a concurrent fold ([[MvStore.at]]). */
   def getJoinAggregatesAsOf(name: String, version: Int, dims: Seq[String],
       sumOf: Seq[String] = Nil, avgOf: Seq[String] = Nil,
       distinctOf: Seq[String] = Nil,
       quantilesOf: Seq[(String, Double)] = Nil,
       minOf: Seq[String] = Nil, maxOf: Seq[String] = Nil,
       topkOf: Seq[(String, Int)] = Nil,
-      exactDistinctOf: Seq[String] = Nil): DataFrame = {
-    val retained = listJoinCubeVersions(name)
-    require(retained.contains(version),
-      s"join MV '$name' version $version is not retained " +
-        s"(window: ${retained.mkString(", ")}); raise retainJmvVersions " +
-        "at service construction to widen the time-travel window")
-    CubeManager.query(jmvLoadAt(name, version).cube, dims, lit(true),
+      exactDistinctOf: Seq[String] = Nil): DataFrame =
+    CubeManager.query(joinMvs.at(name, version).cube, dims, lit(true),
       sumOf, avgOf, distinctOf, quantilesOf, minOf, maxOf, topkOf,
       exactDistinctOf)
-  }
 
   /** [[registerSourceAsOf]] for JOIN MVs: register the two source
     * paths to be served by the optimizer from a RETAINED historical
-    * version of this join MV. Version dirs are immutable (the manifest
-    * discipline), so no snapshot is needed; the pin is version-keyed —
-    * a later fold's registry refresh (matched by config name) cannot
-    * move it to the head. Validity follows the version's retention:
-    * the advertised window plus one grace publish (widen
-    * `retainJmvVersions` for longer-lived pins — unlike the
-    * single-table pin, jmv GC deletes the version dir itself). */
+    * version of this join MV ([[MvStore.registerAsOf]]; unlike the
+    * single-table pin, GC deletes the version dir itself, so widen
+    * `retainJmvVersions` for longer-lived pins). */
   def registerJoinSourceAsOf(catalogKey: String, name: String,
-      version: Int, leftPath: String, rightPath: String): Unit = {
-    val retained = listJoinCubeVersions(name)
-    require(retained.contains(version),
-      s"join MV '$name' version $version is not retained " +
-        s"(window: ${retained.mkString(", ")}); raise retainJmvVersions " +
-        "at service construction to widen the time-travel window")
-    require(version != jmvVersion(name),
-      s"version $version is the current head of '$name' — register the " +
-        "head with CubeCatalog.registerJoin; as-of pinning addresses " +
-        "archived versions")
-    val jc = jmvLoadAt(name, version)
-    CubeCatalog.registerJoin(catalogKey,
-      jc.copy(cube = jc.cube.copy(
-        config = jc.cube.config.copy(name = s"${name}@v$version"))),
-      leftPath, rightPath)
-  }
+      version: Int, leftPath: String, rightPath: String): Unit =
+    joinMvs.registerAsOf(catalogKey, name, version, Seq(leftPath, rightPath))
 
-  def listJoinCubes(): Seq[String] = {
-    val d = new java.io.File(storageDir)
-    Option(d.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(f => f.isDirectory && f.getName.endsWith(".jmv"))
-      .map(_.getName.stripSuffix(".jmv")).sorted
-  }
+  def listJoinCubes(): Seq[String] = joinMvs.list()
 
-  def deleteJoinCube(name: String): Unit = {
-    stopJoinAutoUpdate(name)
-    joinLive.remove(name)
-    rm(jmvRoot(name).toFile)
-    rm(new java.io.File(s"$storageDir/$name.jmv.checkpoint"))
-  }
+  def deleteJoinCube(name: String): Unit = joinMvs.delete(name)
 }

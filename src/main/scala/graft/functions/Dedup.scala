@@ -663,7 +663,7 @@ object Dedup {
         fwd.select(col("dst").as("src"), col("src").as("dst")))
       .cache()
     // Per-round LINEAGE TRUNCATION (eager localCheckpoint, the
-    // JoinCubeManager.checkpoint discipline), not just caching: cache()
+    // ChainCubeManager.checkpoint discipline), not just caching: cache()
     // leaves each round's logical plan nested inside the next, so a
     // high-diameter component (a path graph needs diameter rounds)
     // exponentially deepens the plan until planning itself OOMs —

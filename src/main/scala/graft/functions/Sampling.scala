@@ -399,7 +399,7 @@ object Sampling {
     * outside the timed window; the timed query still performs the
     * full compaction rewrite + inventory from parquet every run). */
   private val compactFixture =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+    scala.collection.mutable.Map.empty[(SparkSession, String), String]
   def ensureCompactFixture(spark: SparkSession, sfDir: String): String = {
     val out = s"${sys.props("java.io.tmpdir")}/graft_compact_" +
       sfDir.replaceAll("[^a-zA-Z0-9]", "_")
@@ -419,11 +419,16 @@ object Sampling {
         .write.mode("overwrite").partitionBy("lang").parquet(s"$out/frag")
       out
     }
-    compactFixture.get((spark, sfDir)) match {
-      case Some(dir) if fragExists() => dir
-      case _ =>
-        compactFixture.put((spark, sfDir), build())
-        out
+    // one lock over get, validate, build and put: two first callers
+    // checking and then building without it would both run
+    // overwrite-mode writes into the one shared directory
+    compactFixture.synchronized {
+      compactFixture.get((spark, sfDir)) match {
+        case Some(dir) if fragExists() => dir
+        case _ =>
+          compactFixture.put((spark, sfDir), build())
+          out
+      }
     }
   }
 

@@ -42,3 +42,17 @@ object TestSession {
       "could not obtain a live SparkContext after 5 attempts")
   }
 }
+
+/** Suite mixin over [[TestSession]]: `spark` re-checks liveness on every
+  * use instead of freezing the first session a suite saw, and
+  * `testImplicits` stands in for `spark.implicits` (a `def` is not a
+  * stable import path). */
+trait LiveSession {
+  def spark: SparkSession = TestSession.get()
+
+  protected object testImplicits
+      extends org.apache.spark.sql.classic.SQLImplicits {
+    override protected def session: org.apache.spark.sql.classic.SparkSession =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+  }
+}

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.TestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,22 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * only the broker replaced by a socket — the furthest the zero-egress
   * box allows). A real TCP client drives a real bound server; nothing
   * is called in-process on the request path except through dispatch. */
-class AdminServerSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class AdminServerSpec extends AnyFunSuite with graft.LiveSession {
 
   private def tmp(p: String) = Files.createTempDirectory(p).toString
 
   private def source: DataFrame = {
-    import spark.implicits._
+    import testImplicits._
     Seq(("click", 3.0), ("click", 4.0), ("view", 10.0))
       .toDF("event_type", "value")
   }
@@ -83,7 +73,7 @@ class AdminServerSpec extends AnyFunSuite {
 
       // signed-delta fold over the wire: +1 view 5.0, −1 click 3.0
       val deltaDir = tmp("graft_admin_delta") + "/d"
-      locally { import spark.implicits._
+      locally { import testImplicits._
         Seq(("view", 5.0, 1), ("click", 3.0, -1))
           .toDF("event_type", "value", "_sign").write.parquet(deltaDir) }
       assert(cli.rpc(s"""{"verb":"updateAggregates","name":"admin1",
@@ -121,7 +111,7 @@ class AdminServerSpec extends AnyFunSuite {
   }
 
   test("wire delete fold with sourceParquet keeps sketch/extreme serves alive") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark, tmp("graft_admin_delsrc"))
     val server = new AdminServer(svc, spark)
     val port = server.start()
@@ -170,7 +160,7 @@ class AdminServerSpec extends AnyFunSuite {
   }
 
   test("a wire fold launches no schema-inference job") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark, tmp("graft_admin_jobs"))
     val server = new AdminServer(svc, spark)
     val cli = new Client(server.start())
@@ -221,15 +211,16 @@ class AdminServerSpec extends AnyFunSuite {
           }","sourceParquet":"${escaped(basePath)}"}""")
           == s"""{"ok":true,"result":"$n"}""")
       }
-      def foldJobs(name: String, src: String): Seq[Seq[String]] = {
+      def jobsOf(request: String): Seq[Seq[String]] = {
         TestBus.drain(spark.sparkContext)
         jobs.clear()
-        assert(cli.rpc(s"""{"verb":"updateAggregates","name":"$name",""" +
-          s""""deltaParquet":"${escaped(delta)}"$src}""")
-          == """{"ok":true,"result":"updated"}""")
+        assert(cli.rpc(request) == """{"ok":true,"result":"updated"}""")
         TestBus.drain(spark.sparkContext)
         jobs.asScala.toSeq
       }
+      def foldJobs(name: String, src: String): Seq[Seq[String]] =
+        jobsOf(s"""{"verb":"updateAggregates","name":"$name",""" +
+          s""""deltaParquet":"${escaped(delta)}"$src}""")
       val plain = foldJobs("mA", "")
       val bitmap = foldJobs("mB",
         s""","sourceParquet":"${escaped(source)}"""")
@@ -243,6 +234,34 @@ class AdminServerSpec extends AnyFunSuite {
       // fold adds the delete probe and the touched-cell recompute
       assert(plain.size == 3, plain.mkString("; "))
       assert(bitmap.size == 8, bitmap.mkString("; "))
+      // a join MV over the same events (right) and a user dimension
+      // (left), folded by ONE batch carrying deltas to both sides: the
+      // two-sided delta rule stays a single cube fold plus the
+      // publish of the cube and both side states
+      val users = (0 until 50).map(u => (u.toLong, Seq("a", "b")(u % 2)))
+      val lBase = tmp("graft_admin_jobs_in") + "/users"
+      users.toDF("u_id", "u_tier").coalesce(1).write.parquet(lBase)
+      val lDelta = tmp("graft_admin_jobs_in") + "/users_delta"
+      Seq((50L, "a", 1), (51L, "b", 1), (3L, "b", -1), (3L, "a", 1))
+        .toDF("u_id", "u_tier", "_sign").coalesce(1).write.parquet(lDelta)
+      val rDelta = tmp("graft_admin_jobs_in") + "/events_delta"
+      ((ins.map((_, 1)) ++ gone.map((_, -1)))
+        .map { case ((a, b, c, d, e), sg) => (a, b, c, d, e, sg) } :+
+        ((700L, new java.sql.Timestamp(t0), 50L, "buy", 4.0, 1)))
+        .toDF(cols :+ "_sign": _*).coalesce(1).write.parquet(rDelta)
+      val jCfg = """{"name":"mJ","source":"users_events","dims":[{"kind":"field","id":"tier","path":"u_tier"},{"kind":"field","id":"etype","path":"event_type"}],"measures":[{"id":"v","path":"value"}]}"""
+      assert(cli.rpc(s"""{"verb":"createJoinCube","config":"${escaped(jCfg)
+        }","leftKey":"u_id","rightKey":"user_id","leftParquet":"${
+        escaped(lBase)}","rightParquet":"${escaped(basePath)}"}""")
+        == """{"ok":true,"result":"mJ"}""")
+      val joined = jobsOf(s"""{"verb":"updateJoinAggregates","name":"mJ",""" +
+        s""""leftDeltaParquet":"${escaped(lDelta)}",""" +
+        s""""rightDeltaParquet":"${escaped(rDelta)}"}""")
+      assert(!joined.exists(_.head.startsWith("parquet at")),
+        s"schema-inference job in a join fold: ${joined.mkString("; ")}")
+      // the parent of the two-relation merge read 9 here too: the
+      // fold's cube write plus the two side-state writes
+      assert(joined.size == 9, joined.mkString("; "))
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       cli.close(); server.stop()
@@ -256,7 +275,7 @@ class AdminServerSpec extends AnyFunSuite {
     val port = server.start()
     val cli = new Client(port)
     try {
-      import spark.implicits._
+      import testImplicits._
       val lDir = tmp("graft_admin_jl") + "/l"
       val rDir = tmp("graft_admin_jr") + "/r"
       Seq((1L, "a"), (2L, "b")).toDF("lk", "cat").write.parquet(lDir)
@@ -308,7 +327,7 @@ class AdminServerSpec extends AnyFunSuite {
   }
 
   test("ANN wire verbs: create, query, delete-mask, compact, drop") {
-    import spark.implicits._
+    import testImplicits._
     val store = tmp("graft_admin_ann")
     val annSvc = new graft.ann.AnnIndexService(spark, store)
     val server = new AdminServer(new CubeService(spark, store), spark,
@@ -366,7 +385,7 @@ class AdminServerSpec extends AnyFunSuite {
   }
 
   test("maxRows cap, cube time-travel verbs, and the full join vocabulary") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark, tmp("graft_admin_cap"),
       retainCubeVersions = 3)
     val server = new AdminServer(svc, spark)
@@ -468,7 +487,7 @@ class AdminServerSpec extends AnyFunSuite {
   }
 
   test("rolling, version-diff, and annTune wire verbs == in-process") {
-    import spark.implicits._
+    import testImplicits._
     val store = tmp("graft_admin_rd")
     val svc = new CubeService(spark, store, retainCubeVersions = 3)
     val annSvc = new graft.ann.AnnIndexService(spark, store)
@@ -629,7 +648,7 @@ class AdminServerSpec extends AnyFunSuite {
   }
 
   test("advise over the wire: SQL workload in, materializable config out") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark, tmp("graft_admin_adv"))
     val server = new AdminServer(svc, spark)
     val port = server.start()
@@ -678,7 +697,7 @@ class AdminServerSpec extends AnyFunSuite {
   }
 
   test("timeRollup serve and retention advice over the wire") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark, tmp("graft_admin_tr"))
     val server = new AdminServer(svc, spark)
     val port = server.start()
@@ -780,7 +799,7 @@ class AdminServerSpec extends AnyFunSuite {
   }
 
   test("cumulative and funnel wire verbs == in-process") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark, tmp("graft_admin_cum"))
     val server = new AdminServer(svc, spark)
     val port = server.start()

@@ -1,6 +1,6 @@
 package graft.cube
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,18 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * chain cube == cube recomputed from the final states, for randomized
   * interleavings of inserts/deletes to every relation; plus the
   * streamed one-relation maintenance pin, the service persistence
-  * round-trip with routing, and the non-chain refusals. */
-class ChainCubeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  * round-trip with routing, and the non-chain refusals. The
+  * two-relation case (the join verbs' MV) is JoinCubeSpec's. */
+class ChainCubeSpec extends AnyFunSuite with graft.LiveSession {
 
   // orders ⋈ lineitem ⋈ customer in miniature: the star shape (both
   // edges hang off orders) the judge-named workload uses
@@ -30,21 +21,28 @@ class ChainCubeSpec extends AnyFunSuite {
     edges = Seq(("o_key", "l_key"), ("o_cust", "c_key")))
 
   private def ordersDf(rows: Seq[(Long, Long, String)]): DataFrame = {
-    import spark.implicits._
+    import testImplicits._
     rows.toDF("o_key", "o_cust", "o_prio")
   }
   private def linesDf(rows: Seq[(Long, Double)]): DataFrame = {
-    import spark.implicits._
+    import testImplicits._
     rows.toDF("l_key", "l_price")
   }
   private def custDf(rows: Seq[(Long, String)]): DataFrame = {
-    import spark.implicits._
+    import testImplicits._
     rows.toDF("c_key", "c_seg")
   }
 
   private def contents(c: Cube): Set[(String, String, BigDecimal, Long)] =
     c.live.collect().map { r =>
       (r.getAs[String]("prio"), r.getAs[String]("seg"),
+        BigDecimal(r.getAs[java.math.BigDecimal]("rev")),
+        r.getAs[Long]("_count"))
+    }.toSet
+
+  private def contentsOf(c: Cube): Set[(String, BigDecimal, Long)] =
+    c.live.collect().map { r =>
+      (r.getAs[String]("prio"),
         BigDecimal(r.getAs[java.math.BigDecimal]("rev")),
         r.getAs[Long]("_count"))
     }.toSet
@@ -79,7 +77,7 @@ class ChainCubeSpec extends AnyFunSuite {
       var cc = ChainCubeManager.create(cfg,
         Seq(ordersDf(ordBase), linesDf(linBase), custDf(cusBase)))
       // batch 1: late inserts to ALL THREE relations in one batch
-      // (the sequential composition's multi-relation telescoping)
+      // (the multi-relation telescoping, folded as one batch)
       cc = ChainCubeManager.applyDeltas(cc, Seq(
         0 -> ordersDf(ordLate).withColumn("_sign", lit(1L)),
         1 -> linesDf(linLate).withColumn("_sign", lit(1L)),
@@ -98,7 +96,7 @@ class ChainCubeSpec extends AnyFunSuite {
   }
 
   test("four-relation chain: fold == recompute, deepest edge off relation 2") {
-    import spark.implicits._
+    import testImplicits._
     // O ⋈ L ⋈ C ⋈ N: two edges hang off O (star), the third off C —
     // a genuine chain-of-depth shape, exercising the prefix rule past
     // the graded 3-relation star
@@ -109,11 +107,11 @@ class ChainCubeSpec extends AnyFunSuite {
       edges = Seq(("o_key", "l_key"), ("o_cust", "c_key"),
         ("c_nat", "n_key")))
     def cust4(rows: Seq[(Long, Long)]): DataFrame = {
-      import spark.implicits._
+      import testImplicits._
       rows.toDF("c_key", "c_nat")
     }
     def natDf(rows: Seq[(Long, String)]): DataFrame = {
-      import spark.implicits._
+      import testImplicits._
       rows.toDF("n_key", "n_name")
     }
     val rnd = new scala.util.Random(97)
@@ -138,17 +136,17 @@ class ChainCubeSpec extends AnyFunSuite {
     val linDel = linBase.filter(_ => rnd.nextBoolean())
     var cc = ChainCubeManager.create(cfg4,
       Seq(ordersDf(ord), linesDf(linBase), cust4(cus), natDf(nat)))
-    cc = ChainCubeManager.applySideDeltas(cc,
-      linesDf(linLate).withColumn("_sign", lit(1L)), 1)
-    cc = ChainCubeManager.applySideDeltas(cc,
-      linesDf(linDel).withColumn("_sign", lit(-1L)), 1)
+    cc = ChainCubeManager.applyDeltas(cc,
+      Seq(1 -> linesDf(linLate).withColumn("_sign", lit(1L))))
+    cc = ChainCubeManager.applyDeltas(cc,
+      Seq(1 -> linesDf(linDel).withColumn("_sign", lit(-1L))))
     assert(contents4(cc.cube) ==
       contents4(recompute4(linBase.diff(linDel) ++ linLate)),
       "four-relation fold diverged from recompute")
   }
 
   test("streamed one-relation maintenance == recompute") {
-    import spark.implicits._
+    import testImplicits._
     def tmp(p: String) =
       java.nio.file.Files.createTempDirectory(p).toString
     val dir = tmp("graft_cmv_src")
@@ -170,7 +168,7 @@ class ChainCubeSpec extends AnyFunSuite {
       .option("checkpointLocation", tmp("graft_cmv_ckpt"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         cc = ChainCubeManager.checkpoint(
-          ChainCubeManager.applySideDeltas(cc, b, 1))
+          ChainCubeManager.applyDeltas(cc, Seq(1 -> b)))
         ()
       }
       .start()
@@ -231,6 +229,22 @@ class ChainCubeSpec extends AnyFunSuite {
       .agg(sum(col("l_price").cast("decimal(18,2)")).as("rev"), count(lit(1)).as("n"))
     assert(scansOf(rollup2).exists(_.contains(".cmv/")),
       s"re-parenthesized rollup did not route: ${scansOf(rollup2)}")
+    // ROLLUP through the Expand routes over the same tree (the
+    // grouping-sets path shares the join-MV matcher): routed == raw
+    def grouped = o.join(l, col("o_key") === col("l_key"))
+      .join(c, col("o_cust") === col("c_key"))
+      .rollup(col("o_prio"), col("c_seg"))
+      .agg(sum(col("l_price").cast("decimal(18,2)")).as("rev"), count(lit(1)).as("n"))
+    assert(scansOf(grouped).exists(_.contains(".cmv/")) &&
+      !scansOf(grouped).exists(_.startsWith(srcRoot)),
+      s"three-table ROLLUP did not route to the chain MV: " +
+        s"${scansOf(grouped)}")
+    val groupedServed = grouped.collect().map(_.toSeq).toSet
+    CubeCatalog.clear()
+    assert(groupedServed == grouped.collect().map(_.toSeq).toSet,
+      "routed three-table ROLLUP != raw join")
+    CubeCatalog.registerChain("ct", svc.loadChainCube("ct"),
+      Seq(s"$srcRoot/ord", s"$srcRoot/lin", s"$srcRoot/cus"))
     // routing refusals: an extra relation, a wrong key, an outer join
     def fourWay = rollup.join(spark.range(1), lit(true))
     assert(!scansOf(fourWay).exists(_.contains("does-not-exist")), "sanity")
@@ -312,13 +326,17 @@ class ChainCubeSpec extends AnyFunSuite {
   }
 
   test("non-chain shapes are refused at creation and registration") {
-    // fewer than three relations
-    val twoRel = intercept[IllegalArgumentException] {
-      ChainCubeManager.create(
-        ChainCubeConfig(cfg.cube, Seq(("o_key", "l_key"))),
-        Seq(ordersDf(Nil), linesDf(Nil)))
+    // two relations are a join MV; one relation is no join
+    val twoRel = ChainCubeManager.create(
+      ChainCubeConfig(cfg.cube.copy(dims = Seq(FieldDim("prio", "o_prio"))),
+        Seq(("o_key", "l_key"))),
+      Seq(ordersDf(Seq((1L, 10L, "HIGH"))), linesDf(Seq((1L, 5.0)))))
+    assert(contentsOf(twoRel.cube) == Set(("HIGH", BigDecimal("5.00"), 1L)))
+    val oneRel = intercept[IllegalArgumentException] {
+      ChainCubeManager.create(ChainCubeConfig(cfg.cube, Nil),
+        Seq(ordersDf(Nil)))
     }
-    assert(twoRel.getMessage.contains("at least 3"))
+    assert(oneRel.getMessage.contains("at least 2"))
     // overlapping column names across relations
     val overlap = intercept[IllegalArgumentException] {
       ChainCubeManager.create(cfg,

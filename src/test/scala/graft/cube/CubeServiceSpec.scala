@@ -3,30 +3,20 @@ package graft.cube
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Full R7 verb lifecycle: create → query → manual update (with
   * deletes) → auto-update from a delta directory → stop → delete. */
-class CubeServiceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class CubeServiceSpec extends AnyFunSuite with graft.LiveSession {
 
   private val cfg = CubeConfig("svc", "events",
     Seq(FieldDim("etype", "event_type")),
     Seq(Measure("v", "value")))
 
   private def df(rows: Seq[(String, Timestamp, Double)]): DataFrame = {
-    import spark.implicits._
+    import testImplicits._
     rows.toDF("event_type", "ts", "value")
   }
   private val t0 = new Timestamp(1700000000000L)
@@ -110,7 +100,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("sketch + quantile measures flow through the service verbs end to end") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_sk").toString)
     // the JSON wire shape carries both sketch lists
@@ -142,7 +132,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("getRolling serves the trailing-window curve from daily partials") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_roll").toString)
     val rnd = new scala.util.Random(47)
@@ -237,7 +227,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("getRetention + intersectOf: exact set algebra from daily bitmap partials") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_ret").toString)
     val rnd = new scala.util.Random(53)
@@ -338,7 +328,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("getRetentionCalendar: year-wrap adjacency, gap gating, sharded twin") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_calret").toString)
     val rnd = new scala.util.Random(71)
@@ -413,7 +403,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("getCumulative: lifetime prefix-OR curve, calendar reset, sharded twin") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_cum").toString)
     val rnd = new scala.util.Random(71)
@@ -551,7 +541,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("getFunnel: ordered cascade, same-period completion, sharded twin") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_fun").toString)
     val base = 1700006400000L
@@ -791,7 +781,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("dictionary bitmaps serve cumulative and funnel over STRING keys") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_dictcum").toString)
     val rnd = new scala.util.Random(59)
@@ -851,7 +841,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("getOverlapMatrix: exact pairwise set algebra; sharded twin") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_ovl").toString)
     val rnd = new scala.util.Random(67)
@@ -906,7 +896,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("getCohortMatrix: the retention triangle; sharded + segmented twins") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_coh").toString)
     val rnd = new scala.util.Random(73)
@@ -994,7 +984,7 @@ class CubeServiceSpec extends AnyFunSuite {
 
   test("getCohortValue: LTV triangle from weight maps; sharded + " +
       "segmented twins; sourceless deletes keep serving") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_cval").toString)
     val rnd = new scala.util.Random(41)
@@ -1146,7 +1136,7 @@ class CubeServiceSpec extends AnyFunSuite {
     // is NULL serves value 0.00 while the raw sum(w) it mirrors
     // returns NULL. This pin records the convention as a decision —
     // every cell with >= 1 non-null weight must stay exact.
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_nullw").toString)
     val t0 = 1700006400000L
@@ -1192,7 +1182,7 @@ class CubeServiceSpec extends AnyFunSuite {
     // threw NoSuchElementException on any non-head version. Dicts are
     // append-only (keys gain ids, never lose or change them), so the
     // LIVE dict resolves every id an archived version's maps hold.
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_dasof").toString)
     def ts(d: Long) = new Timestamp(1700006400000L + d * 86400000L)
@@ -1226,7 +1216,7 @@ class CubeServiceSpec extends AnyFunSuite {
 
   test("getValueGrowthAccounting: the MRR bridge vs brute force; " +
       "identity, gap, sharded + segmented twins, deletes keep serving") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_vga").toString)
     val rnd = new scala.util.Random(67)
@@ -1356,7 +1346,7 @@ class CubeServiceSpec extends AnyFunSuite {
 
   test("getEngagement & getGrowthAccounting: Scala oracle, identities, " +
       "sharded + segmented twins") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_eng").toString)
     val rnd = new scala.util.Random(97)
@@ -1594,7 +1584,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("cohort verbs as-of a retained version == the captured pre-fold serves") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_asof").toString)
     val rnd = new scala.util.Random(41)
@@ -1685,7 +1675,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("JOIN-MV cohort verbs as-of a retained version == captured pre-fold serves") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_jasof").toString)
     val rnd = new scala.util.Random(47)
@@ -1794,7 +1784,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("auto-updated cube serves getRolling: N streamed batches == batch == exact") {
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_rollstream").toString)
     val rnd = new scala.util.Random(53)
@@ -1912,7 +1902,7 @@ class CubeServiceSpec extends AnyFunSuite {
 
   test("dictionary cubes stream-maintain: per-batch folds == from-scratch; " +
       "replay + restart safe") {
-    import spark.implicits._
+    import testImplicits._
     val dir = Files.createTempDirectory("graft_svc_dictstream").toString
     val svc = new CubeService(spark, dir)
     val rnd = new scala.util.Random(91)
@@ -2036,7 +2026,7 @@ class CubeServiceSpec extends AnyFunSuite {
     // (the hard-link serve snapshot — never FILE_NOT_EXIST on the
     // renamed-away head, never a torn read); a fresh serve sees the
     // new head.
-    import spark.implicits._
+    import testImplicits._
     val svc = new CubeService(spark,
       Files.createTempDirectory("graft_svc_serverace").toString)
     val rows = (0 until 300).map(i =>
@@ -2105,7 +2095,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("streaming join auto-update: per-batch three-frame publish, restart resumes") {
-    import spark.implicits._
+    import testImplicits._
     import java.nio.file.Paths
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val dir = Files.createTempDirectory("graft_svc_jmvstream").toString
@@ -2158,7 +2148,7 @@ class CubeServiceSpec extends AnyFunSuite {
     val jc = svc.loadJoinCube("jstream")
     val recomputed = CubeManager.create(
       cfgJ.cube.copy(name = "jcheck"),
-      jc.left.drop("_mult").join(jc.right.drop("_mult"),
+      jc.states(0).drop("_mult").join(jc.states(1).drop("_mult"),
         col("lk") === col("rk")))
     val a = jc.cube.aggregates.orderBy("cat")
       .collect().map(_.toSeq).toSeq
@@ -2188,7 +2178,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("left-side streaming join maintenance; double-start refused") {
-    import spark.implicits._
+    import testImplicits._
     import java.nio.file.Paths
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val dir = Files.createTempDirectory("graft_svc_jmvleft").toString
@@ -2231,7 +2221,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("join auto-update refuses a changed stream identity; explicit re-home folds from batch 0") {
-    import spark.implicits._
+    import testImplicits._
     import java.nio.file.Paths
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val dir = Files.createTempDirectory("graft_svc_rehome").toString
@@ -2324,7 +2314,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("MV with recorded batches but no stream identity refuses to resume") {
-    import spark.implicits._
+    import testImplicits._
     import java.nio.file.Paths
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val dir = Files.createTempDirectory("graft_svc_legacy").toString
@@ -2376,7 +2366,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("streamed deletes into a sketch-carrying join MV: no latch, == from-scratch") {
-    import spark.implicits._
+    import testImplicits._
     import java.nio.file.Paths
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     val dir = Files.createTempDirectory("graft_svc_jmvsk").toString
@@ -2417,7 +2407,7 @@ class CubeServiceSpec extends AnyFunSuite {
     // from-scratch twin over the final state
     val finalRight = Seq((1L, 10L, 10.0), (2L, 12L, 20.0), (3L, 14L, 2.0))
       .toDF("rk", "supp", "amount")
-    val scratch = JoinCubeManager.create(cfgJ, left, finalRight)
+    val scratch = ChainCubeManager.create(cfgJ.chain, Seq(left, finalRight))
     val want = CubeManager.query(scratch.cube, Seq("cat"),
         distinctOf = Seq("supps"), sumOf = Seq("amt"))
       .collect().map(r => r.getString(0) ->
@@ -2429,7 +2419,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("DICTIONARY join MV maintained by the change stream == from-scratch") {
-    import spark.implicits._
+    import testImplicits._
     import java.nio.file.Paths
     import org.apache.spark.sql.types.{StringType, LongType, StructField, StructType}
     // string worker ids in a join MV, maintained by startJoinAutoUpdate:
@@ -2470,9 +2460,9 @@ class CubeServiceSpec extends AnyFunSuite {
     // a = {alice, carol, dave} = 3; b = {alice, bob, carol} = 3
     assert(counts(svc) == Map("a" -> 3L, "b" -> 3L), counts(svc).toString)
     // from-scratch twin + restart reload
-    val scratch = JoinCubeManager.create(cfgJ, left,
+    val scratch = ChainCubeManager.create(cfgJ.chain, Seq(left,
       right0.unionByName(Seq((1L, "carol"), (2L, "carol"), (1L, "dave"))
-        .toDF("rk", "worker")))
+        .toDF("rk", "worker"))))
     val want = CubeManager.query(scratch.cube, Seq("cat"),
         exactDistinctOf = Seq("w"))
       .collect().map(r => r.getString(0) -> r.getAs[Long]("n_exact_w"))
@@ -2485,7 +2475,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("getJoinRolling serves trailing extremes from a join MV's daily partials") {
-    import spark.implicits._
+    import testImplicits._
     val dir = Files.createTempDirectory("graft_svc_jroll").toString
     val svc = new CubeService(spark, dir)
     val cfgJ = JoinCubeConfig(
@@ -2511,7 +2501,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("join MV time travel: retained window slides, as-of serves history") {
-    import spark.implicits._
+    import testImplicits._
     val dir = Files.createTempDirectory("graft_svc_tt").toString
     // retention below the deferred-GC floor is a construction error
     intercept[IllegalArgumentException] {
@@ -2615,7 +2605,7 @@ class CubeServiceSpec extends AnyFunSuite {
   }
 
   test("version diff: full-outer alignment, zero-fill, signed-delta arithmetic") {
-    import spark.implicits._
+    import testImplicits._
     val dir = Files.createTempDirectory("graft_svc_diff").toString
     val svc = new CubeService(spark, dir, retainCubeVersions = 3)
     svc.createCube(cfg, df(Seq(("click", t0, 1.0), ("view", t0, 2.0)))) // v0

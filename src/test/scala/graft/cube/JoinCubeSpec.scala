@@ -1,23 +1,14 @@
 package graft.cube
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Join-MV maintenance invariant: incrementally folded join cube ==
-  * cube recomputed from the final state of both sides, for randomized
-  * interleavings of inserts/deletes on either side. */
-class JoinCubeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+/** Join-MV maintenance invariant, for the two-relation
+  * [[ChainCubeManager]] MV the join verbs build: incrementally folded
+  * join cube == cube recomputed from the final state of both sides,
+  * for randomized interleavings of inserts/deletes on either side. */
+class JoinCubeSpec extends AnyFunSuite with graft.LiveSession {
 
   private val cfg = JoinCubeConfig(
     CubeConfig("jt", "mem",
@@ -26,13 +17,21 @@ class JoinCubeSpec extends AnyFunSuite {
     leftKey = "o_key", rightKey = "l_key")
 
   private def ordersDf(rows: Seq[(Long, String)]): DataFrame = {
-    import spark.implicits._
+    import testImplicits._
     rows.toDF("o_key", "o_prio")
   }
   private def linesDf(rows: Seq[(Long, Double)]): DataFrame = {
-    import spark.implicits._
+    import testImplicits._
     rows.toDF("l_key", "l_price")
   }
+
+  // the join verbs' shape on the engine: side 0 is left, 1 is right
+  private def create(c: JoinCubeConfig, left: DataFrame,
+      right: DataFrame): ChainCube =
+    ChainCubeManager.create(c.chain, Seq(left, right))
+  private def fold(jc: ChainCube, leftDelta: DataFrame,
+      rightDelta: DataFrame): ChainCube =
+    ChainCubeManager.applyDeltas(jc, Seq(0 -> leftDelta, 1 -> rightDelta))
 
   private def contents(c: Cube): Set[(String, BigDecimal, Long)] =
     c.live.collect().map { r =>
@@ -55,14 +54,14 @@ class JoinCubeSpec extends AnyFunSuite {
       val ordDel = ordBase.filter(_ => rnd.nextBoolean())
       val linDel = linBase.filter(_ => rnd.nextBoolean())
 
-      var jc = JoinCubeManager.create(cfg,
+      var jc = create(cfg,
         ordersDf(ordBase), linesDf(linBase))
       // batch 1: late inserts on BOTH sides at once (exercises ΔL⋈ΔR)
-      jc = JoinCubeManager.applyDeltas(jc,
+      jc = fold(jc,
         ordersDf(ordLate).withColumn("_sign", lit(1L)),
         linesDf(linLate).withColumn("_sign", lit(1L)))
       // batch 2: deletes on both sides
-      jc = JoinCubeManager.applyDeltas(jc,
+      jc = fold(jc,
         ordersDf(ordDel).withColumn("_sign", lit(-1L)),
         linesDf(linDel).withColumn("_sign", lit(-1L)))
 
@@ -92,39 +91,41 @@ class JoinCubeSpec extends AnyFunSuite {
     val emptyLin = linesDf(Nil).withColumn("_sign", lit(1L))
 
     // general path: empty other-side delta through the three-term rule
-    var general = JoinCubeManager.create(cfg, ordersDf(ordBase), linesDf(linBase))
-    general = JoinCubeManager.applyDeltas(general, emptyOrd,
+    var general = create(cfg, ordersDf(ordBase), linesDf(linBase))
+    general = fold(general, emptyOrd,
       signed(linesDf(linIns), 1L))
-    general = JoinCubeManager.applyDeltas(general, emptyOrd,
+    general = fold(general, emptyOrd,
       signed(linesDf(linDel), -1L))
-    general = JoinCubeManager.applyDeltas(general,
+    general = fold(general,
       signed(ordersDf(ordIns), 1L), emptyLin)
 
     // fast path: same batches, one-sided
-    var fast = JoinCubeManager.create(cfg, ordersDf(ordBase), linesDf(linBase))
-    fast = JoinCubeManager.applySideDeltas(fast,
-      signed(linesDf(linIns), 1L), "right")
-    fast = JoinCubeManager.applySideDeltas(fast,
-      signed(linesDf(linDel), -1L), "right")
-    fast = JoinCubeManager.applySideDeltas(fast,
-      signed(ordersDf(ordIns), 1L), "left")
+    var fast = create(cfg, ordersDf(ordBase), linesDf(linBase))
+    fast = ChainCubeManager.applyDeltas(fast,
+      Seq(1 -> signed(linesDf(linIns), 1L)))
+    fast = ChainCubeManager.applyDeltas(fast,
+      Seq(1 -> signed(linesDf(linDel), -1L)))
+    fast = ChainCubeManager.applyDeltas(fast,
+      Seq(0 -> signed(ordersDf(ordIns), 1L)))
 
     assert(contents(fast.cube) == contents(general.cube),
       "one-sided fold diverged from the general rule")
     def state(df: DataFrame) = df.collect().map(_.toSeq).toSet
-    assert(state(fast.left) == state(general.left), "left states diverged")
-    assert(state(fast.right) == state(general.right), "right states diverged")
+    assert(state(fast.states(0)) == state(general.states(0)),
+      "left states diverged")
+    assert(state(fast.states(1)) == state(general.states(1)),
+      "right states diverged")
   }
 
   test("deleting the last line of an order empties its group") {
-    val jc0 = JoinCubeManager.create(cfg,
+    val jc0 = create(cfg,
       ordersDf(Seq((1L, "HIGH"))), linesDf(Seq((1L, 5.0))))
-    val jc1 = JoinCubeManager.applyDeltas(jc0,
+    val jc1 = fold(jc0,
       ordersDf(Nil).withColumn("_sign", lit(1L)),
       linesDf(Seq((1L, 5.0))).withColumn("_sign", lit(-1L)))
     assert(jc1.cube.live.count() == 0)
     // and the side state no longer matches future deltas for that key
-    val jc2 = JoinCubeManager.applyDeltas(jc1,
+    val jc2 = fold(jc1,
       ordersDf(Nil).withColumn("_sign", lit(1L)),
       linesDf(Seq((1L, 3.0))).withColumn("_sign", lit(1L)))
     assert(contents(jc2.cube) == Set(("HIGH", BigDecimal("3.00"), 1L)),
@@ -132,7 +133,7 @@ class JoinCubeSpec extends AnyFunSuite {
   }
 
   test("streaming two-sided delta replay == recompute (R2 steady state)") {
-    import spark.implicits._
+    import testImplicits._
     def tmp(p: String) =
       java.nio.file.Files.createTempDirectory(p).toString
     val dir = tmp("graft_jmv_src")
@@ -146,14 +147,14 @@ class JoinCubeSpec extends AnyFunSuite {
     def toDf(rows: Seq[(String, Long, String, Double, Long)]) =
       rows.toDF("side", "key", "prio", "price", "_sign")
     toDf(b0).coalesce(1).write.parquet(s"$dir/f0")
-    var jc = JoinCubeManager.create(cfg, ordersDf(Nil), linesDf(Nil))
+    var jc = create(cfg, ordersDf(Nil), linesDf(Nil))
     val q = spark.readStream.schema(toDf(b0).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$dir/f*")
       .writeStream
       .option("checkpointLocation", tmp("graft_jmv_ckpt"))
       .foreachBatch { (b: DataFrame, _: Long) =>
-        jc = JoinCubeManager.checkpoint(JoinCubeManager.applyDeltas(jc,
+        jc = ChainCubeManager.checkpoint(fold(jc,
           b.filter(col("side") === "o")
             .select(col("key").as("o_key"), col("prio").as("o_prio"),
               col("_sign")),
@@ -211,8 +212,63 @@ class JoinCubeSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$dir/jt.jmv").exists())
   }
 
+  test("a version in the binary join layout loads, folds and serves") {
+    // the layout join MVs were published in before they became
+    // two-relation chain MVs: MANIFEST, the cube, `join_keys` and the
+    // compacted side states as `lstate`/`rstate`, written by hand here
+    val dir = java.nio.file.Files.createTempDirectory("graft_jmv_layout")
+    val v0 = dir.resolve("jl.jmv").resolve("v0")
+    java.nio.file.Files.createDirectories(v0)
+    val cfgL = cfg.copy(cube = cfg.cube.copy(name = "jl"))
+    val ord0 = Seq((1L, "HIGH"), (2L, "LOW"), (3L, "MED"))
+    val lin0 = Seq((1L, 5.0), (1L, 5.0), (2L, 3.0), (4L, 9.0))
+    CubeManager.save(CubeManager.create(cfgL.cube,
+      ordersDf(ord0).join(linesDf(lin0), col("o_key") === col("l_key"))),
+      v0.toString)
+    java.nio.file.Files.writeString(v0.resolve("join_keys"),
+      """{"leftKey":"o_key","rightKey":"l_key"}""")
+    java.nio.file.Files.writeString(v0.resolve("batch_id"), "-1")
+    def multiset(df: DataFrame) =
+      df.groupBy(df.columns.map(col): _*).agg(count(lit(1)).as("_mult"))
+    multiset(ordersDf(ord0)).write.parquet(v0.resolve("lstate").toString)
+    multiset(linesDf(lin0)).write.parquet(v0.resolve("rstate").toString)
+    java.nio.file.Files.writeString(dir.resolve("jl.jmv").resolve("MANIFEST"),
+      "0")
+    val svc = new CubeService(spark, dir.toString)
+    def served(v: Option[Int]) = (v match {
+      case Some(k) => svc.getJoinAggregatesAsOf("jl", k, Seq("prio"),
+        sumOf = Seq("rev"))
+      case None => svc.getJoinAggregates("jl", Seq("prio"),
+        sumOf = Seq("rev"))
+    }).collect().map(r => (r.getAs[String]("prio"),
+      r.getAs[Double]("sum_rev"), r.getAs[Long]("n_rows"))).toSet
+    def recomputed(ord: Seq[(Long, String)], lin: Seq[(Long, Double)]) =
+      CubeManager.query(create(cfgL, ordersDf(ord), linesDf(lin)).cube,
+        Seq("prio"), sumOf = Seq("rev")).collect()
+        .map(r => (r.getAs[String]("prio"), r.getAs[Double]("sum_rev"),
+          r.getAs[Long]("n_rows"))).toSet
+    assert(served(None) == recomputed(ord0, lin0), served(None))
+    assert(svc.loadJoinCube("jl").config.edges == Seq("o_key" -> "l_key"))
+    // a two-sided fold over the loaded states publishes v1 in the chain
+    // layout; v0 stays readable in its own
+    svc.updateJoinAggregates("jl",
+      ordersDf(Seq((4L, "LOW"), (3L, "MED"))).withColumn("_sign",
+        when(col("o_key") === 3L, -1L).otherwise(1L)),
+      linesDf(Seq((1L, 5.0), (3L, 2.0), (2L, 1.0))).withColumn("_sign",
+        when(col("l_key") === 1L, -1L).otherwise(1L)))
+    val ord1 = Seq((1L, "HIGH"), (2L, "LOW"), (4L, "LOW"))
+    val lin1 = Seq((1L, 5.0), (2L, 3.0), (4L, 9.0), (3L, 2.0), (2L, 1.0))
+    assert(served(None) == recomputed(ord1, lin1), served(None))
+    val v1 = dir.resolve("jl.jmv").resolve("v1")
+    assert(Seq("chain_edges", "state0", "state1")
+      .forall(f => v1.resolve(f).toFile.exists()))
+    assert(svc.listJoinCubeVersions("jl") == Seq(0, 1))
+    assert(served(Some(0)) == recomputed(ord0, lin0), served(Some(0)))
+    svc.deleteJoinCube("jl")
+  }
+
   test("sketch/extreme measures in a join MV are delete-capable (no latch)") {
-    import spark.implicits._
+    import testImplicits._
     val skCfg = JoinCubeConfig(
       CubeConfig("jsk_del", "mem",
         dims = Seq(FieldDim("prio", "o_prio")),
@@ -225,18 +281,18 @@ class JoinCubeSpec extends AnyFunSuite {
     val ords = Seq((1L, "HIGH"), (2L, "MED"), (3L, "HIGH"))
     val base = Seq((1L, 10L, 5.0), (1L, 11L, 9.0), (2L, 10L, 2.0),
       (3L, 12L, 7.0), (3L, 13L, 1.0))
-    var jc = JoinCubeManager.create(skCfg, ordersDf(ords), lines(base))
+    var jc = create(skCfg, ordersDf(ords), lines(base))
     // delete HIGH's extreme-holding and distinct-holding lines (the
     // supplier 11 line is 1's only s11, the 1.0 line is HIGH's min)
     val dels = Seq((1L, 11L, 9.0), (3L, 13L, 1.0))
-    jc = JoinCubeManager.applyDeltas(jc,
+    jc = fold(jc,
       ordersDf(ords).limit(0).withColumn("_sign", lit(1L)),
       lines(dels).withColumn("_sign", lit(-1L)))
     assert(!jc.cube.hasDeletes,
       "join-MV delete fold latched despite the reconstructible source")
     // folded == from-scratch over the surviving joined state, for the
     // non-invertible families
-    val scratch = JoinCubeManager.create(skCfg, ordersDf(ords),
+    val scratch = create(skCfg, ordersDf(ords),
       lines(base.diff(dels)))
     def serve(c: Cube) = CubeManager.query(c, Seq("prio"),
         distinctOf = Seq("supps"), minOf = Seq("px"), maxOf = Seq("px"))
@@ -246,21 +302,21 @@ class JoinCubeSpec extends AnyFunSuite {
       s"folded ${serve(jc.cube)} != scratch ${serve(scratch.cube)}")
     // a LEFT-side delete recomputes through the one-sided path too:
     // dropping order 3 removes HIGH's 7.0 line from the join
-    jc = JoinCubeManager.applySideDeltas(jc,
-      ordersDf(Seq((3L, "HIGH"))).withColumn("_sign", lit(-1L)), "left")
+    jc = ChainCubeManager.applyDeltas(jc,
+      Seq(0 -> ordersDf(Seq((3L, "HIGH"))).withColumn("_sign", lit(-1L))))
     assert(!jc.cube.hasDeletes)
-    val scratch2 = JoinCubeManager.create(skCfg,
+    val scratch2 = create(skCfg,
       ordersDf(ords.filterNot(_._1 == 3L)), lines(base.diff(dels)))
     assert(serve(jc.cube) == serve(scratch2.cube),
       s"left-delete ${serve(jc.cube)} != scratch ${serve(scratch2.cube)}")
     // over-deletion tombstones (negative nets) are EXCLUDED from the
     // reconstructed source: deleting a line twice must not resurrect
     // or corrupt the recompute
-    val jc3 = JoinCubeManager.applyDeltas(jc,
+    val jc3 = fold(jc,
       ordersDf(ords).limit(0).withColumn("_sign", lit(1L)),
       lines(Seq((2L, 10L, 2.0), (2L, 10L, 2.0)))
         .withColumn("_sign", lit(-1L)))
-    val scratch3 = JoinCubeManager.create(skCfg,
+    val scratch3 = create(skCfg,
       ordersDf(ords.filterNot(_._1 == 3L)),
       lines(base.diff(dels).filterNot(_ == (2L, 10L, 2.0))))
     assert(serve(jc3.cube) == serve(scratch3.cube),
@@ -268,7 +324,7 @@ class JoinCubeSpec extends AnyFunSuite {
   }
 
   test("randomized delete interleavings: non-invertible families == recompute") {
-    import spark.implicits._
+    import testImplicits._
     val skCfg = JoinCubeConfig(
       CubeConfig("jrand", "mem",
         dims = Seq(FieldDim("prio", "o_prio")),
@@ -293,7 +349,7 @@ class JoinCubeSpec extends AnyFunSuite {
       var liveLines = (0 until 20 + rnd.nextInt(20)).map(_ =>
         (rnd.nextInt(ords.size + 2).toLong, rnd.nextInt(6).toLong,
           math.round(rnd.nextDouble() * 10000) / 100.0))
-      var jc = JoinCubeManager.create(skCfg, ordersDf(ords),
+      var jc = create(skCfg, ordersDf(ords),
         lines(liveLines))
       // three random batches: each deletes a random live subset and
       // inserts fresh lines, mixed in ONE fold
@@ -302,14 +358,14 @@ class JoinCubeSpec extends AnyFunSuite {
         val ins = (0 until 3 + rnd.nextInt(5)).map(_ =>
           (rnd.nextInt(ords.size + 2).toLong, rnd.nextInt(6).toLong,
             math.round(rnd.nextDouble() * 10000) / 100.0))
-        jc = JoinCubeManager.applyDeltas(jc,
+        jc = fold(jc,
           ordersDf(ords).limit(0).withColumn("_sign", lit(1L)),
           lines(dels).withColumn("_sign", lit(-1L))
             .unionByName(lines(ins).withColumn("_sign", lit(1L))))
         liveLines = liveLines.diff(dels) ++ ins
       }
       assert(!jc.cube.hasDeletes, s"trial $trial latched")
-      val scratch = JoinCubeManager.create(skCfg, ordersDf(ords),
+      val scratch = create(skCfg, ordersDf(ords),
         lines(liveLines))
       assert(serve(jc.cube) == serve(scratch.cube),
         s"trial $trial: folded ${serve(jc.cube)} != " +
@@ -318,42 +374,43 @@ class JoinCubeSpec extends AnyFunSuite {
   }
 
   test("overlapping side column names and missing keys are refused") {
-    import spark.implicits._
+    import testImplicits._
     // overlapping name: both sides carry "price" — name-based binding
     // downstream (delta terms, rewrite resolvePath) would silently pick
     // the wrong side, so creation must refuse
     val l = Seq((1L, "HIGH", 2.0)).toDF("o_key", "o_prio", "price")
     val r = Seq((1L, 5.0)).toDF("l_key", "price")
     val e = intercept[IllegalArgumentException] {
-      JoinCubeManager.create(cfg, l, r)
+      create(cfg, l, r)
     }
     assert(e.getMessage.contains("disjoint"), e.getMessage)
     // missing join key on a side
     val e2 = intercept[IllegalArgumentException] {
-      JoinCubeManager.create(cfg,
+      create(cfg,
         Seq((1L, "HIGH")).toDF("wrong_key", "o_prio"),
         linesDf(Seq((1L, 5.0))))
     }
-    assert(e2.getMessage.contains("missing join key"), e2.getMessage)
-    // registerJoin re-validates (a hand-built JoinCube can't smuggle an
+    assert(e2.getMessage.contains("not a column of relations"),
+      e2.getMessage)
+    // registerJoin re-validates (a hand-built ChainCube can't smuggle an
     // overlapping schema past the rewrite's name binding)
-    val good = JoinCubeManager.create(cfg,
+    val good = create(cfg,
       ordersDf(Seq((1L, "HIGH"))), linesDf(Seq((1L, 5.0))))
-    val bad = good.copy(right = Seq((1L, "X", 5.0))
-      .toDF("l_key", "o_prio", "l_price").withColumn("_mult", lit(1L)))
+    val bad = good.copy(states = Seq(good.states(0), Seq((1L, "X", 5.0))
+      .toDF("l_key", "o_prio", "l_price").withColumn("_mult", lit(1L))))
     val e3 = intercept[IllegalArgumentException] {
       CubeCatalog.registerJoin("bad_jt", bad, "/tmp/x", "/tmp/y")
     }
     assert(e3.getMessage.contains("disjoint"), e3.getMessage)
-    assert(!CubeCatalog.joinRegistered.contains("bad_jt"))
+    assert(!CubeCatalog.chainRegistered.contains("bad_jt"))
   }
 
   test("duplicate rows carry multiplicity through the join") {
     // two identical lines: state compacts to _mult=2, join must weight 2×
-    val jc = JoinCubeManager.create(cfg,
+    val jc = create(cfg,
       ordersDf(Seq((1L, "HIGH"))), linesDf(Seq((1L, 2.0), (1L, 2.0))))
     assert(contents(jc.cube) == Set(("HIGH", BigDecimal("4.00"), 2L)))
-    val jc1 = JoinCubeManager.applyDeltas(jc,
+    val jc1 = fold(jc,
       ordersDf(Seq((2L, "LOW"))).withColumn("_sign", lit(1L)),
       linesDf(Seq((2L, 1.0), (2L, 1.0))).withColumn("_sign", lit(1L)))
     assert(contents(jc1.cube) ==
@@ -362,11 +419,11 @@ class JoinCubeSpec extends AnyFunSuite {
 
   test("DICTIONARY bitmaps in a join MV: folds extend, restarts reload, " +
       "deletes recompute") {
-    import spark.implicits._
+    import testImplicits._
     // STRING worker ids on the line side — the dictionary path over the
     // JOINED frame: applyDeltas extends the dict in memory with the
-    // batch's unseen keys and every jmvPublish persists the extended
-    // map into the version triple, so restarts reload it and re-inserts
+    // batch's unseen keys and every publish persists the extended
+    // map into the version, so restarts reload it and re-inserts
     // reuse their ids
     val dcfg = JoinCubeConfig(
       CubeConfig("jdict", "mem",
@@ -416,7 +473,7 @@ class JoinCubeSpec extends AnyFunSuite {
       Map("HIGH" -> 2L, "LOW" -> 2L, "MED" -> 1L),
       "delete recompute must serve the post-delete dict counts")
     // == from-scratch over the final state
-    val scratch = JoinCubeManager.create(dcfg,
+    val scratch = create(dcfg,
       ordersDf(Seq((1L, "HIGH"), (2L, "LOW"), (3L, "MED"))),
       lines(Seq((1L, "alice"), (1L, "bob"), (2L, "alice"),
         (3L, "carol"), (2L, "carol"), (1L, "alice"))))

@@ -1,23 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic properties of the dataset-assembly operators — what the
   * oracle's hash equality cannot express: rate accuracy, bin bounds,
   * quota exactness. */
-class SamplingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+class SamplingSpec extends AnyFunSuite with graft.LiveSession {
   private val sfDir = "/root/testdata/sf0.01"
 
   test("stratified sample hits each stratum's rate within 10 points") {
@@ -81,6 +70,34 @@ class SamplingSpec extends AnyFunSuite {
         .map(_.toString).toSeq
       assert(window.nonEmpty)
       assert(threshold == window, s"$dir: threshold mix diverged")
+    }
+  }
+
+  test("concurrent first calls build the q145 fixture once, whole") {
+    // a fresh scale dir, so both calls below are first calls
+    val sf = java.nio.file.Files.createTempDirectory("graft_fixture_sf")
+      .toString
+    val docs = graft.Tables.documents(spark, sfDir)
+    docs.write.parquet(s"$sf/documents.parquet")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val calls = (1 to 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[String] {
+          def call(): String = {
+            start.await(); Sampling.ensureCompactFixture(spark, sf)
+          }
+        }))
+      start.countDown()
+      val dirs = calls.map(_.get(600, java.util.concurrent.TimeUnit.SECONDS))
+      assert(dirs.distinct.size == 1, dirs)
+      val frag = spark.read.parquet(s"${dirs.head}/frag")
+      assert(frag.count() == docs.count())
+      assert(frag.select("doc_id").distinct().count() == docs.count())
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dirs.head))
+    } finally {
+      pool.shutdown()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(sf))
     }
   }
 }

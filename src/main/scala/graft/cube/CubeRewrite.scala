@@ -324,6 +324,17 @@ object CubeCatalog {
     }
 }
 
+/** The optimizer rule behind [[CubeCatalog]]. Besides plain and
+  * grouping-set aggregates it routes the analytic families that
+  * [[CubeAdvisor]] recognizes: each `tryRewrite<Family>` analyzes the
+  * plan into the family's needs and serves from the cheapest
+  * registration whose `build<Family>Serve` succeeds. A builder only
+  * matches the registration against the needs and rebinds the served
+  * frame's output by exprId. For cohort matrix, cohort value, top
+  * spenders, funnel and time-to-convert the served frame comes from
+  * the [[ServeKernels]] kernel that the [[CubeService]] verb runs too;
+  * the retention family, rolling and value-bridge builders keep their
+  * own routed algorithms. */
 object CubeRewriteRule extends Rule[LogicalPlan] {
 
   /** Granularities a finer time bucket serves EXACTLY by
@@ -555,6 +566,115 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
         case cr if (cr.paths, cr.edges) == (Seq(lp, rp), Seq(lk -> rk)) ||
             (cr.paths, cr.edges) == (Seq(rp, lp), Seq(rk -> lk)) => cr.reg
       }.toSeq
+  }
+
+  /** A routed family's serve from the cheapest registration that can
+    * build one: several registered cubes can cover the same need, and
+    * the smallest by file-stats size re-aggregates the least data. */
+  private def cheapest(path: String,
+      join: Option[(String, String, String, String)])(
+      build: CubeCatalog.Registration => Option[LogicalPlan])
+      : Option[LogicalPlan] = {
+    val served = familyRegs(path, join).flatMap(reg =>
+      build(reg).map((_, reg.cubeSize)))
+    if (served.isEmpty) None else Some(served.minBy(_._2)._1)
+  }
+
+  /** The registration guards of every routed family builder
+    * ([[Binding.routable]]'s discipline): the cube's own plan must be
+    * a file scan, and not of the source path itself; and no declared
+    * dimension id may start with `__`, the prefix of the serves'
+    * synthesized column names (the hidden shard column is fine). */
+  private def servable(reg: CubeCatalog.Registration, path: String): Boolean =
+    reg.cubeScanPath.nonEmpty && !reg.origScanPath.contains(path) &&
+      !reg.cube.config.dims.exists(_.id.startsWith("__"))
+
+  private def dayDimOf(cfg: CubeConfig, tsCol: String): Option[String] =
+    cfg.dims.collectFirst { case TimeDim(id, p, "day") if p == tsCol => id }
+
+  private def fieldDimOf(cfg: CubeConfig, srcCol: String): Option[String] =
+    cfg.dims.collectFirst { case FieldDim(id, p) if p == srcCol => id }
+
+  /** A registration's live cells under a need's dim-value filters
+    * ("retention of CLICK users"): filters restrict CELLS, which is
+    * exact because cells partition by the dimension. None when a
+    * filter column is not a field dimension of the cube. */
+  private def liveCells(reg: CubeCatalog.Registration,
+      filters: Seq[(String, Seq[Literal])] = Nil)
+      : Option[org.apache.spark.sql.DataFrame] = {
+    import org.apache.spark.sql.functions.col
+    val live = Bridge.ofRows(reg.cube.aggregates.sparkSession, reg.cubePlan)
+      .filter(col(CubeManager.CountCol) > 0)
+    filters.foldLeft(Option(live)) { case (frame, (srcCol, lits)) =>
+      for {
+        f <- frame
+        dimId <- fieldDimOf(reg.cube.config, srcCol)
+      } yield f.filter(col(dimId).isin(lits.map(l =>
+        org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .convertToScala(l.value, l.dataType)): _*))
+    }
+  }
+
+  /** A routed serve frame, optimized NOW for splicing (re-entrant and
+    * terminating: its scans read the cube path, which no registration
+    * lists as a source), so the spliced subtree gets the main
+    * optimizer batches — the user-provided batch this rule runs in is
+    * the last one, and an analyzed-only subtree would keep its
+    * ResolvedHint nodes. Its outputs rebind the replaced node's
+    * outputs by exprId, so parent operators resolve unchanged. */
+  private final class Served(frame: org.apache.spark.sql.DataFrame) {
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val plan: LogicalPlan = frame.queryExecution.optimizedPlan
+    private val byName: Map[String, Attribute] =
+      plan.output.map(a => a.name -> a).toMap
+
+    def attr(name: String): Option[Attribute] = byName.get(name)
+
+    def bind(orig: NamedExpression, child: Expression): NamedExpression =
+      Alias(child, orig.name)(exprId = orig.exprId)
+
+    /** Exact rebind only: a type mismatch refuses rather than casts. */
+    def exact(orig: NamedExpression, name: String): Option[NamedExpression] =
+      attr(name).filter(_.dataType == orig.dataType).map(bind(orig, _))
+
+    /** An integral key output (period, day, lag): the served long
+      * casts to the original integral type exactly. */
+    def key(orig: NamedExpression, name: String): Option[NamedExpression] =
+      if (orig.dataType != LongType && orig.dataType != IntegerType) None
+      else attr(name).map(a => bind(orig,
+        if (a.dataType == orig.dataType) a else Cast(a, orig.dataType)))
+
+    /** A money output: the raw sum's DECIMAL(p, 2), rebuilt EXACTLY
+      * from a scaled-long sum (MakeDecimal; every stored weight is an
+      * integral count of hundredths) or widened from a narrower exact
+      * decimal, with the user's own outer cast reproduced. */
+    def money(orig: NamedExpression, name: String): Option[NamedExpression] = {
+      val (sumType, outerCast) = orig match {
+        case al: Alias => al.child match {
+          case Cast(inner, t, _, _) => (inner.dataType, Some(t))
+          case other => (other.dataType, None)
+        }
+        case other => (other.dataType, None)
+      }
+      val dec: Option[Expression] = (sumType, attr(name)) match {
+        case (dt: DecimalType, Some(v)) if dt.scale == 2 => v.dataType match {
+          case LongType => Some(org.apache.spark.sql.catalyst.expressions
+            .MakeDecimal(v, dt.precision, 2))
+          case vd: DecimalType
+              if vd.scale == 2 && vd.precision <= dt.precision =>
+            Some(if (vd == dt) v else Cast(v, dt))
+          case _ => None
+        }
+        case _ => None
+      }
+      dec.map(d => bind(orig, outerCast.fold(d)(Cast(d, _))))
+    }
+
+    /** The projection over the served plan, or None if any output
+      * failed to rebind. */
+    def project(outs: Seq[Option[NamedExpression]]): Option[LogicalPlan] =
+      if (outs.forall(_.isDefined)) Some(Project(outs.flatten, plan))
+      else None
   }
 
   /** The agg-shape-independent half of a routing attempt: binds one
@@ -955,9 +1075,7 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     // registered join MV the same way (its cube is a Registration with
     // the same partial columns) — the join must be exactly the
     // registered one, in either side order
-    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
-      buildRollingServe(agg, needs, reg).map((_, reg.cubeSize)))
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cheapest(needs.path, needs.join)(buildRollingServe(agg, needs, _))
   }
 
   private def buildRollingServe(
@@ -968,25 +1086,13 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     import CubeAdvisor.RollOut
     val cube = reg.cube
     val cfg = cube.config
-    // materialization + misregistration guards (Binding.routable's
-    // discipline): the cube's own plan must be a file scan, and not of
-    // the source path itself
-    if (reg.cubeScanPath.isEmpty) return None
-    if (reg.origScanPath.contains(needs.path)) return None
-    // the serve's synthesized column names must not collide with
-    // DECLARED cube dimension ids (the "__" prefix makes a collision a
-    // deliberate act; the hidden shard column is fine — the daily
-    // collapse unions across shard rows like any subdividing cell)
-    if (cfg.dims.exists(_.id.startsWith("__"))) return None
-    // day dimension: day-granularity TimeDim over the workload's ts col
-    val dayDim = cfg.dims.collectFirst {
-      case TimeDim(id, p, "day") if p == needs.tsCol => id
-    }.getOrElse(return None)
+    // shard rows are fine: the daily collapse unions across them like
+    // any subdividing cell
+    if (!servable(reg, needs.path)) return None
+    val dayDim = dayDimOf(cfg, needs.tsCol).getOrElse(return None)
     // segments: plain field dims on exactly the segment source columns
-    val segIds: Seq[String] = needs.segments.map { s =>
-      cfg.dims.collectFirst {
-        case FieldDim(id, p) if p == s => id }.getOrElse(return None)
-    }
+    val segIds: Seq[String] =
+      needs.segments.map(fieldDimOf(cfg, _).getOrElse(return None))
     val segIdOf: Map[String, String] = needs.segments.zip(segIds).toMap
     val leaves: Seq[(RollOut.Leaf, Int)] = needs.outs.zipWithIndex.collect {
       case (l: RollOut.Leaf, i) => (l, i) }
@@ -1055,24 +1161,11 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
           case _ => return None
         }
       }
-    val spark = cube.aggregates.sparkSession
-    val cubeFrame = Bridge.ofRows(spark, reg.cubePlan)
-      .filter(col(CubeManager.CountCol) > 0)
-    // dim-value filters ("WAU of click events") restrict CELLS before
-    // the daily collapse — exact because cells partition by the
-    // dimension; one filter serves both the partials AND the observed-
-    // day endpoints, matching the raw plan's filtered semi-join side.
-    // A filter column that is not a cube dim refuses.
-    val filteredFrame = needs.filters.foldLeft(cubeFrame) {
-      case (f, (srcCol, lits)) =>
-        val dimId = cfg.dims.collectFirst {
-          case FieldDim(id, p) if p == srcCol => id
-        }.getOrElse(return None)
-        val vals = lits.map(l =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToScala(l.value, l.dataType))
-        f.filter(col(dimId).isin(vals: _*))
-    }
+    // dim-value filters ("WAU of click events") restrict cells before
+    // the daily collapse: one filter serves both the partials AND the
+    // observed-day endpoints, matching the raw plan's filtered
+    // semi-join side
+    val filteredFrame = liveCells(reg, needs.filters).getOrElse(return None)
     // calendar-day index via datediff (TZ-consistent — the same
     // derivation getRolling uses; equals the workload's epoch-day
     // arithmetic in a UTC session)
@@ -1108,46 +1201,21 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     val served = exploded
       .groupBy((segCols :+ col("__day")): _*)
       .agg(endAggs.head, endAggs.tail: _*)
-    // optimize the serve plan NOW (re-entrant, terminates: its scans
-    // read the cube path, which no registration lists as a source) so
-    // the spliced subtree gets the main optimizer batches — the
-    // user-provided batch this rule runs in is the last one, and an
-    // analyzed-only subtree would keep its ResolvedHint nodes
-    val outPlan = served.queryExecution.optimizedPlan
-    val servedAttr: Map[String, Attribute] =
-      outPlan.output.map(a => a.name -> a).toMap
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val proj: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(needs.outs).zipWithIndex.map {
-        case ((orig, RollOut.Day), _) =>
-          // integral day outputs only: the epoch-day long casts to the
-          // original type exactly
-          if (orig.dataType != LongType && orig.dataType != IntegerType)
-            return None
-          val d = servedAttr.getOrElse("__day", return None)
-          val child: Expression =
-            if (d.dataType == orig.dataType) d else Cast(d, orig.dataType)
-          Alias(child, orig.name)(exprId = orig.exprId)
-        case ((orig, RollOut.Seg(srcCol)), _) =>
-          val a = servedAttr.getOrElse(segIdOf(srcCol), return None)
-          if (a.dataType != orig.dataType) return None
-          Alias(a, orig.name)(exprId = orig.exprId)
-        case ((orig, l: RollOut.Leaf), i) =>
-          val a = servedAttr.getOrElse(s"__out_$i", return None)
-          if (l.outerCast)
-            // the workload's OWN output cast (sum(dec).cast(double)
-            // etc.) — reproduced on the served value, identical because
-            // the pre-cast values are equal
-            Alias(Cast(a, orig.dataType), orig.name)(exprId = orig.exprId)
-          else {
-            // exact rebind only — a type mismatch (e.g. percentile over
-            // an int column vs the KLL double) refuses rather than casts
-            if (a.dataType != orig.dataType) return None
-            Alias(a, orig.name)(exprId = orig.exprId)
-          }
-        case _ => return None
-      }
-    Some(Project(proj, outPlan))
+    val out = new Served(served)
+    out.project(agg.aggregateExpressions.zip(needs.outs).zipWithIndex.map {
+      case ((orig, RollOut.Day), _) => out.key(orig, "__day")
+      case ((orig, RollOut.Seg(srcCol)), _) =>
+        out.exact(orig, segIdOf(srcCol))
+      case ((orig, l: RollOut.Leaf), i) =>
+        // the workload's OWN output cast (sum(dec).cast(double) etc.),
+        // reproduced on the served value: the pre-cast values are
+        // equal. Otherwise a type mismatch (percentile over an int
+        // column vs the KLL double) refuses
+        if (l.outerCast)
+          out.attr(s"__out_$i").map(a => out.bind(orig, Cast(a, orig.dataType)))
+        else out.exact(orig, s"__out_$i")
+      case _ => None
+    })
   }
 
   /** RETENTION routing — the distinct-pair self-join cohort plan
@@ -1169,19 +1237,17 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
   private def tryRewriteRetention(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeRetention(agg).getOrElse(return None)
     if (needs.outs.isEmpty) return None
-    val candidates = cohortCandidates(agg, needs)
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cohortServe(agg, needs)
   }
 
-  /** Candidate serves for the retention-family matchers — a cohort
-    * plan whose pair set is built over an INNER EQUI-JOIN routes to a
+  /** The serve for the retention-family matchers — a cohort plan
+    * whose pair set is built over an INNER EQUI-JOIN routes to a
     * registered JOIN MV exactly like the rolling family (the MV's cube
     * is a Registration with the same partial columns; the join must be
     * exactly the registered one, in either side order). */
-  private def cohortCandidates(agg: Aggregate,
-      needs: CubeAdvisor.RetentionNeeds): Seq[(LogicalPlan, BigInt)] =
-    familyRegs(needs.path, needs.join).flatMap(reg =>
-      buildRetentionServe(agg, needs, reg).map((_, reg.cubeSize)))
+  private def cohortServe(agg: Aggregate,
+      needs: CubeAdvisor.RetentionNeeds): Option[LogicalPlan] =
+    cheapest(needs.path, needs.join)(buildRetentionServe(agg, needs, _))
 
   /** CUMULATIVE-distinct routing — the raw "lifetime uniques by day"
     * plan (distinct pairs ⋈ observed days on `d ≤ day`, recognized by
@@ -1198,8 +1264,7 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
   private def tryRewriteCumulative(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeCumulative(agg).getOrElse(return None)
     if (needs.outs.isEmpty) return None
-    val candidates = cohortCandidates(agg, needs)
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cohortServe(agg, needs)
   }
 
   /** FIRST-SEEN routing — the raw "new users per period" plan
@@ -1220,8 +1285,7 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
   private def tryRewriteFirstSeen(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeFirstSeen(agg).getOrElse(return None)
     if (needs.outs.isEmpty) return None
-    val candidates = cohortCandidates(agg, needs)
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cohortServe(agg, needs)
   }
 
   /** ENGAGEMENT-HISTOGRAM routing — the raw fixed-window L7/L28 plan
@@ -1238,8 +1302,7 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
   private def tryRewriteEngagement(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeEngagement(agg).getOrElse(return None)
     if (needs.outs.isEmpty) return None
-    val candidates = cohortCandidates(agg, needs)
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cohortServe(agg, needs)
   }
 
   /** RESURRECTED routing — growth accounting's fourth cell as users
@@ -1258,8 +1321,7 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
   private def tryRewriteResurrected(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeResurrected(agg).getOrElse(return None)
     if (needs.outs.isEmpty) return None
-    val candidates = cohortCandidates(agg, needs)
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cohortServe(agg, needs)
   }
 
   private def buildRetentionServe(
@@ -1268,65 +1330,32 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
       reg: CubeCatalog.Registration): Option[LogicalPlan] = {
     import org.apache.spark.sql.functions._
     import CubeAdvisor.RollOut
-    val cube = reg.cube
-    val cfg = cube.config
-    if (reg.cubeScanPath.isEmpty) return None
-    if (reg.origScanPath.contains(needs.path)) return None
-    if (cfg.dims.exists(_.id.startsWith("__"))) return None
+    val cfg = reg.cube.config
+    if (!servable(reg, needs.path)) return None
     // bitmap partials of a latched cube describe ever-inserted ids
-    if (cube.hasDeletes) return None
-    val dayDim = cfg.dims.collectFirst {
-      case TimeDim(id, p, "day") if p == needs.tsCol => id
-    }.getOrElse(return None)
-    val segIds: Seq[String] = needs.segments.map { s =>
-      cfg.dims.collectFirst {
-        case FieldDim(id, p) if p == s => id }.getOrElse(return None)
-    }
+    if (reg.cube.hasDeletes) return None
+    val dayDim = dayDimOf(cfg, needs.tsCol).getOrElse(return None)
+    val segIds: Seq[String] =
+      needs.segments.map(fieldDimOf(cfg, _).getOrElse(return None))
     val segIdOf: Map[String, String] = needs.segments.zip(segIds).toMap
     // the counted id needs a bitmap measure (plain integral or
     // dictionary-encoded — both exact)
     val bmId = cfg.allBitmaps.find(_.path == needs.idCol)
       .map(_.id).getOrElse(return None)
-    val spark = cube.aggregates.sparkSession
-    val cubeFrame = Bridge.ofRows(spark, reg.cubePlan)
-      .filter(col(CubeManager.CountCol) > 0)
-    // dim-value filters ("retention of CLICK users") restrict CELLS
-    // before the period collapse — exact because cells partition by
-    // the dimension: the filtered cells' union IS the filtered
-    // source's id set. A filter column that is not a cube dim refuses.
-    val filteredFrame = needs.filters.foldLeft(cubeFrame) {
-      case (f, (srcCol, lits)) =>
-        val dimId = cfg.dims.collectFirst {
-          case FieldDim(id, p) if p == srcCol => id
-        }.getOrElse(return None)
-        val vals = lits.map(l =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToScala(l.value, l.dataType))
-        f.filter(col(dimId).isin(vals: _*))
-    }
+    // the filtered cells' union IS the filtered source's id set
+    val filteredFrame = liveCells(reg, needs.filters).getOrElse(return None)
     val segCols = segIds.map(col)
-    // day-multiple buckets derive from the epoch-day number; calendar
-    // ordinals reproduce the user's exact year*12+month (etc.) values
-    // including their additive constant — both EXACT collapses of the
-    // cube's day-granular cells
-    val periodKey = (needs.calendar match {
-      case None =>
-        floor(datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-          .cast("long").cast("double") / needs.periodDays).cast("long")
-      case Some((g, off)) =>
-        val dd = col(dayDim).cast("date")
-        val base = g match {
-          case "month" => year(dd) * 12 + month(dd)
-          case "quarter" => year(dd) * 4 + quarter(dd)
-          case _ => year(dd)
-        }
-        (base.cast("long") + off).cast("long")
-    }).as("__p")
+    // day-multiple buckets and calendar ordinals (the user's exact
+    // values, additive constant included) are both EXACT collapses of
+    // the cube's day-granular cells
+    val periodKey = ServeKernels.periodKey(col(dayDim), needs.periodDays,
+      needs.calendar).as("__p")
     // one bitmap per (segment, period) — shard rows, if any, union in
     val per = filteredFrame
       .groupBy((segCols :+ periodKey): _*)
       .agg(graft.functions.Bitmap.unionAgg(col(bmId)).as("__bm"))
     val B = graft.functions.Bitmap
+    val emptyBm = ServeKernels.emptyBlob
     val served = needs.kind match {
       case "cumulative" =>
         // lifetime uniques: prefix-OR over the period bitmaps — the
@@ -1362,7 +1391,6 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
           .rowsBetween(
             org.apache.spark.sql.expressions.Window.unboundedPreceding,
             -1)
-        val emptyBm = lit(Array[Byte](0, 0, 0, 0)) // codec: zero blocks
         per.select((segCols ++ Seq(col("__p"),
           B.andNotCardinality(col("__bm"),
             coalesce(B.unionAgg(col("__bm")).over(w), emptyBm))
@@ -1413,7 +1441,6 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
           .rowsBetween(
             org.apache.spark.sql.expressions.Window.unboundedPreceding,
             -1)
-        val emptyBm = lit(Array[Byte](0, 0, 0, 0)) // codec: zero blocks
         val withPrefix = per.withColumn("__prefix",
           coalesce(B.unionAgg(col("__bm")).over(w), emptyBm))
         val prev = per.select((segCols ++ Seq(
@@ -1434,489 +1461,183 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
         val shift = if (k == "churned") -1 else 1
         val other = per.select((segCols ++ Seq(
           (col("__p") + shift).as("__p"), col("__bm").as("__obm"))): _*)
-        val emptyBm = lit(Array[Byte](0, 0, 0, 0)) // codec: zero blocks
         per.join(other, segIds :+ "__p", "left_outer")
           .select((segCols ++ Seq(col("__p"),
             B.andNotCardinality(col("__bm"),
               coalesce(col("__obm"), emptyBm)).as("__ret"))): _*)
           .filter(col("__ret") >= 1)
     }
-    val outPlan = served.queryExecution.optimizedPlan
-    val servedAttr: Map[String, Attribute] =
-      outPlan.output.map(a => a.name -> a).toMap
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val proj: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(needs.outs).map {
-        case (orig, RollOut.Day) =>
-          if (orig.dataType != LongType && orig.dataType != IntegerType)
-            return None
-          val p = servedAttr.getOrElse("__p", return None)
-          val child: Expression =
-            if (p.dataType == orig.dataType) p else Cast(p, orig.dataType)
-          Alias(child, orig.name)(exprId = orig.exprId)
-        case (orig, RollOut.Seg(srcCol)) =>
-          val a = servedAttr.getOrElse(segIdOf(srcCol), return None)
-          if (a.dataType != orig.dataType) return None
-          Alias(a, orig.name)(exprId = orig.exprId)
-        case (orig, _: RollOut.Leaf) =>
-          val a = servedAttr.getOrElse("__ret", return None)
-          if (a.dataType != orig.dataType) return None
-          Alias(a, orig.name)(exprId = orig.exprId)
-        case _ => return None
-      }
-    Some(Project(proj, outPlan))
+    val out = new Served(served)
+    out.project(agg.aggregateExpressions.zip(needs.outs).map {
+      case (orig, RollOut.Day) => out.key(orig, "__p")
+      case (orig, RollOut.Seg(srcCol)) => out.exact(orig, segIdOf(srcCol))
+      case (orig, _: RollOut.Leaf) => out.exact(orig, "__ret")
+      case _ => None
+    })
   }
 
   /** COHORT-VALUE routing — the raw LTV matrix (per-(id, period) money
     * sums joined to a per-id min-period frame, re-aggregated per
     * (cohort, age) — recognized by
-    * [[CubeAdvisor.analyzeCohortValue]]) rewritten to the weight-map
-    * algebra over a registered `weighted`-measured day-dimmed cube:
-    * per-period maps pointwise-ADD to the raw per-(id, period) sums
-    * (lossless, exact scaled longs), first-seen sets come from the
-    * maps' own key bitmaps via the prefix-ANDNOT walk, and each
-    * (cohort, offset) cell is one countIn/sumIn merge-walk — the
-    * [[CubeService.getCohortValue]] serve. The raw form shuffles every
-    * (id, period, value) group TWICE (the min reduce, then the
-    * join + recount); the serve is one pass to |periods| one-row maps
-    * plus the |periods|²/2 pair walk over cube-derived frames. The
-    * routed decimal is rebuilt EXACTLY from the scaled-long cell sum
-    * (MakeDecimal at the raw sum's precision/scale — every stored
-    * weight is an integral count of hundredths, so the values are
-    * bit-equal). Weight maps net signed folds, so — uniquely among
-    * the per-id routes — a delete-latched cube still serves. */
+    * [[CubeAdvisor.analyzeCohortValue]]) served by
+    * [[ServeKernels.cohortValue]], the [[CubeService.getCohortValue]]
+    * kernel, over a registered `weighted`-measured day-dimmed cube.
+    * The raw form shuffles every (id, period, value) group TWICE (the
+    * min reduce, then the join + recount); the serve explodes the
+    * merged per-period maps. The routed decimal is rebuilt EXACTLY
+    * from the scaled-long cell sum. Weight maps net signed folds, so
+    * — uniquely among the per-id routes — a delete-latched cube still
+    * serves. */
   private def tryRewriteCohortValue(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeCohortValue(agg).getOrElse(return None)
-    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
-      buildCohortValueServe(agg, needs, reg).map((_, reg.cubeSize)))
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cheapest(needs.path, needs.join)(buildCohortValueServe(agg, needs, _))
   }
 
   private def buildCohortValueServe(
       agg: Aggregate,
       needs: CubeAdvisor.CohortValueNeeds,
       reg: CubeCatalog.Registration): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     import CubeAdvisor.CVOut
-    val cube = reg.cube
-    val cfg = cube.config
-    if (reg.cubeScanPath.isEmpty) return None
-    if (reg.origScanPath.contains(needs.path)) return None
-    if (cfg.dims.exists(_.id.startsWith("__"))) return None
+    val cfg = reg.cube.config
     // NO hasDeletes refusal: weight maps net signed folds exactly (the
     // one per-id family that keeps serving through deletes)
-    val dayDim = cfg.dims.collectFirst {
-      case TimeDim(id, p, "day") if p == needs.tsCol => id
-    }.getOrElse(return None)
+    if (!servable(reg, needs.path)) return None
+    val dayDim = dayDimOf(cfg, needs.tsCol).getOrElse(return None)
     val wId = cfg.weighted.find(m =>
         m.idPath == needs.idCol && m.weightPath == needs.weightCol)
       .map(_.id).getOrElse(return None)
-    val spark = cube.aggregates.sparkSession
-    val cubeFrame = Bridge.ofRows(spark, reg.cubePlan)
-      .filter(col(CubeManager.CountCol) > 0)
-    val filteredFrame = needs.filters.foldLeft(cubeFrame) {
-      case (f, (srcCol, lits)) =>
-        val dimId = cfg.dims.collectFirst {
-          case FieldDim(id, p) if p == srcCol => id
-        }.getOrElse(return None)
-        val vals = lits.map(l =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToScala(l.value, l.dataType))
-        f.filter(col(dimId).isin(vals: _*))
-    }
-    val periodKey = (needs.calendar match {
-      case None =>
-        floor(datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-          .cast("long").cast("double") / needs.periodDays).cast("long")
-      case Some((g, off)) =>
-        val dd = col(dayDim).cast("date")
-        val base = g match {
-          case "month" => year(dd) * 12 + month(dd)
-          case "quarter" => year(dd) * 4 + quarter(dd)
-          case _ => year(dd)
-        }
-        (base.cast("long") + off).cast("long")
-    }).as("__p")
-    val W = graft.functions.WeightMap
-    // EXPLODE-ENTRIES SERVE (optimization round 18 — the
-    // CubeService.cohortValueFrom rewrite, routed form): plain
-    // aggregates over the exploded (period, id, cnt, w) entry rows
-    // replace the |periods|²/2 single-task blob pair walk. Net per
-    // (period, id) = the pointwise map addition; PRESENT = net cnt > 0
-    // (the WeightMapKeyBitmap rule); first-seen = min present period
-    // (the prefix-ANDNOT fixpoint, with the old nulls-first window
-    // semantics reproduced: any null-period presence excludes the id);
-    // each (cohort, offset) cell = (count, Σ net scaled weight) of the
-    // cohort's ids present there. Row set identical: a cell exists
-    // exactly when ≥ 1 cohort id was active at that offset.
-    // MERGE-THEN-EXPLODE (optimization round 19, the cohortValueFrom
-    // rationale): merge the maps per (period [, shard]) first — the
-    // pointwise addition IS the net, map-side partial blob merges —
-    // then explode behind the exchange (parallel across periods, not
-    // inside the single-file snapshot scan task); merged entries are
-    // already the net (cnt, w) per id, so no second aggregate.
-    val shardCols =
-      if (cfg.bitmapShardBits > 0) Seq(col(CubeManager.ShardCol)) else Nil
-    val net = filteredFrame
-      .groupBy((Seq(periodKey) ++ shardCols): _*)
-      .agg(W.mergeAgg(col(wId)).as("__wm"))
-      .select(col("__p"), explode_outer(W.entries(col("__wm"))).as("__e"))
-      .filter(col("__e").isNotNull && col("__e.cnt") > 0)
-      .select(col("__p"), col("__e.id").as("__id"), col("__e.w").as("__w"))
-    val firstSeen = net
-      .groupBy(col("__id"))
-      .agg(min(col("__p")).as("__cohort"),
-        max(col("__p").isNull).as("__hadNull"))
-      .filter(!col("__hadNull") && col("__cohort").isNotNull)
-      .drop("__hadNull")
-    val pairs = net.join(firstSeen, Seq("__id"))
-      .groupBy(col("__cohort"), col("__p").as("__p2"))
-      .agg(count(lit(1)).as("__a"), sum(col("__w")).as("__v"))
-      .select(col("__cohort"), col("__p2"),
-        (col("__p2") - col("__cohort")).as("__off"),
-        col("__a"), col("__v"))
-    val outPlan = pairs.queryExecution.optimizedPlan
-    val servedAttr: Map[String, Attribute] =
-      outPlan.output.map(a => a.name -> a).toMap
-    import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType}
-    def keyed(orig: NamedExpression, name: String): Option[NamedExpression] = {
-      if (orig.dataType != LongType && orig.dataType != IntegerType)
-        return None
-      val a = servedAttr.getOrElse(name, return None)
-      val child: Expression =
-        if (a.dataType == orig.dataType) a else Cast(a, orig.dataType)
-      Some(Alias(child, orig.name)(exprId = orig.exprId))
-    }
-    val proj: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(needs.outs).map {
-        case (orig, CVOut.Cohort) =>
-          keyed(orig, "__cohort").getOrElse(return None)
-        case (orig, CVOut.Period) =>
-          keyed(orig, "__p2").getOrElse(return None)
-        case (orig, CVOut.Offset) =>
-          keyed(orig, "__off").getOrElse(return None)
-        case (orig, CVOut.Active) =>
-          val a = servedAttr.getOrElse("__a", return None)
-          if (orig.dataType != LongType) return None
-          Alias(a, orig.name)(exprId = orig.exprId)
-        case (orig, CVOut.Value) =>
-          // rebuild the decimal from the scaled-long sum at the raw
-          // sum's own precision/scale; reproduce the user's outer cast
-          val v = servedAttr.getOrElse("__v", return None)
-          val (sumType, outerCast) = orig match {
-            case al: Alias => al.child match {
-              case Cast(inner, t, _, _) => (inner.dataType, Some(t))
-              case other => (other.dataType, None)
-            }
-            case _ => return None
-          }
-          val dec = sumType match {
-            case dt: DecimalType if dt.scale == 2 =>
-              org.apache.spark.sql.catalyst.expressions
-                .MakeDecimal(v, dt.precision, 2)
-            case _ => return None
-          }
-          val child: Expression = outerCast match {
-            case Some(t) => Cast(dec, t)
-            case None => dec
-          }
-          Alias(child, orig.name)(exprId = orig.exprId)
-      }
-    Some(Project(proj, outPlan))
+    val cells = ServeKernels.cohortValue(
+      liveCells(reg, needs.filters).getOrElse(return None),
+      ServeKernels.periodKey(col(dayDim), needs.periodDays, needs.calendar),
+      wId, Nil, cfg.bitmapShardBits > 0).cells
+    val out = new Served(
+      cells.withColumn("period", col("cohort") + col("offset")))
+    out.project(agg.aggregateExpressions.zip(needs.outs).map {
+      case (orig, CVOut.Cohort) => out.key(orig, "cohort")
+      case (orig, CVOut.Period) => out.key(orig, "period")
+      case (orig, CVOut.Offset) => out.key(orig, "offset")
+      case (orig, CVOut.Active) => out.exact(orig, "__a")
+      case (orig, CVOut.Value) => out.money(orig, "__v")
+    })
   }
 
   /** COHORT-MATRIX routing — the count-distinct retention heatmap
     * (every BI tool's cohort triangle: distinct (id, period) activity
     * pairs joined to a per-id min-period frame, count(DISTINCT id)
     * per (cohort, offset) — recognized by
-    * [[CubeAdvisor.analyzeCohortMatrix]]) rewritten to the bitmap
-    * algebra of [[CubeService.getCohortMatrix]] over a registered
-    * day-dimmed bitmap cube: new_w = P_w ANDNOT prefixOR(P_{<w}) IS
-    * the min frame's cohort partition, and each (cohort, offset)
-    * cell's |new_w ∩ P_{w+k}| is the join-then-recount. The raw form
+    * [[CubeAdvisor.analyzeCohortMatrix]]) served by
+    * [[ServeKernels.cohortMatrix]], the [[CubeService.getCohortMatrix]]
+    * kernel, over a registered day-dimmed bitmap cube. The raw form
     * shuffles every (id, period) pair TWICE per refresh (the min
-    * reduce, then the join + distinct recount); the serve is one pass
-    * to |periods| one-row bitmaps, one window pass for the new-sets,
-    * then the |periods|²/2 pair walk over cube-derived one-row
-    * frames. The ≥ 1 filter reproduces the raw row set exactly
-    * (a (cohort, offset) group exists iff some cohort id was active
-    * at that offset; offset 0 is always the full cohort). Bitmap
-    * partials of a latched cube describe ever-inserted ids, so
-    * deletes refuse — the [[buildRetentionServe]] convention. */
+    * reduce, then the join + distinct recount); the serve explodes the
+    * merged per-period bitmaps. Both emit a (cohort, offset) row
+    * exactly when some cohort id was active at that offset. Bitmap
+    * partials of a latched cube describe ever-inserted ids, so deletes
+    * refuse — the [[buildRetentionServe]] convention. */
   private def tryRewriteCohortMatrix(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeCohortMatrix(agg).getOrElse(return None)
-    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
-      buildCohortMatrixServe(agg, needs, reg).map((_, reg.cubeSize)))
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cheapest(needs.path, needs.join)(buildCohortMatrixServe(agg, needs, _))
   }
 
   private def buildCohortMatrixServe(
       agg: Aggregate,
       needs: CubeAdvisor.CohortMatrixNeeds,
       reg: CubeCatalog.Registration): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     import CubeAdvisor.CVOut
-    val cube = reg.cube
-    val cfg = cube.config
-    if (reg.cubeScanPath.isEmpty) return None
-    if (reg.origScanPath.contains(needs.path)) return None
-    if (cfg.dims.exists(_.id.startsWith("__"))) return None
+    val cfg = reg.cube.config
+    if (!servable(reg, needs.path)) return None
     // bitmap partials of a latched cube describe ever-inserted ids
-    if (cube.hasDeletes) return None
-    val dayDim = cfg.dims.collectFirst {
-      case TimeDim(id, p, "day") if p == needs.tsCol => id
-    }.getOrElse(return None)
+    if (reg.cube.hasDeletes) return None
+    val dayDim = dayDimOf(cfg, needs.tsCol).getOrElse(return None)
     // the counted id needs a bitmap measure (plain integral or
     // dictionary-encoded — both exact; the served matrix is id-free,
     // so the dense dictionary ids never need translating back)
     val bmId = cfg.allBitmaps.find(_.path == needs.idCol)
       .map(_.id).getOrElse(return None)
-    val spark = cube.aggregates.sparkSession
-    val cubeFrame = Bridge.ofRows(spark, reg.cubePlan)
-      .filter(col(CubeManager.CountCol) > 0)
-    val filteredFrame = needs.filters.foldLeft(cubeFrame) {
-      case (f, (srcCol, lits)) =>
-        val dimId = cfg.dims.collectFirst {
-          case FieldDim(id, p) if p == srcCol => id
-        }.getOrElse(return None)
-        val vals = lits.map(l =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToScala(l.value, l.dataType))
-        f.filter(col(dimId).isin(vals: _*))
-    }
-    val periodKey = (needs.calendar match {
-      case None =>
-        floor(datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-          .cast("long").cast("double") / needs.periodDays).cast("long")
-      case Some((g, off)) =>
-        val dd = col(dayDim).cast("date")
-        val base = g match {
-          case "month" => year(dd) * 12 + month(dd)
-          case "quarter" => year(dd) * 4 + quarter(dd)
-          case _ => year(dd)
-        }
-        (base.cast("long") + off).cast("long")
-    }).as("__p")
-    val B = graft.functions.Bitmap
-    // EXPLODE-ENTRIES SERVE (optimization round 18 — the
-    // CubeService.cohortFrom rewrite, routed form): plain aggregates
-    // over the exploded (period, id) activity rows replace the
-    // |periods|²/2 single-task blob pair walk. First-seen = min period
-    // per id (the prefix-ANDNOT fixpoint, old nulls-first semantics
-    // reproduced: any null-period activity excludes the id); each
-    // (cohort, offset) cell = |{id : first = cohort, active at
-    // offset}|. Row set identical: a cell exists exactly when ≥ 1
-    // cohort id was active at that offset.
-    // MERGE-THEN-EXPLODE (optimization round 19, the cohortValueFrom
-    // rationale): union the bitmaps per (period [, shard]) first, then
-    // explode behind the exchange — parallel across periods, already
-    // deduped (ids are disjoint across shards), no .distinct() shuffle
-    // of exploded rows.
-    val shardCols =
-      if (cfg.bitmapShardBits > 0) Seq(col(CubeManager.ShardCol)) else Nil
-    val acts = filteredFrame
-      .groupBy((Seq(periodKey) ++ shardCols): _*)
-      .agg(B.unionAgg(col(bmId)).as("__bm"))
-      .select(col("__p"), explode_outer(B.ids(col("__bm"))).as("__id"))
-      .filter(col("__id").isNotNull)
-    val firstSeen = acts
-      .groupBy(col("__id"))
-      .agg(min(col("__p")).as("__cohort"),
-        max(col("__p").isNull).as("__hadNull"))
-      .filter(!col("__hadNull") && col("__cohort").isNotNull)
-      .drop("__hadNull")
-    val pairs = acts.join(firstSeen, Seq("__id"))
-      .groupBy(col("__cohort"), col("__p").as("__p2"))
-      .agg(count(lit(1)).as("__a"))
-      .select(col("__cohort"), col("__p2"),
-        (col("__p2") - col("__cohort")).as("__off"), col("__a"))
-    val outPlan = pairs.queryExecution.optimizedPlan
-    val servedAttr: Map[String, Attribute] =
-      outPlan.output.map(a => a.name -> a).toMap
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    def keyed(orig: NamedExpression, name: String): Option[NamedExpression] = {
-      if (orig.dataType != LongType && orig.dataType != IntegerType)
-        return None
-      val a = servedAttr.getOrElse(name, return None)
-      val child: Expression =
-        if (a.dataType == orig.dataType) a else Cast(a, orig.dataType)
-      Some(Alias(child, orig.name)(exprId = orig.exprId))
-    }
-    val proj: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(needs.outs).map {
-        case (orig, CVOut.Cohort) =>
-          keyed(orig, "__cohort").getOrElse(return None)
-        case (orig, CVOut.Period) =>
-          keyed(orig, "__p2").getOrElse(return None)
-        case (orig, CVOut.Offset) =>
-          keyed(orig, "__off").getOrElse(return None)
-        case (orig, CVOut.Active) =>
-          val a = servedAttr.getOrElse("__a", return None)
-          if (a.dataType != orig.dataType) return None
-          Alias(a, orig.name)(exprId = orig.exprId)
-        case _ => return None
-      }
-    Some(Project(proj, outPlan))
+    val cells = ServeKernels.cohortMatrix(
+      liveCells(reg, needs.filters).getOrElse(return None),
+      ServeKernels.periodKey(col(dayDim), needs.periodDays, needs.calendar),
+      bmId, Nil, cfg.bitmapShardBits > 0).cells
+    val out = new Served(
+      cells.withColumn("period", col("cohort") + col("offset")))
+    out.project(agg.aggregateExpressions.zip(needs.outs).map {
+      case (orig, CVOut.Cohort) => out.key(orig, "cohort")
+      case (orig, CVOut.Period) => out.key(orig, "period")
+      case (orig, CVOut.Offset) => out.key(orig, "offset")
+      case (orig, CVOut.Active) => out.exact(orig, "retained")
+      case _ => None
+    })
   }
 
   /** LEADERBOARD routing — the raw per-period top-k-by-value plan
     * ("top spenders this week": ROW_NUMBER over per-(id, period) money
     * sums, filtered to rank ≤ k — recognized by
-    * [[CubeAdvisor.analyzeTopSpenders]]) rewritten to the
-    * [[CubeService.getTopSpenders]] serve over a registered
-    * `weighted`-measured day-dimmed cube: per-period maps
-    * pointwise-ADD to the raw per-(id, period) sums, a bounded
-    * O(|map|·k) selection emits every boundary-tying candidate
-    * ([[graft.functions.WeightMapTopK]]), and a re-rank over the
-    * ≤ (|shards|·k + ties) candidate rows applies EXACTLY the raw
-    * plan's deterministic (value DESC, id ASC) tiebreak. Dict-encoded
-    * ids translate back through the append-only dictionary BEFORE
-    * ranking (broadcast-dict-sized join over candidate rows), so ties
-    * break on the key the user sees; integral ids re-rank on the dense
-    * key, whose cast is order-preserving. The replaced node is the
+    * [[CubeAdvisor.analyzeTopSpenders]]) served by
+    * [[ServeKernels.topSpenders]], the [[CubeService.getTopSpenders]]
+    * kernel, over a registered `weighted`-measured day-dimmed cube:
+    * the same deterministic (value DESC, id ASC) tiebreak, on the
+    * visible key of a dictionary-encoded id. The replaced node is the
     * FILTER (rank ≤ k) — its whole output row (id, period, value,
-    * rank) rebinds with original exprIds, value rebuilt exactly from
-    * the scaled-long sum (MakeDecimal at the raw sum's own
-    * precision/scale). The raw plan shuffles every (id, period, value)
-    * group, then sorts per period; the serve reads |periods| one-row
-    * cube-derived maps. Weight maps net signed folds, so a
-    * delete-latched cube still serves (a refunded id drops down or off
-    * the board, matching a recompute). */
+    * rank) rebinds with original exprIds, the value rebuilt exactly
+    * from the scaled-long sum. The raw plan shuffles every (id,
+    * period, value) group, then sorts per period; the serve reads
+    * |periods| one-row cube-derived maps. Weight maps net signed
+    * folds, so a delete-latched cube still serves (a refunded id drops
+    * down or off the board, matching a recompute). */
   private def tryRewriteTopSpenders(f: Filter): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeTopSpenders(f).getOrElse(return None)
-    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
-      buildTopSpendersServe(f, needs, reg).map((_, reg.cubeSize)))
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cheapest(needs.path, needs.join)(buildTopSpendersServe(f, needs, _))
   }
 
   private def buildTopSpendersServe(
       f: Filter,
       needs: CubeAdvisor.TopSpendersNeeds,
       reg: CubeCatalog.Registration): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     val cube = reg.cube
     val cfg = cube.config
-    if (reg.cubeScanPath.isEmpty) return None
-    if (reg.origScanPath.contains(needs.path)) return None
-    if (cfg.dims.exists(_.id.startsWith("__"))) return None
     // no hasDeletes refusal: weight maps net signed folds exactly
-    val dayDim = cfg.dims.collectFirst {
-      case TimeDim(id, p, "day") if p == needs.tsCol => id
-    }.getOrElse(return None)
+    if (!servable(reg, needs.path)) return None
+    val dayDim = dayDimOf(cfg, needs.tsCol).getOrElse(return None)
     val wm = cfg.weighted.find(m =>
         m.idPath == needs.idCol && m.weightPath == needs.weightCol)
       .getOrElse(return None)
-    val spark = cube.aggregates.sparkSession
-    val cubeFrame = Bridge.ofRows(spark, reg.cubePlan)
-      .filter(col(CubeManager.CountCol) > 0)
-    val filteredFrame = needs.filters.foldLeft(cubeFrame) {
-      case (fr, (srcCol, lits)) =>
-        val dimId = cfg.dims.collectFirst {
-          case FieldDim(id, p) if p == srcCol => id
-        }.getOrElse(return None)
-        val vals = lits.map(l =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToScala(l.value, l.dataType))
-        fr.filter(col(dimId).isin(vals: _*))
-    }
-    val periodKey = (needs.calendar match {
-      case None =>
-        floor(datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-          .cast("long").cast("double") / needs.periodDays).cast("long")
-      case Some((g, off)) =>
-        val dd = col(dayDim).cast("date")
-        val base = g match {
-          case "month" => year(dd) * 12 + month(dd)
-          case "quarter" => year(dd) * 4 + quarter(dd)
-          case _ => year(dd)
-        }
-        (base.cast("long") + off).cast("long")
-    }).as("__p")
-    val W = graft.functions.WeightMap
     // segments: each extra plain grouping must be a (non-time) cube
-    // dimension — the per-(segment, period) maps partition exactly
-    // like the verb's segmentBy
+    // dimension named apart from the board's columns — the
+    // per-(segment, period) maps partition exactly like the verb's
+    // segmentBy
     val segDims: Seq[(org.apache.spark.sql.catalyst.expressions.ExprId,
       String)] = needs.segments.map { case (oid, srcCol) =>
-      val dimId = cfg.dims.collectFirst {
-        case FieldDim(id, p) if p == srcCol => id
-      }.getOrElse(return None)
-      oid -> dimId
+      oid -> fieldDimOf(cfg, srcCol).getOrElse(return None)
     }
-    val segCols = segDims.map { case (_, d) => col(d) }
-    // sharded cubes select per shard first (shards partition the id
-    // space, so the global top-k is inside the union of per-shard
-    // top-ks); the ≤ (|shards|·k + ties) survivors re-rank below
-    val sharded = cfg.bitmapShardBits > 0
-    val shardCols =
-      if (sharded) Seq(col(CubeManager.ShardCol)) else Seq.empty
-    val segSel = segDims.map { case (_, d) => col(d) }
-    val per = filteredFrame
-      .groupBy((segCols ++ Seq(periodKey) ++ shardCols): _*)
-      .agg(W.mergeAgg(col(wm.id)).as("__wm"))
-      .select((segSel ++ Seq(col("__p"),
-        explode(W.topK(col("__wm"), needs.k)).as("__e"))): _*)
-      .select((segSel ++ Seq(col("__p"), col("__e.id").as("__did"),
-        col("__e.w").as("__w"))): _*)
-    // dict-encoded ids translate to the VISIBLE key before ranking
-    val candidates = cfg.dictBitmaps.find(_.path == wm.idPath) match {
-      case Some(d) =>
-        val dict = cube.dicts.getOrElse(d.id, return None)
-          .select(col("__id"), col("__key"))
-        per.join(broadcast(dict), per("__did") === dict("__id"))
-          .select((segSel ++ Seq(col("__p"),
-            col("__key").as("__vid"), col("__w"))): _*)
-      case None =>
-        if (!needs.integralId) return None
-        per.select((segSel ++ Seq(col("__p"),
-          col("__did").as("__vid"), col("__w"))): _*)
+    if (segDims.exists(d => Seq("period", "id", "rank").contains(d._2)))
+      return None
+    // dict-encoded ids translate to the VISIBLE key before ranking;
+    // integral ids re-rank on the dense key, whose cast is
+    // order-preserving
+    val dict = cfg.dictBitmaps.find(_.path == wm.idPath) match {
+      case Some(d) => Some(cube.dicts.getOrElse(d.id, return None))
+      case None => if (needs.integralId) None else return None
     }
-    val win = org.apache.spark.sql.expressions.Window
-      .partitionBy((segSel :+ col("__p")): _*)
-      .orderBy(col("__w").desc, col("__vid").asc)
-    val board = candidates
-      .withColumn("__rank", row_number().over(win))
-      .filter(col("__rank") <= needs.k)
-    val outPlan = board.queryExecution.optimizedPlan
-    val servedAttr: Map[String, Attribute] =
-      outPlan.output.map(a => a.name -> a).toMap
-    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val out = new Served(ServeKernels.topSpenders(
+      liveCells(reg, needs.filters).getOrElse(return None),
+      ServeKernels.periodKey(col(dayDim), needs.periodDays, needs.calendar),
+      wm.id, dict, needs.k, segDims.map(_._2), cfg.bitmapShardBits > 0))
     // rebind the Filter's WHOLE output row by exprId: the window
     // child's (id, period, value) plus the rank attr
-    val proj: Seq[NamedExpression] = f.output.map { orig =>
-      val child: Expression =
-        if (orig.exprId == needs.pOut) {
-          if (orig.dataType != LongType && orig.dataType != IntegerType)
-            return None
-          val p = servedAttr.getOrElse("__p", return None)
-          if (p.dataType == orig.dataType) p else Cast(p, orig.dataType)
-        } else if (orig.exprId == needs.idOut) {
-          val v = servedAttr.getOrElse("__vid", return None)
-          if (v.dataType == orig.dataType) v
-          else if (needs.integralId) Cast(v, orig.dataType)
-          else return None
-        } else if (orig.exprId == needs.wOut) {
-          val v = servedAttr.getOrElse("__w", return None)
-          orig.dataType match {
-            case dt: DecimalType if dt.scale == 2 =>
-              org.apache.spark.sql.catalyst.expressions
-                .MakeDecimal(v, dt.precision, 2)
-            case _ => return None
-          }
-        } else if (orig.exprId == needs.rankOut) {
-          val r = servedAttr.getOrElse("__rank", return None)
-          if (r.dataType != orig.dataType) return None
-          r
-        } else segDims.find(_._1 == orig.exprId) match {
-          case Some((_, dimId)) =>
-            val s = servedAttr.getOrElse(dimId, return None)
-            if (s.dataType != orig.dataType) return None
-            s
-          case None => return None
-        }
-      Alias(child, orig.name)(exprId = orig.exprId)
-    }
-    Some(Project(proj, outPlan))
+    out.project(f.output.map { orig =>
+      if (orig.exprId == needs.pOut) out.key(orig, "period")
+      else if (orig.exprId == needs.idOut) out.attr("id").flatMap(v =>
+        if (v.dataType == orig.dataType) Some(out.bind(orig, v))
+        else if (needs.integralId) Some(out.bind(orig, Cast(v, orig.dataType)))
+        else None)
+      else if (orig.exprId == needs.wOut) out.money(orig, "__w")
+      else if (orig.exprId == needs.rankOut) out.exact(orig, "rank")
+      else segDims.find(_._1 == orig.exprId)
+        .flatMap { case (_, dimId) => out.exact(orig, dimId) }
+    })
   }
 
   /** VALUE-BRIDGE routing — the raw revenue growth-accounting terms
@@ -1939,9 +1660,7 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     * the routed serve reads |periods| one-row cube-derived maps. */
   private def tryRewriteValueBridge(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeValueBridge(agg).getOrElse(return None)
-    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
-      buildValueBridgeServe(agg, needs, reg).map((_, reg.cubeSize)))
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cheapest(needs.path, needs.join)(buildValueBridgeServe(agg, needs, _))
   }
 
   private def buildValueBridgeServe(
@@ -1950,40 +1669,12 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
       reg: CubeCatalog.Registration): Option[LogicalPlan] = {
     import org.apache.spark.sql.functions._
     import CubeAdvisor.VBOut
-    val cube = reg.cube
-    val cfg = cube.config
-    if (reg.cubeScanPath.isEmpty) return None
-    if (reg.origScanPath.contains(needs.path)) return None
-    if (cfg.dims.exists(_.id.startsWith("__"))) return None
-    val dayDim = cfg.dims.collectFirst {
-      case TimeDim(id, p, "day") if p == needs.tsCol => id
-    }.getOrElse(return None)
-    val spark = cube.aggregates.sparkSession
-    val cubeFrame = Bridge.ofRows(spark, reg.cubePlan)
-      .filter(col(CubeManager.CountCol) > 0)
-    val filteredFrame = needs.filters.foldLeft(cubeFrame) {
-      case (fr, (srcCol, lits)) =>
-        val dimId = cfg.dims.collectFirst {
-          case FieldDim(id, p) if p == srcCol => id
-        }.getOrElse(return None)
-        val vals = lits.map(l =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .convertToScala(l.value, l.dataType))
-        fr.filter(col(dimId).isin(vals: _*))
-    }
-    val periodKey = (needs.calendar match {
-      case None =>
-        floor(datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-          .cast("long").cast("double") / needs.periodDays).cast("long")
-      case Some((g, off)) =>
-        val dd = col(dayDim).cast("date")
-        val base = g match {
-          case "month" => year(dd) * 12 + month(dd)
-          case "quarter" => year(dd) * 4 + quarter(dd)
-          case _ => year(dd)
-        }
-        (base.cast("long") + off).cast("long")
-    }).as("__p")
+    val cfg = reg.cube.config
+    if (!servable(reg, needs.path)) return None
+    val dayDim = dayDimOf(cfg, needs.tsCol).getOrElse(return None)
+    val filteredFrame = liveCells(reg, needs.filters).getOrElse(return None)
+    val periodKey = ServeKernels.periodKey(col(dayDim), needs.periodDays,
+      needs.calendar).as("__p")
     val W = graft.functions.WeightMap
     val B = graft.functions.Bitmap
     // NULL-PERIOD CONVENTION (documented): every routed bridge term
@@ -2075,7 +1766,7 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
           .groupBy(col("__p")).agg(sum(col("__w")).as("__vl"))
       case "anti" =>
         val per = mapsFrame().getOrElse(return None)
-        val emptyBlob = lit(Array[Byte](0, 0, 0, 0))
+        val emptyBlob = ServeKernels.emptyBlob
         val other = per.select(col("__p").as("__po"),
           col("__kbm").as("__okbm"))
         per.join(other, col("__po") === col("__p") + lit(needs.adj),
@@ -2110,337 +1801,107 @@ object CubeRewriteRule extends Rule[LogicalPlan] {
     val labeled =
       if (needs.pShift == 0L) served
       else served.withColumn("__p", col("__p") + lit(needs.pShift))
-    val outPlan = labeled.queryExecution.optimizedPlan
-    val servedAttr: Map[String, Attribute] =
-      outPlan.output.map(a => a.name -> a).toMap
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    def money(orig: NamedExpression, name: String): Option[NamedExpression] = {
-      // rebuild the raw sum's decimal from the served value (a scaled
-      // long from the maps, a narrower exact decimal from the measure
-      // partials), reproducing the user's outer cast
-      val (sumType, outerCast) = orig match {
-        case al: Alias => al.child match {
-          case Cast(inner, t, _, _) => (inner.dataType, Some(t))
-          case other2 => (other2.dataType, None)
-        }
-        case _ => return None
-      }
-      val dec: Expression = sumType match {
-        case dt: DecimalType if dt.scale == 2 =>
-          servedAttr.get(name) match {
-            case Some(v) if v.dataType == LongType =>
-              org.apache.spark.sql.catalyst.expressions
-                .MakeDecimal(v, dt.precision, 2)
-            case Some(v) if v.dataType.isInstanceOf[DecimalType] =>
-              val vd = v.dataType.asInstanceOf[DecimalType]
-              if (vd.scale != 2 || vd.precision > dt.precision)
-                return None
-              if (vd == dt) v else Cast(v, dt)
-            case _ => return None
-          }
-        case _ => return None
-      }
-      val child: Expression = outerCast match {
-        case Some(t) => Cast(dec, t)
-        case None => dec
-      }
-      Some(Alias(child, orig.name)(exprId = orig.exprId))
-    }
-    val valueCol =
-      if (servedAttr.contains("__vl")) "__vl" else "__vdec"
-    val proj: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(needs.outs).map {
-        case (orig, VBOut.Period) =>
-          if (orig.dataType != LongType && orig.dataType != IntegerType)
-            return None
-          val p = servedAttr.getOrElse("__p", return None)
-          val child: Expression =
-            if (p.dataType == orig.dataType) p else Cast(p, orig.dataType)
-          Alias(child, orig.name)(exprId = orig.exprId)
-        case (orig, VBOut.Value) =>
-          money(orig, valueCol).getOrElse(return None)
-        case (orig, VBOut.Expansion) =>
-          money(orig, "__exp").getOrElse(return None)
-        case (orig, VBOut.Contraction) =>
-          money(orig, "__con").getOrElse(return None)
-      }
-    Some(Project(proj, outPlan))
+    val out = new Served(labeled)
+    // the value is a scaled long from the maps or a narrower exact
+    // decimal from the measure partials
+    val valueCol = if (out.attr("__vl").isDefined) "__vl" else "__vdec"
+    out.project(agg.aggregateExpressions.zip(needs.outs).map {
+      case (orig, VBOut.Period) => out.key(orig, "__p")
+      case (orig, VBOut.Value) => out.money(orig, valueCol)
+      case (orig, VBOut.Expansion) => out.money(orig, "__exp")
+      case (orig, VBOut.Contraction) => out.money(orig, "__con")
+    })
   }
 
   /** FUNNEL routing — the min-join conversion-chain plan ("users who
     * completed view→click→purchase in order, cumulative by period",
-    * recognized by [[CubeAdvisor.analyzeFunnel]]) rewritten to the
-    * funnel CASCADE over a registered day+step-dimmed bitmap cube:
-    * C_1 = prefixOR(B_1), C_k = prefixOR(B_k ∩ C_{k−1}), converted at
-    * p = |C_K[p]| — by the induction documented at
-    * [[CubeService.getFunnel]], exactly the min-conversion-time
-    * recursion the raw chain computes. Row domain: the raw plan inner-
-    * joins the source's observed periods against `t_K ≤ p` and groups,
-    * so it emits a row exactly for observed periods with ≥ 1
-    * converted id — the serve's all-periods grid + a ≥ 1 filter
-    * reproduces it. At scale the raw chain is K joins over the
-    * source's pairs PLUS a quadratic period join (every period
-    * re-scans all conversion times); the serve is one pass over
-    * cube-sized partials + K incremental window passes over the
-    * |periods| frame. Sharded cubes cascade per shard (shards
-    * partition the id space; per-shard converted counts ADD).
-    * Delete-latched cubes refuse — bitmap partials are insert-only. */
+    * recognized by [[CubeAdvisor.analyzeFunnel]]) served by the
+    * [[ServeKernels.funnelCascade]] of [[CubeService.getFunnel]] over
+    * a registered day+step-dimmed bitmap cube: by the induction
+    * documented there, |C_K[p]| is exactly the min-conversion-time
+    * recursion the raw chain computes. Row domain: the raw plan
+    * inner-joins the source's observed periods against `t_K ≤ p` and
+    * groups, so it emits a row exactly for observed periods with ≥ 1
+    * converted id — the cascade over every cube period plus a ≥ 1
+    * filter reproduces it. At scale the raw chain is K joins over the
+    * source's pairs PLUS a quadratic period join; the serve is one
+    * pass over cube-sized partials + K incremental window passes over
+    * the |periods| frame. Delete-latched cubes refuse — bitmap
+    * partials are insert-only. */
   private def tryRewriteFunnel(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeFunnel(agg).getOrElse(return None)
     if (needs.outs.isEmpty) return None
     // a chain over an INNER EQUI-JOIN routes to a registered join MV,
     // either side order — the q261 retention-family dispatch
-    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
-      buildFunnelServe(agg, needs, reg).map((_, reg.cubeSize)))
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cheapest(needs.path, needs.join)(buildFunnelServe(agg, needs, _))
   }
 
   private def buildFunnelServe(
       agg: Aggregate,
       needs: CubeAdvisor.FunnelNeeds,
       reg: CubeCatalog.Registration): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     import CubeAdvisor.RollOut
-    val cube = reg.cube
-    val cfg = cube.config
-    if (reg.cubeScanPath.isEmpty) return None
-    if (reg.origScanPath.contains(needs.path)) return None
-    if (cfg.dims.exists(_.id.startsWith("__"))) return None
-    if (cube.hasDeletes) return None
-    val dayDim = cfg.dims.collectFirst {
-      case TimeDim(id, p, "day") if p == needs.tsCol => id
-    }.getOrElse(return None)
-    val stepDim = cfg.dims.collectFirst {
-      case FieldDim(id, p) if p == needs.stepCol => id
-    }.getOrElse(return None)
+    val cfg = reg.cube.config
+    if (!servable(reg, needs.path) || reg.cube.hasDeletes) return None
+    val dayDim = dayDimOf(cfg, needs.tsCol).getOrElse(return None)
+    val stepDim = fieldDimOf(cfg, needs.stepCol).getOrElse(return None)
     val bmId = cfg.allBitmaps.find(_.path == needs.idCol)
       .map(_.id).getOrElse(return None)
-    val spark = cube.aggregates.sparkSession
-    val B = graft.functions.Bitmap
-    val cubeFrame = Bridge.ofRows(spark, reg.cubePlan)
-      .filter(col(CubeManager.CountCol) > 0)
-    // the buildRetentionServe discipline: calendar ordinals reproduce
-    // the user's exact values from the cube's day cells
-    val periodKey = (needs.calendar match {
-      case None =>
-        floor(datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-          .cast("long").cast("double") / needs.periodDays).cast("long")
-      case Some((g, off)) =>
-        val dd = col(dayDim).cast("date")
-        val base = g match {
-          case "month" => year(dd) * 12 + month(dd)
-          case "quarter" => year(dd) * 4 + quarter(dd)
-          case _ => year(dd)
-        }
-        (base.cast("long") + off).cast("long")
-    }).as("__p")
     val sharded = cfg.bitmapShardBits > 0
-    val shardCols =
-      if (sharded) Seq(col(CubeManager.ShardCol)) else Nil
-    val steps = needs.steps
-    // one bitmap column per step per (period [, shard]) — conditional
-    // aggregation, ONE pass over cube-sized partials
-    val stepAggs = steps.zipWithIndex.map { case (s, i) =>
-      B.unionAgg(when(col(stepDim) === s, col(bmId))).as(s"__b$i") }
-    val base = cubeFrame
-      .filter(col(stepDim).isin(steps: _*))
-      .groupBy((Seq(periodKey) ++ shardCols): _*)
-      .agg(stepAggs.head, stepAggs.tail: _*)
     // the raw days side is the UNFILTERED source's observed periods —
     // every cube cell covers a source row, so the cube's full period
     // set is exactly that domain
-    val periods = cubeFrame.select(periodKey).distinct()
-    val grid =
-      if (!sharded) periods
-      else periods.crossJoin(
-        base.select(col(CubeManager.ShardCol)).distinct())
-    val keyCols = Seq("__p") ++
-      (if (sharded) Seq(CubeManager.ShardCol) else Nil)
-    val emptyBm = lit(Array[Byte](0, 0, 0, 0)) // codec: zero blocks
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(shardCols: _*)
-      .orderBy(col("__p"))
-      .rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    // BOUNDED chains (the q246 windowed vocabulary): step k at p must
-    // follow a step-(k−1) QUALIFICATION at some p' ∈ [p − within, p] —
-    // the getFunnel(withinPeriods) cascade; RANGE frames on the period
-    // key make calendar gaps age the chain out exactly like the raw
-    // qualified-pair recursion (absent periods carry no pairs)
-    val rangeW =
-      if (needs.within <= 0) w
-      else org.apache.spark.sql.expressions.Window
-        .partitionBy(shardCols: _*)
-        .orderBy(col("__p"))
-        .rangeBetween(-needs.within.toLong,
-          org.apache.spark.sql.expressions.Window.currentRow)
-    var frame = grid.join(base, keyCols, "left")
-    steps.zipWithIndex.foreach { case (_, i) =>
-      val qual =
-        if (i == 0) coalesce(col(s"__b$i"), emptyBm)
-        else B.and(coalesce(col(s"__b$i"), emptyBm),
-          if (needs.within <= 0) col(s"__c${i - 1}")
-          else B.unionAgg(col(s"__q${i - 1}")).over(rangeW))
-      frame = frame.withColumn(s"__q$i", qual)
-      frame = frame.withColumn(s"__c$i", B.unionAgg(col(s"__q$i")).over(w))
-    }
-    val last = steps.size - 1
-    val perRow = frame.select((Seq(col("__p")) ++ shardCols :+
-      B.cardinality(col(s"__c$last")).as("__n")): _*)
-    val served = (if (!sharded) perRow.withColumnRenamed("__n", "__ret")
-      else perRow.groupBy(col("__p")).agg(sum(col("__n")).as("__ret")))
-      .filter(col("__ret") >= 1)
-    val outPlan = served.queryExecution.optimizedPlan
-    val servedAttr: Map[String, Attribute] =
-      outPlan.output.map(a => a.name -> a).toMap
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val proj: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(needs.outs).map {
-        case (orig, RollOut.Day) =>
-          if (orig.dataType != LongType && orig.dataType != IntegerType)
-            return None
-          val p = servedAttr.getOrElse("__p", return None)
-          val child: Expression =
-            if (p.dataType == orig.dataType) p else Cast(p, orig.dataType)
-          Alias(child, orig.name)(exprId = orig.exprId)
-        case (orig, _: RollOut.Leaf) =>
-          val a = servedAttr.getOrElse("__ret", return None)
-          if (a.dataType != orig.dataType) return None
-          Alias(a, orig.name)(exprId = orig.exprId)
-        case _ => return None
-      }
-    Some(Project(proj, outPlan))
+    val cascade = ServeKernels.funnelCascade(liveCells(reg).get,
+      ServeKernels.periodKey(col(dayDim), needs.periodDays, needs.calendar),
+      stepDim, bmId, needs.steps, Nil, sharded, needs.within,
+      allPeriods = true)
+    val last = needs.steps.size - 1
+    val out = new Served(ServeKernels.funnelConverted(cascade,
+        Seq(needs.steps(last) -> last), Nil, sharded)
+      .filter(col("converted") >= 1))
+    out.project(agg.aggregateExpressions.zip(needs.outs).map {
+      case (orig, RollOut.Day) => out.key(orig, "period")
+      case (orig, _: RollOut.Leaf) => out.exact(orig, "converted")
+      case _ => None
+    })
   }
 
   /** TIME-TO-CONVERT routing — the raw conversion-lag histogram
     * (the full min-chain joined to its own first stage, t_K − t_1
-    * re-counted — [[CubeAdvisor.analyzeTimeToConvert]]) rewritten to
-    * the [[CubeService.getTimeToConvert]] bitmap algebra: F_p = first
-    * step-1 period, N_q = newly converted at q (the cascade's
-    * monotone converted-by set differenced), one AND-cardinality per
-    * (p, q ≥ p) pair summed per lag. Unlike the verb there is no
-    * maxLag bound to refuse on: the routed pair walk is the full
-    * triangle over |periods| one-row frames (the q248 shape —
-    * whitelisted in PlanSpec). The raw plan pays K joins over the
-    * source's pairs plus the per-id subtraction re-count per refresh;
-    * the serve is one cascade pass plus the triangle walk over
-    * cube-derived frames. Delete-latched cubes refuse (bitmap
+    * re-counted — [[CubeAdvisor.analyzeTimeToConvert]]) served by
+    * [[ServeKernels.timeToConvert]], the
+    * [[CubeService.getTimeToConvert]] kernel, without the verb's
+    * maxLag bound: the raw plan counts every lag. The raw plan pays K
+    * joins over the source's pairs plus the per-id subtraction
+    * re-count per refresh; the serve is one cascade pass plus one
+    * equi-join of exploded ids. Delete-latched cubes refuse (bitmap
     * partials are insert-only). */
   private def tryRewriteTimeToConvert(agg: Aggregate): Option[LogicalPlan] = {
     val needs = CubeAdvisor.analyzeTimeToConvert(agg).getOrElse(return None)
-    val candidates = familyRegs(needs.path, needs.join).flatMap(reg =>
-      buildTimeToConvertServe(agg, needs, reg).map((_, reg.cubeSize)))
-    if (candidates.isEmpty) None else Some(candidates.minBy(_._2)._1)
+    cheapest(needs.path, needs.join)(buildTimeToConvertServe(agg, needs, _))
   }
 
   private def buildTimeToConvertServe(
       agg: Aggregate,
       needs: CubeAdvisor.TimeToConvertNeeds,
       reg: CubeCatalog.Registration): Option[LogicalPlan] = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     import CubeAdvisor.RollOut
-    val cube = reg.cube
-    val cfg = cube.config
-    if (reg.cubeScanPath.isEmpty) return None
-    if (reg.origScanPath.contains(needs.path)) return None
-    if (cfg.dims.exists(_.id.startsWith("__"))) return None
-    if (cube.hasDeletes) return None
-    val dayDim = cfg.dims.collectFirst {
-      case TimeDim(id, p, "day") if p == needs.tsCol => id
-    }.getOrElse(return None)
-    val stepDim = cfg.dims.collectFirst {
-      case FieldDim(id, p) if p == needs.stepCol => id
-    }.getOrElse(return None)
+    val cfg = reg.cube.config
+    if (!servable(reg, needs.path) || reg.cube.hasDeletes) return None
+    val dayDim = dayDimOf(cfg, needs.tsCol).getOrElse(return None)
+    val stepDim = fieldDimOf(cfg, needs.stepCol).getOrElse(return None)
     val bmId = cfg.allBitmaps.find(_.path == needs.idCol)
       .map(_.id).getOrElse(return None)
-    val spark = cube.aggregates.sparkSession
-    val B = graft.functions.Bitmap
-    val cubeFrame = Bridge.ofRows(spark, reg.cubePlan)
-      .filter(col(CubeManager.CountCol) > 0)
-    val periodKey = (needs.calendar match {
-      case None =>
-        floor(datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-          .cast("long").cast("double") / needs.periodDays).cast("long")
-      case Some((g, off)) =>
-        val dd = col(dayDim).cast("date")
-        val base = g match {
-          case "month" => year(dd) * 12 + month(dd)
-          case "quarter" => year(dd) * 4 + quarter(dd)
-          case _ => year(dd)
-        }
-        (base.cast("long") + off).cast("long")
-    }).as("__p")
-    val steps = needs.steps
-    val stepAggs = steps.zipWithIndex.map { case (s, i) =>
-      B.unionAgg(when(col(stepDim) === s, col(bmId))).as(s"__b$i") }
-    // shard rows merge into one full per-period bitmap per step (the
-    // union across shards IS the set; the verb's per-shard walk only
-    // bounds blob size, which cube-derived one-row frames don't need)
-    val base = cubeFrame
-      .filter(col(stepDim).isin(steps: _*))
-      .groupBy(periodKey)
-      .agg(stepAggs.head, stepAggs.tail: _*)
-    val emptyBm = lit(Array[Byte](0, 0, 0, 0))
-    val W = org.apache.spark.sql.expressions.Window
-    val w = W.partitionBy().orderBy(col("__p"))
-      .rowsBetween(W.unboundedPreceding, W.currentRow)
-    val wPrev = W.partitionBy().orderBy(col("__p"))
-      .rowsBetween(W.unboundedPreceding, -1)
-    val wLag = W.partitionBy().orderBy(col("__p"))
-    var frame = base
-    steps.zipWithIndex.foreach { case (_, i) =>
-      val qual =
-        if (i == 0) coalesce(col(s"__b$i"), emptyBm)
-        else B.and(coalesce(col(s"__b$i"), emptyBm), col(s"__c${i - 1}"))
-      frame = frame.withColumn(s"__c$i", B.unionAgg(qual).over(w))
-    }
-    val last = steps.size - 1
-    frame = frame
-      .withColumn("__f", B.andNot(coalesce(col("__b0"), emptyBm),
-        coalesce(B.unionAgg(coalesce(col("__b0"), emptyBm)).over(wPrev),
-          emptyBm)))
-      .withColumn("__n", B.andNot(col(s"__c$last"),
-        coalesce(lag(col(s"__c$last"), 1).over(wLag), emptyBm)))
-    // EXPLODE-IDS LAG JOIN (optimization round 19 — the
-    // CubeService.timeToConvertFrom rewrite, routed form): an id lives
-    // in AT MOST ONE __f bitmap (prefix-ANDNOT first-seen) and AT MOST
-    // ONE __n bitmap (monotone converted-set diff), so the former
-    // |periods|²/2 single-task BNLJ blob triangle is exactly one row
-    // per converting id in the equi-join of the exploded id rows — an
-    // ordinary parallel shuffle join, linear in the id count. A null
-    // period never satisfies the ≥ range predicate, as before.
-    val fIds = frame.select(col("__p").as("__pa"),
-      explode_outer(B.ids(col("__f"))).as("__id"))
-      .filter(col("__id").isNotNull)
-    val nIds = frame.select(col("__p").as("__pb"),
-      explode_outer(B.ids(col("__n"))).as("__id"))
-      .filter(col("__id").isNotNull)
-    val served = fIds.join(nIds, Seq("__id"))
-      .filter(col("__pb") >= col("__pa"))
-      .groupBy((col("__pb") - col("__pa")).as("__lag"))
-      .agg(sum(lit(1L)).as("__conv"))
-      .filter(col("__conv") >= 1)
-    val outPlan = served.queryExecution.optimizedPlan
-    val servedAttr: Map[String, Attribute] =
-      outPlan.output.map(a => a.name -> a).toMap
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val proj: Seq[NamedExpression] =
-      agg.aggregateExpressions.zip(needs.outs).map {
-        case (orig, RollOut.Day) =>
-          if (orig.dataType != LongType && orig.dataType != IntegerType)
-            return None
-          val p = servedAttr.getOrElse("__lag", return None)
-          val child: Expression =
-            if (p.dataType == orig.dataType) p else Cast(p, orig.dataType)
-          Alias(child, orig.name)(exprId = orig.exprId)
-        case (orig, _: RollOut.Leaf) =>
-          val a = servedAttr.getOrElse("__conv", return None)
-          if (a.dataType != orig.dataType) return None
-          Alias(a, orig.name)(exprId = orig.exprId)
-        case _ => return None
-      }
-    Some(Project(proj, outPlan))
+    val out = new Served(ServeKernels.timeToConvert(liveCells(reg).get,
+      ServeKernels.periodKey(col(dayDim), needs.periodDays, needs.calendar),
+      stepDim, bmId, needs.steps, Nil, cfg.bitmapShardBits > 0, None))
+    out.project(agg.aggregateExpressions.zip(needs.outs).map {
+      case (orig, RollOut.Day) => out.key(orig, "lag_periods")
+      case (orig, _: RollOut.Leaf) => out.exact(orig, "converted")
+      case _ => None
+    })
   }
 
   private def tryRewrite(

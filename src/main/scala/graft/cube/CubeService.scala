@@ -1107,33 +1107,12 @@ final class CubeService(spark: SparkSession, storageDir: String,
     // CALENDAR periods use the bucket's integer ordinal instead, so
     // the same lag-contiguity and shard-pairing arithmetic (period ± 1)
     // is exact across year boundaries
-    val dayKey = datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-      .cast("long")
-    val dayDate = col(dayDim).cast("date")
-    val periodKey = (calendar match {
-      case None => floor(dayKey.cast("double") / periodDays).cast("long")
-      case Some("month") =>
-        (year(dayDate) * 12 + month(dayDate) - 1).cast("long")
-      case Some("quarter") =>
-        (year(dayDate) * 4 + quarter(dayDate) - 1).cast("long")
-      case _ => year(dayDate).cast("long")
-    }).as("period")
+    val periodKey = ServeKernels.periodKey(col(dayDim), periodDays,
+      calendar.map(ServeKernels.verbCalendar)).as("period")
     val B = graft.functions.Bitmap
     // index → first-day label, appended to the finished matrix
-    def withPeriodStart(matrix: DataFrame): DataFrame = calendar match {
-      case None => matrix
-      case Some(g) =>
-        val p = col("period")
-        val start = g match {
-          case "month" => make_date(floor(p / 12).cast("int"),
-            pmod(p, lit(12)).cast("int") + 1, lit(1))
-          case "quarter" => make_date(floor(p / 4).cast("int"),
-            pmod(p, lit(4)).cast("int") * 3 + 1, lit(1))
-          case _ => make_date(p.cast("int"), lit(1), lit(1))
-        }
-        matrix.withColumn("period_start",
-          date_format(start, "yyyy-MM-dd"))
-    }
+    def withPeriodStart(matrix: DataFrame): DataFrame =
+      ServeKernels.withStart(matrix, calendar, "period", "period_start")
     if (cube.config.bitmapShardBits == 0) {
       val perPeriod = cube.live
         .groupBy((segmentBy.map(col) :+ periodKey): _*)
@@ -1322,33 +1301,12 @@ final class CubeService(spark: SparkSession, storageDir: String,
     calendar.foreach(g =>
       require(Seq("month", "quarter", "year").contains(g),
         s"calendar granularity must be month/quarter/year, got $g"))
-    val dayKey = datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-      .cast("long")
-    val dayDate = col(dayDim).cast("date")
-    val periodKey = (calendar match {
-      case None => floor(dayKey.cast("double") / periodDays).cast("long")
-      case Some("month") =>
-        (year(dayDate) * 12 + month(dayDate) - 1).cast("long")
-      case Some("quarter") =>
-        (year(dayDate) * 4 + quarter(dayDate) - 1).cast("long")
-      case _ => year(dayDate).cast("long")
-    }).as("period")
+    val periodKey = ServeKernels.periodKey(col(dayDim), periodDays,
+      calendar.map(ServeKernels.verbCalendar)).as("period")
     val B = graft.functions.Bitmap
     val emptyBm = lit(Array[Byte](0, 0, 0, 0)) // codec: zero blocks
-    def withPeriodStart(matrix: DataFrame): DataFrame = calendar match {
-      case None => matrix
-      case Some(g) =>
-        val p = col("period")
-        val start = g match {
-          case "month" => make_date(floor(p / 12).cast("int"),
-            pmod(p, lit(12)).cast("int") + 1, lit(1))
-          case "quarter" => make_date(floor(p / 4).cast("int"),
-            pmod(p, lit(4)).cast("int") * 3 + 1, lit(1))
-          case _ => make_date(p.cast("int"), lit(1), lit(1))
-        }
-        matrix.withColumn("period_start",
-          date_format(start, "yyyy-MM-dd"))
-    }
+    def withPeriodStart(matrix: DataFrame): DataFrame =
+      ServeKernels.withStart(matrix, calendar, "period", "period_start")
     // the four active-set cells from (bm, prev-effective, strict
     // prefix): new = bm \ prefix; retained = bm ∩ prev; resurrected =
     // the remainder of the partition (bm ∩ prefix \ prev), computed
@@ -1522,14 +1480,11 @@ final class CubeService(spark: SparkSession, storageDir: String,
     // reset-bucket ordinal of an epoch-day column (integer bucket
     // index, the getRetentionCalendar discipline — Dec→Jan is exact
     // adjacency); no reset ⇒ one global bucket
-    def bucketOf(day: Column): Column = {
-      val dt = date_add(lit("1970-01-01").cast("date"), day.cast("int"))
-      resetBy match {
-        case None => lit(0L)
-        case Some("month") => (year(dt) * 12 + month(dt) - 1).cast("long")
-        case Some("quarter") => (year(dt) * 4 + quarter(dt) - 1).cast("long")
-        case _ => year(dt).cast("long")
-      }
+    def bucketOf(day: Column): Column = resetBy match {
+      case None => lit(0L)
+      case Some(g) => ServeKernels.periodKey(
+        date_add(lit("1970-01-01").cast("date"), day.cast("int")), 1,
+        Some(ServeKernels.verbCalendar(g)))
     }
     val segCols = segmentBy.map(col)
     // running SUMS: daily decimal partials, then an incremental
@@ -1767,10 +1722,9 @@ final class CubeService(spark: SparkSession, storageDir: String,
       steps: Seq[String],
       periodDays: Int,
       maxLagPeriods: Int,
-      segmentBy: Seq[String] = Nil,
-      calendar: Option[String] = None): DataFrame = {
+      segmentBy: Seq[String],
+      calendar: Option[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     require(maxLagPeriods >= 1 && maxLagPeriods <= 366,
       s"maxLagPeriods must be in 1..366, got $maxLagPeriods (the " +
         "lag window is the user-facing histogram bound)")
@@ -1809,92 +1763,12 @@ final class CubeService(spark: SparkSession, storageDir: String,
     calendar.foreach(g =>
       require(Seq("month", "quarter", "year").contains(g),
         s"calendar granularity must be month/quarter/year, got $g"))
-    val B = graft.functions.Bitmap
-    val dayKey = datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-      .cast("long")
-    val dayDate = col(dayDim).cast("date")
-    // calendar ordinals make the lag unit months/quarters/years —
-    // ±1 adjacency exact across year boundaries (the
-    // getRetentionCalendar bucket discipline)
-    val periodKey = (calendar match {
-      case None => floor(dayKey.cast("double") / periodDays).cast("long")
-      case Some("month") =>
-        (year(dayDate) * 12 + month(dayDate) - 1).cast("long")
-      case Some("quarter") =>
-        (year(dayDate) * 4 + quarter(dayDate) - 1).cast("long")
-      case _ => year(dayDate).cast("long")
-    }).as("period")
-    val segCols = segmentBy.map(col)
-    val sharded = cube.config.bitmapShardBits > 0
-    val shardCols = if (sharded) Seq(col(CubeManager.ShardCol)) else Nil
-    val stepAggs = steps.zipWithIndex.map { case (s, i) =>
-      B.unionAgg(when(col(stepDim) === s, col(bitmapId))).as(s"__b$i") }
-    val base = cube.live
-      .filter(col(stepDim).isin(steps: _*))
-      .groupBy((segCols ++ Seq(periodKey) ++ shardCols): _*)
-      .agg(stepAggs.head, stepAggs.tail: _*)
-    val periods = base.select((segCols :+ col("period")): _*).distinct()
-    val grid =
-      if (!sharded) periods
-      else {
-        val shards =
-          base.select((segCols :+ col(CubeManager.ShardCol)): _*)
-            .distinct()
-        if (segmentBy.isEmpty) periods.crossJoin(shards)
-        else periods.join(shards, segmentBy)
-      }
-    val keyCols = segmentBy ++ Seq("period") ++
-      (if (sharded) Seq(CubeManager.ShardCol) else Nil)
-    val emptyBm = lit(Array[Byte](0, 0, 0, 0)) // codec: zero blocks
-    val partCols = segCols ++ shardCols
-    val w = Window.partitionBy(partCols: _*).orderBy(col("period"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrev = Window.partitionBy(partCols: _*).orderBy(col("period"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wLag = Window.partitionBy(partCols: _*).orderBy(col("period"))
-    var frame = grid.join(base, keyCols, "left")
-    steps.zipWithIndex.foreach { case (_, i) =>
-      val qual =
-        if (i == 0) coalesce(col(s"__b$i"), emptyBm)
-        else B.and(coalesce(col(s"__b$i"), emptyBm), col(s"__c${i - 1}"))
-      frame = frame.withColumn(s"__c$i", B.unionAgg(qual).over(w))
-    }
-    val last = steps.size - 1
-    frame = frame
-      .withColumn("__f", B.andNot(coalesce(col("__b0"), emptyBm),
-        coalesce(B.unionAgg(coalesce(col("__b0"), emptyBm)).over(wPrev),
-          emptyBm)))
-      .withColumn("__n", B.andNot(col(s"__c$last"),
-        coalesce(lag(col(s"__c$last"), 1).over(wLag), emptyBm)))
-    // EXPLODE-IDS LAG JOIN (optimization round 19 — the round-18
-    // cohortFrom rationale applied to the lag grid): the former plan
-    // BNLJ'd the |periods| one-row __f frame against the __n frame
-    // (|periods| × maxLag blob pairs, one AND-cardinality each) inside
-    // the single task the windows had funneled the frame to. Within a
-    // (segment [, shard]) partition an id appears in AT MOST ONE __f
-    // bitmap (its first step-1 period — __f is the prefix-ANDNOT
-    // new-set) and AT MOST ONE __n bitmap (__c is monotone, so each id
-    // converts exactly once), and shards partition the id space, so
-    // Σ_{pairs} |F_pa ∩ N_pb| is exactly one row per (segment, id) in
-    // the equi-join of the exploded id rows — an ordinary parallel
-    // shuffle join, linear in the id count instead of quadratic in the
-    // period count. The lag-window condition (0 ≤ pb − pa ≤ maxLag) and
-    // the null-period behavior (a null pa/pb never satisfies the range
-    // predicate) carry over verbatim; `converted` keeps the sum-typed
-    // long the blob walk produced.
-    val fIds = frame.select((segCols ++ Seq(col("period").as("__pa"),
-      explode_outer(B.ids(col("__f"))).as("__id"))): _*)
-      .filter(col("__id").isNotNull)
-    val nIds = frame.select((segCols ++ Seq(col("period").as("__pb"),
-      explode_outer(B.ids(col("__n"))).as("__id"))): _*)
-      .filter(col("__id").isNotNull)
-    fIds.join(nIds, segmentBy :+ "__id")
-      .filter(col("__pb") >= col("__pa") &&
-        col("__pb") <= col("__pa") + maxLagPeriods)
-      .groupBy((segmentBy.map(col) :+
-        (col("__pb") - col("__pa")).as("lag_periods")): _*)
-      .agg(sum(lit(1L)).as("converted"))
-      .filter(col("converted") >= 1)
+    // calendar ordinals make the lag unit months/quarters/years
+    ServeKernels.timeToConvert(cube.live,
+        ServeKernels.periodKey(col(dayDim), periodDays,
+          calendar.map(ServeKernels.verbCalendar)),
+        stepDim, bitmapId, steps, segmentBy,
+        cube.config.bitmapShardBits > 0, Some(maxLagPeriods))
       .orderBy((segmentBy.map(col) :+ col("lag_periods")): _*)
   }
 
@@ -1906,10 +1780,9 @@ final class CubeService(spark: SparkSession, storageDir: String,
       stepDim: String,
       steps: Seq[String],
       periodDays: Int,
-      segmentBy: Seq[String] = Nil,
-      withinPeriods: Int = 0): DataFrame = {
+      segmentBy: Seq[String],
+      withinPeriods: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     require(cube.config.dims.exists {
         case TimeDim(id, _, g) => id == dayDim && g == "day"
         case _ => false
@@ -1942,85 +1815,16 @@ final class CubeService(spark: SparkSession, storageDir: String,
         cube.config.dims.exists(d => d.id == sd && !d.isInstanceOf[TimeDim]),
         s"$sd is not a (non-time) dimension of cube $name")
     }
-    val B = graft.functions.Bitmap
     val segCols = segmentBy.map(col)
-    val dayKey = datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-      .cast("long")
-    val periodKey = floor(dayKey.cast("double") / periodDays)
-      .cast("long").as("period")
     val sharded = cube.config.bitmapShardBits > 0
-    val shardCols = if (sharded) Seq(col(CubeManager.ShardCol)) else Nil
-    // ONE pass over cube-sized partials: per (segment, period [,shard])
-    // row, ONE bitmap column per step via conditional aggregation (the
-    // aggregate skips the other steps' nulls; an all-null group yields
-    // the EMPTY bitmap — exactly the absent-step semantics). The
-    // per-step join-and-rescan form measured 3.1× under ×10 ids in
-    // SCALING.md's harness (|steps|+2 cube scans); this shape is one
-    // scan + one grid join regardless of step count.
-    val stepAggs = steps.zipWithIndex.map { case (s, i) =>
-      B.unionAgg(when(col(stepDim) === s, col(bitmapId))).as(s"__b$i") }
-    val base = cube.live
-      .filter(col(stepDim).isin(steps: _*))
-      .groupBy((segCols ++ Seq(periodKey) ++ shardCols): _*)
-      .agg(stepAggs.head, stepAggs.tail: _*)
     // the period domain: every period where ANY step was active (per
     // segment) — a step silent at p still carries its prefix forward
-    val periods = base.select((segCols :+ col("period")): _*).distinct()
-    val grid =
-      if (!sharded) periods
-      else {
-        val shards =
-          base.select((segCols :+ col(CubeManager.ShardCol)): _*).distinct()
-        if (segmentBy.isEmpty) periods.crossJoin(shards)
-        else periods.join(shards, segmentBy)
-      }
-    val keyCols = segmentBy ++ Seq("period") ++
-      (if (sharded) Seq(CubeManager.ShardCol) else Nil)
-    val emptyBm = lit(Array[Byte](0, 0, 0, 0)) // codec: zero blocks
-    val w = Window
-      .partitionBy((segCols ++ shardCols): _*)
-      .orderBy(col("period"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // BOUNDED funnels (withinPeriods > 0): step k at q must follow a
-    // step-(k−1) QUALIFICATION at some r ∈ [q − within, q] — the
-    // ClickHouse-windowFunnel semantics (any chain with adjacent gaps
-    // ≤ within counts, including re-qualification: a user whose first
-    // step-1 is too old but who repeats it later re-enters). RANGE
-    // frames on the period key make calendar gaps count against the
-    // window (an unobserved period still ages the chain out)
-    val rangeW =
-      if (withinPeriods <= 0) w
-      else Window
-        .partitionBy((segCols ++ shardCols): _*)
-        .orderBy(col("period"))
-        .rangeBetween(-withinPeriods.toLong, Window.currentRow)
-    // the cascade: intersect each step's bitmap with the previous
-    // step's QUALIFIED set — the full prefix for unbounded funnels,
-    // the trailing `within` range for bounded ones — then prefix-union
-    // into the converted set; window passes chain over ONE sorted frame
-    var frame = grid.join(base, keyCols, "left")
-    steps.zipWithIndex.foreach { case (s, i) =>
-      val qual =
-        if (i == 0) coalesce(col(s"__b$i"), emptyBm)
-        else B.and(coalesce(col(s"__b$i"), emptyBm),
-          if (withinPeriods <= 0) col(s"__c${i - 1}")
-          else B.unionAgg(col(s"__q${i - 1}")).over(rangeW))
-      frame = frame.withColumn(s"__q$i", qual)
-      frame = frame.withColumn(s"__c$i",
-        B.unionAgg(col(s"__q$i")).over(w))
-    }
-    val rows = steps.zipWithIndex.map { case (s, i) =>
-      frame.select((segCols ++ Seq(col("period"),
-        lit(i + 1).as("step_ord"), lit(s).as("step"),
-        B.cardinality(col(s"__c$i")).as("__n"))): _*)
-    }.reduce(_ union _)
-    val out =
-      if (!sharded) rows.withColumnRenamed("__n", "converted")
-      else rows
-        .groupBy((segCols ++ Seq(col("period"), col("step_ord"),
-          col("step"))): _*)
-        .agg(sum(col("__n")).as("converted"))
-    out.select((segCols ++ Seq(col("period"), col("step_ord"),
+    val cascade = ServeKernels.funnelCascade(cube.live,
+      ServeKernels.periodKey(col(dayDim), periodDays, None), stepDim,
+      bitmapId, steps, segmentBy, sharded, withinPeriods)
+    ServeKernels.funnelConverted(cascade, steps.zipWithIndex, segmentBy,
+        sharded)
+      .select((segCols ++ Seq(col("period"), col("step_ord"),
         col("step"), col("converted"))): _*)
       .orderBy((segCols ++ Seq(col("period"), col("step_ord"))): _*)
   }
@@ -2382,7 +2186,6 @@ final class CubeService(spark: SparkSession, storageDir: String,
       segmentBy: Seq[String],
       calendar: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     require(cube.config.dims.exists {
         case TimeDim(id, _, g) => id == dayDim && g == "day"
         case _ => false
@@ -2404,76 +2207,17 @@ final class CubeService(spark: SparkSession, storageDir: String,
     calendar.foreach(g =>
       require(Seq("month", "quarter", "year").contains(g),
         s"calendar granularity must be month/quarter/year, got $g"))
-    val B = graft.functions.Bitmap
     val segCols = segmentBy.map(col)
-    val dayKey = datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-      .cast("long")
-    val dayDate = col(dayDim).cast("date")
     // calendar buckets key on the integer ordinal, so the offset
     // arithmetic (p2 − cohort) counts REAL calendar buckets
-    val periodKey = (calendar match {
-      case None => floor(dayKey.cast("double") / periodDays).cast("long")
-      case Some("month") =>
-        (year(dayDate) * 12 + month(dayDate) - 1).cast("long")
-      case Some("quarter") =>
-        (year(dayDate) * 4 + quarter(dayDate) - 1).cast("long")
-      case _ => year(dayDate).cast("long")
-    }).as("period")
-    // EXPLODE-ENTRIES SERVE (optimization round 18): the former blob
-    // algebra built |periods| one-row union bitmaps, ran a prefix-ANDNOT
-    // window for the new-sets, then AND-counted |periods|²/2 (cohort,
-    // period) blob pairs — and the window had funneled each (segment
-    // [, shard]) group into a single task, so the whole quadratic walk
-    // ran serially (measured 1.5-1.7 s/serve at sf0.1 local[32]). The
-    // identical matrix falls out of plain aggregates over the exploded
-    // (segment, period, id) activity rows: first-seen = min period per
-    // id (exactly the prefix-ANDNOT fixpoint), each (cohort, offset)
-    // cell = |{id : first = cohort, active at cohort + offset}|, and
-    // the ≥ 1-retained row set emerges naturally (a cell only exists
-    // when some cohort id was active there; offset 0 is the full
-    // cohort). Cost is LINEAR in Σ|cell ids| — cube content, never the
-    // source — instead of quadratic in the period count, every stage is
-    // an ordinary shuffled aggregate (full parallelism, map-side
-    // partials), and shard columns simply vanish (an id lives in
-    // exactly one shard, so the per-shard walk + re-sum collapses into
-    // the same group-bys). Output is row- and type-identical; the
-    // oracle gate covers the equivalence.
-    // MERGE-THEN-EXPLODE (optimization round 19, the cohortValueFrom
-    // rationale): union the bitmaps per (segment, period [, shard])
-    // first (ObjectHashAggregate, map-side partial blob unions), then
-    // explode — the Generate runs parallel behind the exchange instead
-    // of inside the single-file snapshot scan task, and the union
-    // already dedupes, so the exploded rows ARE the distinct activity
-    // set (ids are disjoint across shards) and the .distinct() shuffle
-    // of exploded rows disappears.
-    val shardCols =
-      if (cube.config.bitmapShardBits > 0) Seq(col(CubeManager.ShardCol))
-      else Nil
-    val acts = cube.live
-      .groupBy((segCols ++ Seq(periodKey) ++ shardCols): _*)
-      .agg(B.unionAgg(col(bitmapId)).as("__bm"))
-      .select((segCols ++ Seq(col("period"),
-        explode_outer(B.ids(col("__bm"))).as("__id"))): _*)
-      .filter(col("__id").isNotNull)
-    // null-period fidelity: the old window ordered nulls FIRST, so an
-    // id whose earliest activity fell in a null period landed in the
-    // null new-set and never surfaced in any real cohort (the null
-    // cohort row itself dropped at the >= pair condition). Reproduce:
-    // any null-period activity excludes the id entirely.
-    val first = acts
-      .groupBy((segCols :+ col("__id")): _*)
-      .agg(min(col("period")).as("cohort"),
-        max(col("period").isNull).as("__hadNull"))
-      .filter(!col("__hadNull") && col("cohort").isNotNull)
-      .drop("__hadNull")
-    val cells = acts.join(first, segmentBy :+ "__id")
-      .groupBy((segCols ++ Seq(col("cohort"),
-        (col("period") - col("cohort")).as("offset"))): _*)
-      .agg(count(lit(1)).as("retained"))
-    val sizes = first
+    val c = ServeKernels.cohortMatrix(cube.live,
+      ServeKernels.periodKey(col(dayDim), periodDays,
+        calendar.map(ServeKernels.verbCalendar)),
+      bitmapId, segmentBy, cube.config.bitmapShardBits > 0)
+    val sizes = c.first
       .groupBy((segCols :+ col("cohort")): _*)
       .agg(count(lit(1)).as("cohort_size"))
-    cells.join(sizes, segmentBy :+ "cohort")
+    c.cells.join(sizes, segmentBy :+ "cohort")
       .select((segCols ++ Seq(col("cohort"), col("offset"),
         col("cohort_size"), col("retained"))): _*)
       .orderBy((segCols ++ Seq(col("cohort"), col("offset"))): _*)
@@ -2566,7 +2310,6 @@ final class CubeService(spark: SparkSession, storageDir: String,
       segmentBy: Seq[String],
       calendar: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     require(cube.config.dims.exists {
         case TimeDim(id, _, g) => id == dayDim && g == "day"
         case _ => false
@@ -2590,98 +2333,22 @@ final class CubeService(spark: SparkSession, storageDir: String,
     calendar.foreach(g =>
       require(Seq("month", "quarter", "year").contains(g),
         s"calendar granularity must be month/quarter/year, got $g"))
-    val B = graft.functions.Bitmap
     val W = graft.functions.WeightMap
     val segCols = segmentBy.map(col)
-    val dayKey = datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-      .cast("long")
-    val dayDate = col(dayDim).cast("date")
-    val periodKey = (calendar match {
-      case None => floor(dayKey.cast("double") / periodDays).cast("long")
-      case Some("month") =>
-        (year(dayDate) * 12 + month(dayDate) - 1).cast("long")
-      case Some("quarter") =>
-        (year(dayDate) * 4 + quarter(dayDate) - 1).cast("long")
-      case _ => year(dayDate).cast("long")
-    }).as("period")
-    // EXPLODE-ENTRIES SERVE (optimization round 18, the cohortFrom
-    // rationale with values): the former plan merged |periods| one-row
-    // weight maps, windowed a prefix-ANDNOT over their key bitmaps for
-    // the first-seen sets, then ran countIn + sumIn merge-walks over
-    // |periods|²/2 blob pairs inside the single task the window had
-    // reduced the frame to (measured 1.8-4.0 s/serve at sf0.1
-    // local[32] — the slowest serve family in the sweep). The identical
-    // matrix falls out of plain aggregates over the exploded (segment,
-    // period, id, cnt, w) entry rows: net per (segment, period, id)
-    // first (pointwise map addition = the same signed sums), PRESENT =
-    // net cnt > 0 (the WeightMapKeyBitmap rule, so delete histories net
-    // identically), first-seen = min present period, each cell =
-    // (count, Σ net scaled weight) of the cohort's ids present at that
-    // offset — exact longs, order-independent. Linear in Σ|cell
-    // entries| (cube content, never the source) instead of quadratic in
-    // the period count, fully parallel, shard columns vanish (an id
-    // lives in exactly one shard). Output row- and type-identical; the
-    // oracle gate covers the equivalence, and the family stays
-    // delete-capable for the same reason the maps are (signed nets).
-    //
-    // MERGE-THEN-EXPLODE (optimization round 19): exploding raw cell
-    // entries put the Generate inside the SCAN stage — one task on the
-    // single-file cube snapshot (Probe19: q293 warm ≈ 3.4x q281's) —
-    // and shuffled every raw entry row to net it. Merging the maps per
-    // (segment, period [, shard]) FIRST (ObjectHashAggregate —
-    // map-side partial blob merges, the pointwise addition that IS the
-    // net) moves the explode behind the exchange, where it runs
-    // parallel across period groups, and its output needs no second
-    // aggregate: a merged map's entries are already the net (cnt, w)
-    // per id. Sharded cubes merge per shard (ids are disjoint across
-    // shards, so per-shard entries are final and the shard column
-    // drops at the explode) — the per-group blob buffer stays bounded
-    // exactly as the shard mechanism intends.
-    val shardCols =
-      if (cube.config.bitmapShardBits > 0) Seq(col(CubeManager.ShardCol))
-      else Nil
-    val net = cube.live
-      .groupBy((segCols ++ Seq(periodKey) ++ shardCols): _*)
-      .agg(W.mergeAgg(col(weightedId)).as("__wm"))
-      .select((segCols ++ Seq(col("period"),
-        explode_outer(W.entries(col("__wm"))).as("__e"))): _*)
-      .filter(col("__e").isNotNull && col("__e.cnt") > 0)
-      .select((segCols ++ Seq(col("period"), col("__e.id").as("__id"),
-        col("__e.w").as("__w"))): _*)
-    // null-period fidelity — the cohortFrom rule: any null-period
-    // presence excludes the id from every real cohort.
-    val first = net
-      .groupBy((segCols :+ col("__id")): _*)
-      .agg(min(col("period")).as("cohort"),
-        max(col("period").isNull).as("__hadNull"))
-      .filter(!col("__hadNull") && col("cohort").isNotNull)
-      .drop("__hadNull")
-    val cells = net.join(first, segmentBy :+ "__id")
-      .groupBy((segCols ++ Seq(col("cohort"),
-        (col("period") - col("cohort")).as("offset"))): _*)
-      .agg(count(lit(1)).as("__a"), sum(col("__w")).as("__v"))
-    val sizes = first
+    val c = ServeKernels.cohortValue(cube.live,
+      ServeKernels.periodKey(col(dayDim), periodDays,
+        calendar.map(ServeKernels.verbCalendar)),
+      weightedId, segmentBy, cube.config.bitmapShardBits > 0)
+    val sizes = c.first
       .groupBy((segCols :+ col("cohort")): _*)
       .agg(count(lit(1)).as("cohort_size"))
-    val matrix = cells
+    ServeKernels.withStart(c.cells
       .join(sizes, segmentBy :+ "cohort")
       .select((segCols ++ Seq(col("cohort"), col("offset"),
         col("cohort_size"), col("__a").as("active"),
         W.toValue(col("__v")).as("value"))): _*)
-      .orderBy((segCols ++ Seq(col("cohort"), col("offset"))): _*)
-    calendar match {
-      case None => matrix
-      case Some(g) =>
-        val p = col("cohort")
-        val start = g match {
-          case "month" => make_date(floor(p / 12).cast("int"),
-            pmod(p, lit(12)).cast("int") + 1, lit(1))
-          case "quarter" => make_date(floor(p / 4).cast("int"),
-            pmod(p, lit(4)).cast("int") * 3 + 1, lit(1))
-          case _ => make_date(p.cast("int"), lit(1), lit(1))
-        }
-        matrix.withColumn("cohort_start", date_format(start, "yyyy-MM-dd"))
-    }
+      .orderBy((segCols ++ Seq(col("cohort"), col("offset"))): _*),
+      calendar, "cohort", "cohort_start")
   }
 
   /** REVENUE GROWTH ACCOUNTING — the MRR-bridge waterfall, the chart
@@ -2782,36 +2449,15 @@ final class CubeService(spark: SparkSession, storageDir: String,
     calendar.foreach(g =>
       require(Seq("month", "quarter", "year").contains(g),
         s"calendar granularity must be month/quarter/year, got $g"))
-    val dayKey = datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-      .cast("long")
-    val dayDate = col(dayDim).cast("date")
-    val periodKey = (calendar match {
-      case None => floor(dayKey.cast("double") / periodDays).cast("long")
-      case Some("month") =>
-        (year(dayDate) * 12 + month(dayDate) - 1).cast("long")
-      case Some("quarter") =>
-        (year(dayDate) * 4 + quarter(dayDate) - 1).cast("long")
-      case _ => year(dayDate).cast("long")
-    }).as("period")
+    val periodKey = ServeKernels.periodKey(col(dayDim), periodDays,
+      calendar.map(ServeKernels.verbCalendar)).as("period")
     val B = graft.functions.Bitmap
     val W = graft.functions.WeightMap
     // codec-empty blobs: a zero-entry weight map and a zero-block
     // bitmap share the byte form (n = 0)
     val emptyBlob = lit(Array[Byte](0, 0, 0, 0))
-    def withPeriodStart(matrix: DataFrame): DataFrame = calendar match {
-      case None => matrix
-      case Some(g) =>
-        val p = col("period")
-        val start = g match {
-          case "month" => make_date(floor(p / 12).cast("int"),
-            pmod(p, lit(12)).cast("int") + 1, lit(1))
-          case "quarter" => make_date(floor(p / 4).cast("int"),
-            pmod(p, lit(4)).cast("int") * 3 + 1, lit(1))
-          case _ => make_date(p.cast("int"), lit(1), lit(1))
-        }
-        matrix.withColumn("period_start",
-          date_format(start, "yyyy-MM-dd"))
-    }
+    def withPeriodStart(matrix: DataFrame): DataFrame =
+      ServeKernels.withStart(matrix, calendar, "period", "period_start")
     // the bridge cells as SCALED LONGS per row (converted to values
     // only after any cross-shard summing, so shard sums stay exact)
     def cells(df: DataFrame, segOut: Seq[Column]): DataFrame = df
@@ -2961,7 +2607,6 @@ final class CubeService(spark: SparkSession, storageDir: String,
       periodDays: Int,
       segmentBy: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     require(periodDays >= 1, s"periodDays must be >= 1, got $periodDays")
     require(k >= 1 && k <= 100,
       s"k=$k out of range (1..100 — the leaderboard fan-out bound)")
@@ -2982,47 +2627,14 @@ final class CubeService(spark: SparkSession, storageDir: String,
     }
     val W = graft.functions.WeightMap
     val segCols = segmentBy.map(col)
-    val periodKey = floor(
-      datediff(col(dayDim).cast("date"), lit("1970-01-01"))
-        .cast("long").cast("double") / periodDays).cast("long")
-      .as("period")
-    val sharded = cube.config.bitmapShardBits > 0
-    val shardCols = if (sharded) Seq(col(CubeManager.ShardCol)) else Nil
-    // per-(segment [, shard]) top-k candidates, exploded
-    val per = cube.live
-      .groupBy((segCols ++ Seq(periodKey) ++ shardCols): _*)
-      .agg(W.mergeAgg(col(weightedId)).as("__wm"))
-      .select((segCols ++ Seq(col("period"),
-        explode(W.topK(col("__wm"), k)).as("__e"))): _*)
-      .select((segCols ++ Seq(col("period"),
-        col("__e.id").as("id"), col("__e.w").as("__w"))): _*)
-    // a dict-encoded weighted measure's candidates carry DENSE
-    // DICTIONARY ids — translate back to the original keys through
-    // the maintained (append-only) dictionary BEFORE ranking, so ties
-    // break on the key the caller sees (the per-blob selection kept
-    // every boundary tie, so the correct member is always present).
-    // The join is broadcast-dict-sized over the candidate rows.
     val wm = cube.config.weighted.find(_.id == weightedId).get
-    val candidates =
-      cube.config.dictBitmaps.find(_.path == wm.idPath) match {
-        case Some(d) =>
-          val dict = cube.dicts(d.id)
-            .select(col("__id"), col("__key"))
-          per.join(broadcast(dict), per("id") === dict("__id"))
-            .drop("id", "__id")
-            .withColumnRenamed("__key", "id")
-        case None => per
-      }
-    // re-rank over ≤ (|shards|·k + ties) candidate rows per
-    // (segment, period): value desc, then the VISIBLE id asc — the
-    // ROW_NUMBER oracle's own tiebreak
-    val w = Window
-      .partitionBy((segCols :+ col("period")): _*)
-      .orderBy(col("__w").desc, col("id").asc)
-    candidates
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select((segCols ++ Seq(col("period"), col("rank"), col("id"),
+    val dict = cube.config.dictBitmaps.find(_.path == wm.idPath)
+      .map(d => cube.dicts(d.id))
+    ServeKernels.topSpenders(cube.live,
+        ServeKernels.periodKey(col(dayDim), periodDays, None), weightedId,
+        dict, k, segmentBy, cube.config.bitmapShardBits > 0)
+      .select((segCols ++ Seq(col("period"),
+        col("rank").cast("long").as("rank"), col("id"),
         W.toValue(col("__w")).as("value"))): _*)
       .orderBy((segCols ++ Seq(col("period"), col("rank"))): _*)
   }

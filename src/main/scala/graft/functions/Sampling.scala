@@ -447,21 +447,28 @@ object Sampling {
       }
       n
     }
-    val before = parquetFiles(s"$out/frag")
-    spark.read.parquet(s"$out/frag")
-      .repartition(col("lang"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").partitionBy("lang").parquet(s"$out/opt")
-    val after = parquetFiles(s"$out/opt")
-    require(after < before,
-      s"compaction must reduce file count: $before -> $after")
-    spark.read.parquet(s"$out/opt")
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        asLong(sum(col("n_chars"))).as("total_chars"),
-        asLong(min(col("doc_id"))).as("first_doc"),
-        asLong(max(col("doc_id"))).as("last_doc"))
-      .orderBy(col("lang"))
+    // every call rewrites the one shared <fixture>/opt directory: hold
+    // the fixture lock over the rewrite AND an eager read-back, so a
+    // concurrent call's overwrite-mode write can delete neither this
+    // write's `_temporary` files nor the files its inventory reads
+    val inventory = compactFixture.synchronized {
+      val before = parquetFiles(s"$out/frag")
+      spark.read.parquet(s"$out/frag")
+        .repartition(col("lang"))
+        .sortWithinPartitions(col("doc_id"))
+        .write.mode("overwrite").partitionBy("lang").parquet(s"$out/opt")
+      val after = parquetFiles(s"$out/opt")
+      require(after < before,
+        s"compaction must reduce file count: $before -> $after")
+      spark.read.parquet(s"$out/opt")
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"),
+          asLong(sum(col("n_chars"))).as("total_chars"),
+          asLong(min(col("doc_id"))).as("first_doc"),
+          asLong(max(col("doc_id"))).as("last_doc"))
+        .localCheckpoint()
+    }
+    inventory.orderBy(col("lang"))
   }
 
   lazy val defs: Map[String, Q] = Map(

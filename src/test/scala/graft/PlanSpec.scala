@@ -235,6 +235,16 @@ class PlanSpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(plan).size >= 2, s"q01:\n$plan")
   }
 
+  test("whole-stage codegen: q01's filter and partial aggregate are generated code") {
+    val df = SparkEntry.queries("q01_pricing_summary")(spark, sfDir)
+    df.collect() // AQE inserts the codegen stages as it runs
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("isFinalPlan=true"), s"q01:\n$plan")
+    assert("""\*\(\d+\) Filter""".r.findFirstIn(plan).isDefined, s"q01:\n$plan")
+    assert("""\*\(\d+\) HashAggregate\(keys=\[[^\]]*\], functions=\[partial_"""
+      .r.findFirstIn(plan).isDefined, s"q01:\n$plan")
+  }
+
   test("AQE splits a planted whale key on the fact-to-fact join shape") {
     // the dedup family has its planted-whale cap test (DedupCapSpec);
     // this is the relational twin: the q04/q143 fact-to-fact equi-join

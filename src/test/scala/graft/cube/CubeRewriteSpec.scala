@@ -10,15 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The MV-routing rule: an aggregation over the source parquet is
   * silently served from the materialized cube when (and only when) the
   * cube covers it exactly. */
-class CubeRewriteSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+class CubeRewriteSpec extends AnyFunSuite with graft.LiveSession {
+  // the live session, with the rewrite rule installed (idempotent)
+  override def spark: SparkSession = {
+    val s = super.spark
     CubeCatalog.install(s)
     s
   }
@@ -28,7 +23,7 @@ class CubeRewriteSpec extends AnyFunSuite {
     Seq(Measure("v", "value")))
 
   private def setup(): (String, String) = {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(21)
     val rows = (0 until 500).map { _ =>
@@ -78,7 +73,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("routed cube scan is column-pruned to the referenced partials") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rows = (0 until 200).map(i =>
       (Seq("click", "view")(i % 2), (i % 97).toDouble))
@@ -109,7 +104,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("min/max route to the stored extremes; a delete-latched cube refuses") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(33)
     val rows = (0 until 400).map { _ =>
@@ -231,7 +226,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("nested dotted-path dimensions and measures route too") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val srcDir = Files.createTempDirectory("graft_rw_nested").toString
     Seq(("mobile", "ios", 1.5), ("mobile", "android", 2.5), ("web", "chrome", 4.0))
@@ -279,7 +274,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("unmaterialized cube (plan still aggregates the source) never routes") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val srcDir = Files.createTempDirectory("graft_rw_src2").toString
     Seq(("a", new Timestamp(1700000000000L), 1.0))
@@ -296,7 +291,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("approx_count_distinct routes to the cube's HLL partials only when opted in") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(29)
     val rows = (0 until 500).map { _ =>
@@ -383,7 +378,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("delete-processed cube refuses approx-distinct routing; exact routing still fires") {
-    import spark.implicits._
+    import testImplicits._
     val rnd = new scala.util.Random(33)
     val rows = (0 until 300).map { i =>
       (Seq("click", "view")(rnd.nextInt(2)),
@@ -526,7 +521,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("oversized cube refuses to route (cost-based) once past the floor") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     // a cube on a UNIQUE key has as many cells as the source has rows —
     // plus a _count column — so it can only be bigger than the source;
@@ -560,7 +555,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("publish refreshes registrations: routed queries survive updateAggregates") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val dir = Files.createTempDirectory("graft_rw_refresh").toString
     val srcDir = s"$dir/source"
@@ -615,7 +610,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("global aggregate over an EMPTY cube returns 0, not NULL") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val srcDir = Files.createTempDirectory("graft_rw_empty_src").toString
     Seq.empty[(String, Timestamp, Double)]
@@ -633,7 +628,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("cube whose aggregates scan the registered source path never routes") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     // a parquet dir that LOOKS like a cube (etype, v, _count columns) and
     // is registered as its own source: without the path check the rule
@@ -657,7 +652,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("zero/negative-count tombstones in saved state are not served") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val srcDir = Files.createTempDirectory("graft_rw_tomb_src").toString
     val t0 = new Timestamp(1700000000000L)
@@ -688,7 +683,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("aggregate over the registered equi-join routes to the join MV") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(77)
     val ords = (0 until 40).map(i =>
@@ -795,7 +790,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("join-MV sketch measures route approx-distinct, fold-maintained, opt-in") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(88)
     val ords = (0 until 40).map(i =>
@@ -871,7 +866,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("ROLLUP through the Expand routes to a JOIN MV; results identical") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(91)
     val ords = (0 until 30).map(i =>
@@ -909,7 +904,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("percentile_approx over a registered join routes to the MV's KLL partials") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(97)
     val ords = (0 until 30).map(i =>
@@ -953,7 +948,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("rollup over a dim SUBSET of a two-dim join MV routes") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(91)
     val ords = (0 until 30).map(i =>
@@ -1071,7 +1066,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("approx-distinct under ROLLUP routes to sketch partials per grouping set") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(31)
     val rows = (0 until 600).map { _ =>
@@ -1135,7 +1130,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("percentile_approx routes to KLL partials, plain and under ROLLUP") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(37)
     val rows = (0 until 800).map { _ =>
@@ -1207,7 +1202,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("time-hierarchy routing: coarser granularities serve from a finer time dim") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(67)
     // 400 rows across ~14 months so month/quarter/year all have
@@ -1293,7 +1288,7 @@ class CubeRewriteSpec extends AnyFunSuite {
     CubeCatalog.clear()
     val svcDir = Files.createTempDirectory("graft_rw_race").toString
     val svc = new CubeService(spark, svcDir)
-    import spark.implicits._
+    import testImplicits._
     val rnd = new scala.util.Random(83)
     val rows = (0 until 400).map { i =>
       (Seq("a", "b", "c")(rnd.nextInt(3)),
@@ -1350,7 +1345,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("rollup min/max over a delete-latched cube refuses; sum still routes") {
-    import spark.implicits._
+    import testImplicits._
     val (srcDir, _) = setup()
     // fold a delete so the insert-only extremes latch trips — rebuild a
     // cube WITH extremes first (setup()'s cfg has none), then latch it
@@ -1379,10 +1374,23 @@ class CubeRewriteSpec extends AnyFunSuite {
   // ------------------------------------------------- rolling routing
   /** Source + registered day-dimmed cube for the rolling-route tests:
     * several days of (etype, user, value) events, cube carrying bitmap
-    * (exact distinct), decimal-sum, extreme, HLL, and KLL partials. */
-  private def rollingSetup(approx: Boolean = false): String = {
-    import spark.implicits._
+    * (exact distinct), decimal-sum, extreme, HLL, and KLL partials;
+    * `shardBits > 0` builds the bitmap-sharded twin over the same
+    * rows. Source and cubes are written once per suite and
+    * re-registered per call; no test writes to them. */
+  private def rollingSetup(approx: Boolean = false,
+      shardBits: Int = 0): String = {
     CubeCatalog.clear()
+    val cubeDir = rollingCubes.getOrElseUpdate(shardBits,
+      rollingCube(shardBits))
+    CubeCatalog.register("rollrw",
+      CubeManager.load(spark, cubeDir, "rollrw"), rollingSrc,
+      approxDistinct = approx)
+    rollingSrc
+  }
+
+  private lazy val rollingSrc: String = {
+    import testImplicits._
     val rnd = new scala.util.Random(37)
     val rows = (0 until 1200).map { i =>
       (Seq("click", "view")(rnd.nextInt(2)),
@@ -1395,6 +1403,12 @@ class CubeRewriteSpec extends AnyFunSuite {
     val srcDir = Files.createTempDirectory("graft_rollrw_src").toString
     rows.toDF("etype", "ts", "user_id", "value", "uid_s")
       .write.mode("overwrite").parquet(srcDir)
+    srcDir
+  }
+
+  private val rollingCubes = scala.collection.mutable.Map.empty[Int, String]
+
+  private def rollingCube(shardBits: Int): String = {
     val cfg = CubeConfig("rollrw", "src",
       Seq(FieldDim("etype", "etype"), TimeDim("day", "ts", "day")),
       Seq(Measure("v", "value")),
@@ -1405,14 +1419,12 @@ class CubeRewriteSpec extends AnyFunSuite {
       extremes = Seq(Measure("vx", "value")),
       bitmaps = Seq(Measure("u", "user_id")),
       // per-id additive partials — the cohort-value route's measure
-      weighted = Seq(WeightedMeasure("wv", "user_id", "value")))
+      weighted = Seq(WeightedMeasure("wv", "user_id", "value")),
+      bitmapShardBits = shardBits)
     val cubeDir = Files.createTempDirectory("graft_rollrw_cube").toString
     CubeManager.save(
-      CubeManager.create(cfg, spark.read.parquet(srcDir)), cubeDir)
-    CubeCatalog.register("rollrw",
-      CubeManager.load(spark, cubeDir, "rollrw"), srcDir,
-      approxDistinct = approx)
-    srcDir
+      CubeManager.create(cfg, spark.read.parquet(rollingSrc)), cubeDir)
+    cubeDir
   }
 
   private def dayCol = (unix_timestamp(col("ts")).cast("double") / 86400)
@@ -1513,7 +1525,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("CMS heavy hitters through the time hierarchy: est bounds and lossless roll per level") {
-    import spark.implicits._
+    import testImplicits._
     val rnd = new scala.util.Random(97)
     // zipfish keys over ~400 days so every hierarchy level has >1 bucket
     val rows = (0 until 6000).map { _ =>
@@ -1525,13 +1537,17 @@ class CubeRewriteSpec extends AnyFunSuite {
     val dayCfg = CubeConfig("fq_day", "mem",
       Seq(TimeDim("day", "ts", "day")), Nil,
       freq = Seq(Measure("kf", "key")))
-    val dayCube = CubeManager.create(dayCfg, src)
+    // every level's three checks read the day cube and its roll-up:
+    // build each once, not once per check
+    val built = CubeManager.create(dayCfg, src)
+    val dayCube = built.copy(aggregates = built.aggregates.localCheckpoint())
     for (level <- Seq("week", "month", "quarter", "year")) {
       val served = CubeManager.query(dayCube, Nil,
           topkOf = Seq(("kf", 3)), timeRollup = Seq(("day", level)))
         .select(col(s"day_$level").as("b"), posexplode(col("topk_kf")))
         .select(col("b"), col("col.key").as("key"),
           col("col.n_est").as("n_est"))
+        .localCheckpoint()
       val exact = src
         .groupBy(date_trunc(level, col("ts")).as("b"), col("key"))
         .agg(count(lit(1)).as("n_exact"))
@@ -1567,7 +1583,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("timeRollup refuses non-nesting and non-time rollups") {
-    import spark.implicits._
+    import testImplicits._
     val src = Seq((new Timestamp(1700000000000L), "a", 1.0))
       .toDF("ts", "k", "v")
     val cube = CubeManager.create(
@@ -1987,7 +2003,15 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("raw cohort-value plans route to the weight-map serve") {
-    val srcDir = rollingSetup()
+    cohortValueRoutes(shardBits = 0)
+  }
+
+  test("raw cohort-value plans route to the weight-map serve, on a bitmap-sharded cube") {
+    cohortValueRoutes(shardBits = 3)
+  }
+
+  private def cohortValueRoutes(shardBits: Int): Unit = {
+    val srcDir = rollingSetup(shardBits = shardBits)
     def src = spark.read.parquet(srcDir)
     def pExpr = floor((unix_timestamp(col("ts")).cast("double") / 86400)
       .cast("long").cast("double") / 3).cast("long")
@@ -2023,7 +2047,7 @@ class CubeRewriteSpec extends AnyFunSuite {
     }
     // refusals: a double-summed weight (order-drift hazard) and a min
     // side with a DIFFERENT period width both stay raw
-    CubeCatalog.clear(); rollingSetup()
+    CubeCatalog.clear(); rollingSetup(shardBits = shardBits)
     val badW = src.groupBy(col("user_id"), pExpr.as("p"))
       .agg(sum(col("value")).as("w")) // double sum — no money discipline
       .join(f, "user_id")
@@ -2055,7 +2079,15 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("raw cohort-matrix plans route to the bitmap serve") {
-    val srcDir = rollingSetup()
+    cohortMatrixRoutes(shardBits = 0)
+  }
+
+  test("raw cohort-matrix plans route to the bitmap serve, on a bitmap-sharded cube") {
+    cohortMatrixRoutes(shardBits = 3)
+  }
+
+  private def cohortMatrixRoutes(shardBits: Int): Unit = {
+    val srcDir = rollingSetup(shardBits = shardBits)
     def src = spark.read.parquet(srcDir)
     def pExpr = floor((unix_timestamp(col("ts")).cast("double") / 86400)
       .cast("long").cast("double") / 3).cast("long")
@@ -2104,7 +2136,7 @@ class CubeRewriteSpec extends AnyFunSuite {
     // multiplicities the bitmap cells cannot see; a min side with a
     // DIFFERENT period width asks a different cohort question; an
     // extra pair column is a segment this serve does not partition
-    CubeCatalog.clear(); rollingSetup()
+    CubeCatalog.clear(); rollingSetup(shardBits = shardBits)
     val badPlain = aRaw.join(f, "user_id")
       .groupBy(col("cohort"), (col("p") - col("cohort")).as("age"))
       .agg(count(lit(1)).as("active"))
@@ -2214,7 +2246,15 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("raw top-spender leaderboards route to the weight-map top-k serve") {
-    val srcDir = rollingSetup()
+    topSpenderRoutes(shardBits = 0)
+  }
+
+  test("raw top-spender leaderboards route to the weight-map top-k serve, on a bitmap-sharded cube") {
+    topSpenderRoutes(shardBits = 3)
+  }
+
+  private def topSpenderRoutes(shardBits: Int): Unit = {
+    val srcDir = rollingSetup(shardBits = shardBits)
     def src = spark.read.parquet(srcDir)
     def pExpr = floor((unix_timestamp(col("ts")).cast("double") / 86400)
       .cast("long").cast("double") / 3).cast("long")
@@ -2295,7 +2335,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("all-NULL-weight rows follow the declared 0.00 convention") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     // one id whose weights in the period are ALL NULL, one negative,
     // one positive — the exact boundary the analyzeTopSpenders
@@ -2444,7 +2484,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("calendar-ordinal cohort plans route; Dec->Jan adjacency exact") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(83)
     // 2023-09 .. 2024-05: the fixture CROSSES a year boundary, so the
@@ -2578,7 +2618,15 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("raw funnel min-join chains route to the cascade; curve identical") {
-    val srcDir = rollingSetup()
+    funnelRoutes(shardBits = 0)
+  }
+
+  test("raw funnel min-join chains route to the cascade; curve identical, on a bitmap-sharded cube") {
+    funnelRoutes(shardBits = 3)
+  }
+
+  private def funnelRoutes(shardBits: Int): Unit = {
+    val srcDir = rollingSetup(shardBits = shardBits)
     def src = spark.read.parquet(srcDir)
     def pairs(step: String) = src.filter(col("etype") === step)
       .select(col("user_id"),
@@ -2676,7 +2724,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("raw WINDOWED funnel chains route to the bounded cascade") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(83)
     val rows = (0 until 1500).map { i =>
@@ -2782,7 +2830,15 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("raw time-to-convert lag histograms route to the (F, N) pairing") {
-    import spark.implicits._
+    timeToConvertRoutes(shardBits = 0)
+  }
+
+  test("raw time-to-convert lag histograms route to the (F, N) pairing, on a bitmap-sharded cube") {
+    timeToConvertRoutes(shardBits = 3)
+  }
+
+  private def timeToConvertRoutes(shardBits: Int): Unit = {
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(89)
     val rows = (0 until 1500).map { i =>
@@ -2798,7 +2854,8 @@ class CubeRewriteSpec extends AnyFunSuite {
     CubeManager.save(CubeManager.create(
       CubeConfig("ttc", "src",
         Seq(FieldDim("etype", "etype"), TimeDim("day", "ts", "day")),
-        measures = Nil, bitmaps = Seq(Measure("u", "user_id"))),
+        measures = Nil, bitmaps = Seq(Measure("u", "user_id")),
+        bitmapShardBits = shardBits),
       spark.read.parquet(srcDir)), cubeDir)
     CubeCatalog.register("ttc",
       CubeManager.load(spark, cubeDir, "ttc"), srcDir)
@@ -2904,7 +2961,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("STRING ids route EXACTLY through dictionary bitmaps, no opt-in") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(59)
     val rows = (0 until 900).map { i =>
@@ -3075,7 +3132,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("JOIN-sourced cohort plans (retention/churn/cumulative) route to the join MV") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(73)
     val ords = (0 until 40).map(i =>
@@ -3268,7 +3325,7 @@ class CubeRewriteSpec extends AnyFunSuite {
   }
 
   test("CHAIN-sourced cohort plans (retention/churn/rolling) route to the chain MV") {
-    import spark.implicits._
+    import testImplicits._
     CubeCatalog.clear()
     val rnd = new scala.util.Random(91)
     val ords = (0 until 60).map(i => (i.toLong, rnd.nextInt(12).toLong,

@@ -94,6 +94,21 @@ class SamplingSpec extends AnyFunSuite with graft.LiveSession {
       val frag = spark.read.parquet(s"${dirs.head}/frag")
       assert(frag.count() == docs.count())
       assert(frag.select("doc_id").distinct().count() == docs.count())
+      // two concurrent OPTIMIZE rewrites of the shared <fixture>/opt
+      // directory: each must finish and inventory every document
+      val again = new java.util.concurrent.CountDownLatch(1)
+      val optimizes = (1 to 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Seq[org.apache.spark.sql.Row]] {
+          def call(): Seq[org.apache.spark.sql.Row] = {
+            again.await()
+            Sampling.q145CompactOptimize(spark, sf).collect().toSeq
+          }
+        }))
+      again.countDown()
+      val inventories =
+        optimizes.map(_.get(600, java.util.concurrent.TimeUnit.SECONDS))
+      assert(inventories.distinct.size == 1, inventories)
+      assert(inventories.head.map(_.getLong(1)).sum == docs.count())
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dirs.head))
     } finally {
       pool.shutdown()

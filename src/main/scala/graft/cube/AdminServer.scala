@@ -7,7 +7,10 @@ import scala.util.control.NonFatal
 
 import graft.Tables
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** Remote ADMIN transport — the reference's R7 message-broker admin API
@@ -168,12 +171,31 @@ final class AdminServer(service: CubeService, spark: SparkSession,
       case Nil => df
       case ds => df.orderBy(ds.map(col): _*)
     }
-    val rows = sorted.limit(cap + 1).toJSON.collect()
+    val limited = sorted.limit(cap + 1)
+    val run = if (cubeSized(limited)) Bridge.interpreted(limited) else limited
+    val rows = run.toJSON.collect()
     if (rows.length > cap)
       err(s"result exceeds maxRows=$cap; raise 'maxRows' in the request " +
         "or narrow the serve (fewer dims / a filter)")
     else ok(rows.mkString("[", ",", "]"))
   }
+
+  /** Execution policy of the wire serves: a plan whose leaves are all
+    * files totalling at most [[InterpretedMaxBytes]] runs interpreted
+    * ([[Bridge.interpreted]]). Compiling its generated classes costs
+    * 0.07–0.15 s per serve, more than interpreting a cube's few kilobytes,
+    * and each serve's classes evicted the folds' from Spark's 100-entry
+    * codegen cache. Any other leaf keeps the compiled plan. */
+  private def cubeSized(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case LogicalRelationWithTable(fs: HadoopFsRelation, _) =>
+        fs.location.sizeInBytes
+      case _: LeafNode => InterpretedMaxBytes + 1
+    }.sum <= InterpretedMaxBytes
+
+  /** Interpreted scans ran about 65 ms per MB of parquet, so up to 1 MB an
+    * interpreted serve costs less than the compile it skips. */
+  private val InterpretedMaxBytes = 1L << 20
 
   private def need(v: Option[String], key: String): String =
     v.getOrElse(throw new IllegalArgumentException(s"missing field '$key'"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.internal.SQLConf
 
 /** Minimal bridge into Spark's `private[sql]` Column↔Expression seam.
   *
@@ -26,6 +27,45 @@ object Bridge {
   /** Wrap a custom LogicalPlan back into a DataFrame. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** `df` rebound to a sibling of its session that runs without generated
+    * code: no whole-stage fusion, and the projection and predicate
+    * factories interpreted (either setting alone still compiles). */
+  def interpreted(df: DataFrame): DataFrame =
+    ofRows(interpretedSibling(df.sparkSession.asInstanceOf[classic.SparkSession]),
+      df.queryExecution.analyzed)
+
+  private val Interpreted = Map(
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> "NO_CODEGEN")
+  /** The last session served and its sibling. */
+  private var sibling: (classic.SparkSession, classic.SparkSession) = _
+
+  /** One clone per session (`cloneSession` is private[sql], hence its home
+    * here), brought up to the session's runtime conf, execution listeners
+    * and experimental rules on every call. Not a clone per call, nor per
+    * change: every clone is a new artifact session, and executors load, so
+    * compile, generated classes once per artifact session. */
+  private def interpretedSibling(of: classic.SparkSession): classic.SparkSession =
+    synchronized {
+      val s = sibling match {
+        case (o, s) if o eq of => s
+        case _ => sibling = (of, of.cloneSession()); sibling._2
+      }
+      val conf = s.sessionState.conf
+      val have = conf.getAllConfs
+      val want = of.sessionState.conf.getAllConfs ++ Interpreted
+      (have.keySet -- want.keySet).foreach(conf.unsetConf)
+      want.foreach { case (k, v) => if (!have.get(k).contains(v)) conf.setConfString(k, v) }
+      val listeners = of.listenerManager.listListeners().toSeq
+      if (s.listenerManager.listListeners().toSeq != listeners) {
+        s.listenerManager.clear()
+        listeners.foreach(s.listenerManager.register)
+      }
+      s.experimental.extraStrategies = of.experimental.extraStrategies
+      s.experimental.extraOptimizations = of.experimental.extraOptimizations
+      s
+    }
 
   /** Planner strategy for graft.plans.AsOfJoinPlan. Lives here because
     * `SparkStrategy`/`planLater` are private[sql] in Spark 4. */

@@ -45,6 +45,60 @@ class AdminServerSpec extends AnyFunSuite with graft.LiveSession {
   private def escaped(s: String) =
     s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", "\\n")
 
+  /** A change stream's shape, written once per suite run: a base slice
+    * over six days, then one batch of inserts on the newest day plus
+    * deletes and updates of rows from the day before. `delta` is the
+    * signed batch, `source` the rows live after it. */
+  private object stream {
+    val day = 86400000L
+    val t0 = 1700006400000L
+    val base = (0 until 600).map(i => (i.toLong,
+      new java.sql.Timestamp(t0 + (i / 100) * day + (i % 100) * 60000L),
+      (i * 7 % 50).toLong, Seq("click", "view", "buy")(i % 3),
+      (i % 17).toDouble))
+    val ins = (600 until 640).map(i => (i.toLong,
+      new java.sql.Timestamp(t0 + 5 * day + (i % 100) * 60000L + 1000L),
+      (i * 7 % 50).toLong, Seq("click", "view", "buy")(i % 3), 2.0))
+    val gone = base.filter(r => r._1 >= 400 && r._1 < 500 && r._1 % 9 == 0)
+    val moved = base.filter(r => r._1 >= 400 && r._1 < 500 && r._1 % 9 == 4)
+    val updated = moved.map(r => r.copy(_5 = r._5 + 1.0))
+    val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
+    private def write(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)],
+        name: String): String = {
+      import testImplicits._
+      val d = tmp("graft_admin_stream") + s"/$name"
+      rows.toDF(cols: _*).coalesce(1).write.parquet(d); d
+    }
+    val basePath = write(base, "base")
+    val delta = tmp("graft_admin_stream") + "/delta"
+    locally { import testImplicits._
+      (ins.map((_, 1)) ++ gone.map((_, -1)) ++ moved.map((_, -1)) ++
+        updated.map((_, 1)))
+        .map { case ((a, b, c, d, e), sg) => (a, b, c, d, e, sg) }
+        .toDF(cols :+ "_sign": _*).coalesce(1).write.parquet(delta) }
+    val source = write(
+      base.filterNot(r => gone.contains(r) || moved.contains(r)) ++
+        updated ++ ins, "source")
+  }
+
+  /** perfbench's two cube_maintain cubes over the stream's base: `mA`
+    * (sum by event type and day) and `mB` (exact distinct users by day). */
+  private def createMaintainCubes(cli: Client): Unit = Seq(
+    "mA" -> """{"name":"mA","source":"events","dims":[{"kind":"field","id":"etype","path":"event_type"},{"kind":"time","id":"d","path":"ts","granularity":"day"}],"measures":[{"id":"v","path":"value"}]}""",
+    "mB" -> """{"name":"mB","source":"events","dims":[{"kind":"time","id":"d","path":"ts","granularity":"day"}],"bitmaps":[{"id":"u","path":"user_id"}],"measures":[{"id":"v","path":"value"}]}"""
+  ).foreach { case (n, c) =>
+    assert(cli.rpc(s"""{"verb":"createCube","config":"${escaped(c)
+      }","sourceParquet":"${escaped(stream.basePath)}"}""")
+      == s"""{"ok":true,"result":"$n"}""")
+  }
+
+  /** The stream's batch folded into `name` over the wire; the bitmap cube
+    * also gets the post-batch source (its delete-capable recompute). */
+  private def foldRequest(name: String, withSource: Boolean): String =
+    s"""{"verb":"updateAggregates","name":"$name",""" +
+      s""""deltaParquet":"${escaped(stream.delta)}"""" +
+      (if (withSource) s""","sourceParquet":"${escaped(stream.source)}"}""" else "}")
+
   test("wire verbs == in-process verbs across the full lifecycle") {
     val svc = new CubeService(spark, tmp("graft_admin_store"))
     val server = new AdminServer(svc, spark)
@@ -161,6 +215,7 @@ class AdminServerSpec extends AnyFunSuite with graft.LiveSession {
 
   test("a wire fold launches no schema-inference job") {
     import testImplicits._
+    import stream._
     val svc = new CubeService(spark, tmp("graft_admin_jobs"))
     val server = new AdminServer(svc, spark)
     val cli = new Client(server.start())
@@ -173,44 +228,7 @@ class AdminServerSpec extends AnyFunSuite with graft.LiveSession {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // a change stream's shape: a base slice over six days, then one
-      // batch of inserts on the newest day plus deletes and updates of
-      // rows from the day before
-      val day = 86400000L
-      val t0 = 1700006400000L
-      val base = (0 until 600).map(i => (i.toLong,
-        new java.sql.Timestamp(t0 + (i / 100) * day + (i % 100) * 60000L),
-        (i * 7 % 50).toLong, Seq("click", "view", "buy")(i % 3),
-        (i % 17).toDouble))
-      val ins = (600 until 640).map(i => (i.toLong,
-        new java.sql.Timestamp(t0 + 5 * day + (i % 100) * 60000L + 1000L),
-        (i * 7 % 50).toLong, Seq("click", "view", "buy")(i % 3), 2.0))
-      val gone = base.filter(r => r._1 >= 400 && r._1 < 500 && r._1 % 9 == 0)
-      val moved = base.filter(r => r._1 >= 400 && r._1 < 500 && r._1 % 9 == 4)
-      val updated = moved.map(r => r.copy(_5 = r._5 + 1.0))
-      val cols = Seq("event_id", "ts", "user_id", "event_type", "value")
-      def write(rows: Seq[(Long, java.sql.Timestamp, Long, String, Double)],
-          name: String): String = {
-        val d = tmp("graft_admin_jobs_in") + s"/$name"
-        rows.toDF(cols: _*).coalesce(1).write.parquet(d); d
-      }
-      val basePath = write(base, "base")
-      val delta = tmp("graft_admin_jobs_in") + "/delta"
-      (ins.map((_, 1)) ++ gone.map((_, -1)) ++ moved.map((_, -1)) ++
-        updated.map((_, 1)))
-        .map { case ((a, b, c, d, e), sg) => (a, b, c, d, e, sg) }
-        .toDF(cols :+ "_sign": _*).coalesce(1).write.parquet(delta)
-      val source = write(
-        base.filterNot(r => gone.contains(r) || moved.contains(r)) ++
-          updated ++ ins, "source")
-      val configs = Seq(
-        "mA" -> """{"name":"mA","source":"events","dims":[{"kind":"field","id":"etype","path":"event_type"},{"kind":"time","id":"d","path":"ts","granularity":"day"}],"measures":[{"id":"v","path":"value"}]}""",
-        "mB" -> """{"name":"mB","source":"events","dims":[{"kind":"time","id":"d","path":"ts","granularity":"day"}],"bitmaps":[{"id":"u","path":"user_id"}],"measures":[{"id":"v","path":"value"}]}""")
-      configs.foreach { case (n, c) =>
-        assert(cli.rpc(s"""{"verb":"createCube","config":"${escaped(c)
-          }","sourceParquet":"${escaped(basePath)}"}""")
-          == s"""{"ok":true,"result":"$n"}""")
-      }
+      createMaintainCubes(cli)
       def jobsOf(request: String): Seq[Seq[String]] = {
         TestBus.drain(spark.sparkContext)
         jobs.clear()
@@ -218,12 +236,8 @@ class AdminServerSpec extends AnyFunSuite with graft.LiveSession {
         TestBus.drain(spark.sparkContext)
         jobs.asScala.toSeq
       }
-      def foldJobs(name: String, src: String): Seq[Seq[String]] =
-        jobsOf(s"""{"verb":"updateAggregates","name":"$name",""" +
-          s""""deltaParquet":"${escaped(delta)}"$src}""")
-      val plain = foldJobs("mA", "")
-      val bitmap = foldJobs("mB",
-        s""","sourceParquet":"${escaped(source)}"""")
+      val plain = jobsOf(foldRequest("mA", withSource = false))
+      val bitmap = jobsOf(foldRequest("mB", withSource = true))
       // a schema-inference job is one task reading one footer; its
       // first stage is named after the `parquet` read that launched it
       Seq(plain, bitmap).foreach { js =>
@@ -264,6 +278,106 @@ class AdminServerSpec extends AnyFunSuite with graft.LiveSession {
       assert(joined.size == 9, joined.mkString("; "))
     } finally {
       spark.sparkContext.removeSparkListener(listener)
+      cli.close(); server.stop()
+    }
+  }
+
+  /** perfbench's three cube_maintain serves. */
+  private val maintainServes = Seq(
+    """{"verb":"getAggregates","name":"mA","dims":["etype"],"sumOf":["v"]}""",
+    """{"verb":"getRolling","name":"mB","dayDim":"d","windowDays":7,"exactDistinctOf":["u"],"sumOf":["v"]}""",
+    """{"verb":"getRetention","name":"mB","dayDim":"d","bitmapId":"u","periodDays":7}""")
+
+  test("cube-sized wire serves compile no code once warm, across a fold") {
+    val svc = new CubeService(spark, tmp("graft_admin_interp"))
+    val server = new AdminServer(svc, spark)
+    val cli = new Client(server.start())
+    try {
+      createMaintainCubes(cli)
+      def serveAll(): Seq[String] = maintainServes.map { r =>
+        val resp = cli.rpc(r)
+        assert(resp.startsWith("""{"ok":true"""), resp)
+        resp
+      }
+      val warm = serveAll()
+      Seq(foldRequest("mA", withSource = false),
+          foldRequest("mB", withSource = true)).foreach { f =>
+        assert(cli.rpc(f) == """{"ok":true,"result":"updated"}""")
+      }
+      // a compile is a codegen-cache miss: the serves run interpreted, and
+      // the few classes Spark generates even then (orderings, row joiners,
+      // the row deserializer of the wire's JSON rendering) stay cached,
+      // because the folds' classes no longer have to make room for more
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME
+      val before = compiles.getCount
+      val served = serveAll()
+      assert(compiles.getCount == before,
+        s"${compiles.getCount - before} classes compiled by warm serves")
+      assert(served.head != warm.head, "the second round read the folded cube")
+    } finally { cli.close(); server.stop() }
+  }
+
+  test("wire serves follow the caller session's conf and listeners; inputs over 1 MB stay compiled") {
+    val s = spark // one handle: each `spark` call re-applies the suite's UTC
+    val svc = new CubeService(s, tmp("graft_admin_follow"))
+    val server = new AdminServer(svc, s)
+    val cli = new Client(server.start())
+    // registered after the server started
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        { seen.add(qe.executedPlan.toString); () }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    def plansOf(request: String): (String, Seq[String]) = {
+      TestBus.drain(s.sparkContext)
+      seen.clear()
+      val resp = cli.rpc(request)
+      TestBus.drain(s.sparkContext)
+      (resp, seen.asScala.toSeq)
+    }
+    // a whole-stage codegen subtree prints as `*(<stage id>) <operator>`
+    def compiled(plan: String) = """\*\(\d+\) """.r.findFirstIn(plan).isDefined
+    try {
+      createMaintainCubes(cli)
+      // the session's zone, set after the server started, renders the
+      // day dim on the wire as it does in-process
+      s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+      val (wire, plans) = plansOf(
+        """{"verb":"getAggregates","name":"mA","dims":["d"],"sumOf":["v"]}""")
+      val direct = svc.getAggregates("mA", dims = Seq("d"), sumOf = Seq("v"))
+        .orderBy(col("d")).toJSON.collect().mkString("[", ",", "]")
+      assert(wire == s"""{"ok":true,"result":$direct}""",
+        s"wire getAggregates diverges: $wire vs $direct")
+      assert(wire.contains("-08:00"), wire)
+      assert(plans.size == 1, plans.mkString("\n"))
+      assert(!compiled(plans.head), plans.head)
+
+      // a cube whose files pass the 1 MB cap: the serve keeps the caller's
+      // compiled execution (the maxRows refusal still runs the plan)
+      val bigSrc = tmp("graft_admin_big") + "/src"
+      s.range(0, 150000).selectExpr("id AS k", "rand(7) * 1000 AS value")
+        .write.parquet(bigSrc)
+      assert(cli.rpc(s"""{"verb":"createCube","config":"${escaped(
+        """{"name":"big","source":"events","dims":[{"kind":"field","id":"k","path":"k"}],"measures":[{"id":"v","path":"value"}]}"""
+        )}","sourceParquet":"${escaped(bigSrc)}"}""") == """{"ok":true,"result":"big"}""")
+      val bytes = svc.getAggregates("big", dims = Seq("k"), sumOf = Seq("v"))
+        .queryExecution.analyzed.collectLeaves().collect {
+          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+            l.relation.sizeInBytes
+        }.sum
+      assert(bytes > (1L << 20), s"the big cube holds only $bytes bytes")
+      val (refused, bigPlans) = plansOf(
+        """{"verb":"getAggregates","name":"big","dims":["k"],"sumOf":["v"],"maxRows":1}""")
+      assert(refused.contains("exceeds maxRows=1"), refused)
+      assert(bigPlans.size == 1 && compiled(bigPlans.head), bigPlans.mkString("\n"))
+    } finally {
+      s.conf.set("spark.sql.session.timeZone", "UTC")
+      s.listenerManager.unregister(listener)
       cli.close(); server.stop()
     }
   }
